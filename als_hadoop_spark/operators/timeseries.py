@@ -1081,9 +1081,11 @@ def q_acid_stream_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             while rt.last_txn("stream_ivm") < src_version:
                 if q.exception() is not None:
                     raise q.exception()
-                assert _time.monotonic() - t0 < timeout, (
-                    "acid_cdf stream fold timed out"
-                )
+                if _time.monotonic() - t0 >= timeout:
+                    raise TimeoutError(
+                        "acid_cdf stream fold timed out waiting for "
+                        f"source version {src_version}; status: {q.status}"
+                    )
                 _time.sleep(0.05)
 
         wait_folded(src.latest_version())  # bootstrap: replay of v0
@@ -1234,7 +1236,11 @@ def q_acid_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the merge-on-read contract, pinned in the benched path: both
     # commits masked rows without rewriting a single seeded file
-    assert all(f in sorted(tbl._replay()) for f in files_seeded)
+    live = set(tbl._replay())
+    if not all(f in live for f in files_seeded):
+        raise RuntimeError(
+            f"{path}: a merge-on-read DELETE/UPDATE rewrote a seeded file"
+        )
     acid_sql(spark, f"OPTIMIZE acid.`{path}`")
     return acid_sql(
         spark,

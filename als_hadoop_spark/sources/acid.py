@@ -87,6 +87,11 @@ implemented from the published protocol descriptions, no library):
 Scale posture: the log holds file NAMES (KBs per commit), never data;
 snapshot assembly is a checkpointed driver-side replay of small JSONs;
 all data movement is executor-side parquet IO.
+
+The log protocol itself (layout, entry reads, checkpoint-aware replay,
+blooms, the atomic publish) is defined once in
+:mod:`~als_hadoop_spark.sources.acid_log`, shared with the
+``format("acid")`` and ``acid_cdf`` sources.
 """
 
 from __future__ import annotations
@@ -100,11 +105,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_LOG_DIR = "_acid_log"
+from . import acid_log
+
 _STAGE_DIR = "_acid_stage"
 _CDC_DIR = "_acid_cdc"
 _DV_DIR = "_acid_dv"
-_LAST_CHECKPOINT = "_last_checkpoint"
 
 #: table property that flips MERGE/DELETE/UPDATE's ``mode="auto"`` to
 #: merge-on-read (the Delta ``enableDeletionVectors`` recipe): a k-row
@@ -168,143 +173,6 @@ def _footer_stats(path: str) -> dict:
             mins[name] = mn if name not in mins else min(mins[name], mn)
             maxs[name] = mx if name not in maxs else max(maxs[name], mx)
     return {k: [mins[k], maxs[k]] for k in mins}
-
-
-#: Bloom parameters (r10, VERDICT r9 #6): ~10 bits/value at k=7 gives
-#: ~1% fpp; the per-file bitset is capped at 64 Kbit (8 KB raw, ~11 KB
-#: base64 in the commit JSON) — past ~6.5 K distinct values the fpp
-#: degrades gracefully instead of the log entry growing unboundedly.
-_BLOOM_K = 7
-_BLOOM_BITS_PER_VALUE = 10
-_BLOOM_MAX_BITS = 1 << 16
-
-
-def _bloom_tag(value) -> str | None:
-    """Type tag stored with (and checked against) the bloom — a filter
-    literal of a DIFFERENT type category must not be tested (an int 5
-    and a float 5.0 hash differently; a mismatched test would be a
-    false NEGATIVE, i.e. wrong pruning). bool first: it subclasses
-    int."""
-    if isinstance(value, bool):
-        return "b"
-    if isinstance(value, int):
-        return "i"
-    if isinstance(value, float):
-        return "f"
-    if isinstance(value, str):
-        return "s"
-    return None
-
-
-def _bloom_hashes(value) -> tuple[int, int] | None:
-    """(h1, h2) 64-bit double-hashing pair (Kirsch–Mitzenmacher) from
-    a canonical byte encoding — the SAME function runs at write
-    (harvest) and plan (consult) time, so it must stay pure stdlib."""
-    import hashlib
-    import struct
-
-    if isinstance(value, bool):
-        data = b"\x01" if value else b"\x00"
-    elif isinstance(value, int):
-        try:
-            data = value.to_bytes(8, "little", signed=True)
-        except OverflowError:
-            return None
-    elif isinstance(value, float):
-        data = struct.pack("<d", value)
-    elif isinstance(value, str):
-        data = value.encode("utf-8")
-    else:
-        return None
-    d = hashlib.blake2b(data, digest_size=16).digest()
-    return (
-        int.from_bytes(d[:8], "little"),
-        int.from_bytes(d[8:], "little"),
-    )
-
-
-def _bloom_build(values) -> dict | None:
-    """Serialized bloom over the distinct non-NULL ``values`` of one
-    file's column: {"m": bits, "k": hashes, "t": type tag, "b64":
-    bitset}. None when the column is all-NULL, mixed-type, or
-    unhashable — absence means "no verdict", never "absent"."""
-    import base64
-
-    vals = [v for v in values if v is not None]
-    if not vals:
-        return None
-    tags = {_bloom_tag(v) for v in vals}
-    if len(tags) != 1 or None in tags:
-        return None
-    m = max(64, min(_BLOOM_MAX_BITS, _BLOOM_BITS_PER_VALUE * len(vals)))
-    m = (m + 7) // 8 * 8
-    arr = bytearray(m // 8)
-    for v in vals:
-        hs = _bloom_hashes(v)
-        if hs is None:
-            return None
-        h1, h2 = hs
-        for i in range(_BLOOM_K):
-            b = (h1 + i * h2) % m
-            arr[b >> 3] |= 1 << (b & 7)
-    return {
-        "m": m,
-        "k": _BLOOM_K,
-        "t": tags.pop(),
-        "b64": base64.b64encode(bytes(arr)).decode("ascii"),
-    }
-
-
-def bloom_maybe_contains(bloom: dict, value) -> bool:
-    """Membership test against a serialized bloom. Conservative: any
-    type mismatch, NULL, or malformed bloom answers True (keep the
-    file). False is definitive — the value is NOT in the file."""
-    import base64
-
-    if value is None or _bloom_tag(value) != bloom.get("t"):
-        return True
-    hs = _bloom_hashes(value)
-    if hs is None:
-        return True
-    try:
-        arr = base64.b64decode(bloom["b64"])
-        m = int(bloom["m"])
-        k = int(bloom.get("k", _BLOOM_K))
-    except (KeyError, ValueError, TypeError):
-        return True
-    if m <= 0 or len(arr) * 8 < m:
-        return True
-    h1, h2 = hs
-    for i in range(k):
-        b = (h1 + i * h2) % m
-        if not arr[b >> 3] & (1 << (b & 7)):
-            return False
-    return True
-
-
-def _file_blooms(path: str, cols: tuple[str, ...]) -> dict:
-    """Per-column serialized blooms for a just-staged parquet file.
-    Unlike the footer stats this IS a data re-read of the declared
-    columns — the (measured, documented) write amplification the
-    opt-in costs; absent/unbuildable columns are simply missing from
-    the result (consulted conservatively)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    try:
-        present = pq.read_schema(path).names
-        want = [c for c in cols if c in present]
-        if not want:
-            return {}
-        tbl = pq.read_table(path, columns=want)
-    except OSError:
-        return {}
-    out = {}
-    for c in want:
-        b = _bloom_build(pc.unique(tbl[c]).to_pylist())
-        if b is not None:
-            out[c] = b
-    return out
 
 
 #: parsed-schema memo for _merge_schema_jsons — schema JSON strings
@@ -371,16 +239,6 @@ def _merge_schema_jsons(jsons: list):
     return T.StructType([fields[n] for n in order])
 
 
-def _empty_state() -> dict:
-    return {
-        "live": {},
-        "schema_ops": [],
-        "constraints": {},
-        "txns": {},
-        "props": {},
-    }
-
-
 def _copy_state(state: dict) -> dict:
     """Shallow-per-container copy of a replayed state — callers get
     their own top-level dicts/lists (the cached original must never be
@@ -417,40 +275,6 @@ def _rel_file(table_root: str, uri: str) -> str:
         # is a relative key (post-r10 advice).
         return os.path.abspath(p)
     return rel
-
-
-def _part_segment(col: str, v) -> str:
-    """One ``col=value`` directory segment — twin of the format
-    writer's encoder (sources/acid_format.py ``_part_segment``; that
-    module is self-contained for cloudpickle, so the 6 lines live
-    twice): value percent-encoded, NULL as the Hive sentinel."""
-    from urllib.parse import quote
-
-    enc = (
-        "__HIVE_DEFAULT_PARTITION__" if v is None else quote(str(v), safe="")
-    )
-    return f"{col}={enc}"
-
-
-def _load_entry_retry(
-    path: str, attempts: int = 50, delay: float = 0.01
-) -> dict:
-    """``json.load`` with a bounded retry on a torn/empty commit entry.
-    Commit JSONs published by this module are complete the instant
-    they are visible (tmp + fsync + link in ``_try_commit``), so the
-    retry only ever fires against entries written by a pre-r9 writer
-    still in flight; ~0.5 s of patience outlasts any realistic
-    in-flight ``json.dump`` of a KB-sized entry, after which the
-    original error propagates (the entry is genuinely corrupt)."""
-    for i in range(attempts):
-        try:
-            with open(path) as f:
-                return json.load(f)
-        except json.JSONDecodeError:
-            if i == attempts - 1:
-                raise
-            time.sleep(delay)
-    raise AssertionError("unreachable")
 
 
 def _stat_sig(path: str) -> tuple[int, int] | None:
@@ -494,105 +318,24 @@ class AcidTable:
 
     # ---------------------------------------------------------- log
 
-    def _log_path(self, version: int) -> str:
-        return os.path.join(self.path, _LOG_DIR, f"{version:010d}.json")
-
-    def _checkpoint_path(self, version: int) -> str:
-        return os.path.join(
-            self.path, _LOG_DIR, f"{version:010d}.checkpoint.json"
-        )
-
-    def _versions(self) -> list[int]:
-        log_dir = os.path.join(self.path, _LOG_DIR)
-        if not os.path.isdir(log_dir):
-            return []
-        return sorted(
-            int(n[:-5])
-            for n in os.listdir(log_dir)
-            if n.endswith(".json")
-            and not n.endswith(".checkpoint.json")
-            and n[:-5].isdigit()
-        )
-
     def latest_version(self) -> int:
         """Highest committed version, or -1 for an empty table."""
-        vs = self._versions()
+        vs = acid_log.versions(self.path)
         return vs[-1] if vs else -1
 
-    def _apply_entry(self, state: dict, v: int, entry: dict) -> None:
-        for p in entry.get("remove", []):
-            state["live"].pop(p, None)
-        for a in entry.get("add", []):
-            act = {"stats": a.get("stats") or {}, "added": v}
-            if a.get("schema"):
-                # per-file logged schema (r12): readers skip the
-                # mergeSchema footer-inference job
-                act["schema"] = a["schema"]
-            if a.get("partition"):
-                # format("acid") partitionBy layout (r9): exact
-                # per-file partition values ride the log action
-                act["partition"] = a["partition"]
-            if a.get("bloom"):
-                # per-file bloom filters (r10): point-lookup pruning
-                # on high-cardinality NON-partition keys
-                act["bloom"] = a["bloom"]
-            if a.get("dv"):
-                # a RESTORE/CLONE re-add carries the deletion-vector
-                # refs of the state it reproduces (r11)
-                act["dv"] = list(a["dv"])
-            state["live"][a["path"]] = act
-        dv = entry.get("dv")
-        if dv:
-            # attach the commit's sidecar(s) to every file it masks
-            # rows of — a sidecar's rows for OTHER files are harmless
-            # in the anti-join (their basenames match nothing in a
-            # pruned scan), so per-file slicing is not needed
-            for f in dv.get("files", {}):
-                act = state["live"].get(f)
-                if act is not None:
-                    act["dv"] = sorted(
-                        set(act.get("dv", ())) | set(dv.get("sidecars", ()))
-                    )
-        c = entry.get("constraint")
-        if c:
-            state["constraints"][c["name"]] = c["expr"]
-        prop = entry.get("property")
-        if prop:  # pre-r11-review single-pair shape, kept replayable
-            state.setdefault("props", {})[prop["key"]] = prop["value"]
-        for prop in entry.get("properties", ()):
-            state.setdefault("props", {})[prop["key"]] = prop["value"]
-        op = entry.get("schema_op")
-        if op:
-            state["schema_ops"].append({"v": v, **op})
-        txn = entry.get("txn")
-        if txn and "app" in txn:
-            app = txn["app"]
-            state["txns"][app] = max(
-                int(state["txns"].get(app, -1)), int(txn.get("batch", -1))
-            )
-
     def _read_last_checkpoint(self) -> int | None:
-        try:
-            with open(os.path.join(self.path, _LOG_DIR, _LAST_CHECKPOINT)) as f:
-                return int(json.load(f)["version"])
-        except (OSError, ValueError, KeyError, json.JSONDecodeError):
-            return None
+        return acid_log.read_last_checkpoint(self.path)
 
     def _read_entry(self, v: int) -> dict:
-        """Parsed commit entry at ``v`` — cached (commit JSONs are
-        immutable; see _ENTRY_CACHE). Defense in depth (r9): a parse
-        failure retries briefly before raising — the link-publish in
-        ``_try_commit`` makes visible entries complete by construction,
-        but a writer built before the fix (or a non-POSIX filesystem
-        surfacing partial pages) could still expose a torn newest
-        entry; waiting out the writer's in-flight ``write()`` turns a
-        crash into a few-ms stall."""
-        p = self._log_path(v)
+        """Parsed commit entry at ``v`` (with the log's torn-read
+        retry) — cached: commit JSONs are immutable; see
+        _ENTRY_CACHE."""
+        p = acid_log.entry_path(self.path, v)
         sig = _stat_sig(p)
         key = (self.path, v, sig)
         hit = self._ENTRY_CACHE.get(key) if sig is not None else None
         if hit is None:
-            hit = _load_entry_retry(p)
+            hit = acid_log.read_entry(self.path, v)
             sig = _stat_sig(p)  # re-sig: the retry may have waited out a write
             if sig is not None:
                 self._cache_put(self._ENTRY_CACHE, (self.path, v, sig), hit)
@@ -601,14 +344,13 @@ class AcidTable:
     def _state(self, version: int | None = None) -> dict:
         """Fully-replayed table state at ``version`` (default latest):
         checkpoint (if one exists at-or-below the target) + log suffix.
-        Time travel below the newest checkpoint replays from scratch —
-        log JSONs are never deleted. Replayed states are cached per
-        (table, version): a MERGE/DELETE/snapshot chain in one session
-        re-parses nothing (the r5 bench regression was this constant)."""
+        Replayed states are cached per (table, version): a
+        MERGE/DELETE/snapshot chain in one session re-parses nothing
+        (the r5 bench regression was this constant)."""
         target = version if version is not None else self.latest_version()
         if target < 0:
-            return _empty_state()
-        sig = _stat_sig(self._log_path(target))
+            return acid_log.empty_state()
+        sig = _stat_sig(acid_log.entry_path(self.path, target))
         key = (self.path, target, sig)
         if sig is not None:
             hit = self._STATE_CACHE.get(key)
@@ -619,74 +361,14 @@ class AcidTable:
             self._cache_put(self._STATE_CACHE, key, state)
         return _copy_state(state)
 
-    def _compute_state(self, target: int, _retried: bool = False) -> dict:
-        state = _empty_state()
-        start = 0
-        cp = self._read_last_checkpoint()
-        if cp is not None and cp <= target:
-            try:
-                with open(self._checkpoint_path(cp)) as f:
-                    state = json.load(f)["state"]
-                start = cp + 1
-            except (OSError, KeyError, json.JSONDecodeError):
-                state, start = _empty_state(), 0  # corrupt/missing: replay
-        vs = self._versions()
-        if start == 0 and vs and vs[0] != 0:
-            # cleanup_log removed the prefix; replay-from-scratch
-            # would silently return partial state — refuse loudly
-            raise ValueError(
-                f"{self.path}: version {target} predates the retained "
-                f"log (earliest commit JSON is {vs[0]}; the prefix was "
-                "checkpoint-cleaned) — time travel below the "
-                "checkpoint horizon is gone"
-            )
-        relevant = [v for v in vs if start <= v <= target]
-        if relevant and relevant[0] != start:
-            # A cleanup_log raced this read: we loaded a STALE
-            # _last_checkpoint (cp_old), and commits in (cp_old, first
-            # retained) were deleted against a NEWER checkpoint before
-            # we listed the log. Silently skipping them would return
-            # wrong state — re-read the pointer once (the newer
-            # checkpoint covers the gap); if it hasn't moved, refuse.
-            if not _retried and self._read_last_checkpoint() != cp:
-                return self._compute_state(target, _retried=True)
-            raise ValueError(
-                f"{self.path}: log gap — replay should start at {start} "
-                f"but the earliest retained commit at-or-after it is "
-                f"{relevant[0]} (a concurrent cleanup_log removed the "
-                "range); re-open the table to read through the newer "
-                "checkpoint"
-            )
-        if relevant and relevant != list(range(relevant[0], relevant[-1] + 1)):
-            raise ValueError(
-                f"{self.path}: non-contiguous commit log in replay range "
-                f"{relevant[:5]}... — log files were removed out of band"
-            )
-        for v in relevant:
-            self._apply_entry(state, v, self._read_entry(v))
-        return state
+    def _compute_state(self, target: int) -> dict:
+        return acid_log.replay(self.path, target, self._read_entry)
 
     def _maybe_checkpoint(self, version: int) -> None:
         """Called by the writer that just committed ``version``; writes
-        the checkpoint + pointer when the version hits the interval.
-        Both writes are tmp+rename (atomic, idempotent — state at a
-        fixed version is immutable, so two racers write identical
-        bytes); the pointer is only moved forward."""
-        if version <= 0 or version % CHECKPOINT_INTERVAL != 0:
-            return
-        state = self._state(version)
-        cp_path = self._checkpoint_path(version)
-        tmp = cp_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "state": state}, f)
-        os.replace(tmp, cp_path)
-        prev = self._read_last_checkpoint()
-        if prev is None or prev < version:
-            ptr = os.path.join(self.path, _LOG_DIR, _LAST_CHECKPOINT)
-            tmp = ptr + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as f:
-                json.dump({"version": version}, f)
-            os.replace(tmp, ptr)
+        the checkpoint + pointer when the version hits the interval."""
+        if version > 0 and version % CHECKPOINT_INTERVAL == 0:
+            acid_log.write_checkpoint(self.path, version, self._state(version))
 
     def _live_actions(self, version: int | None = None) -> dict:
         """Live {file name: stats} at ``version`` (default: latest)."""
@@ -699,31 +381,11 @@ class AcidTable:
         return sorted(self._state(version)["live"])
 
     def _try_commit(self, version: int, entry: dict) -> bool:
-        """Atomically publish ``entry`` as ``version``. False if a
-        concurrent writer claimed the version first.
-
-        Publish is tmp-write + fsync + ``os.link`` (r9): link(2) gives
-        the same EEXIST exclusivity as O_CREAT|O_EXCL, but the visible
-        ``<version>.json`` is COMPLETE from the instant it exists. The
-        previous create-then-write had a torn window — a concurrent
-        reader (or a rebasing loser of the race) could ``json.load`` an
-        entry that existed but held zero bytes and crash
-        (judge-reproduced r8, tests/test_sources.py multiprocess race).
-        The tmp name must not end in ``.json`` so ``_versions()`` never
-        lists it."""
-        log_dir = os.path.join(self.path, _LOG_DIR)
-        os.makedirs(log_dir, exist_ok=True)
-        tmp = os.path.join(log_dir, f".commit-{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"version": version, **entry}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self._log_path(version))
-        except FileExistsError:
+        """Atomically publish ``entry`` as ``version`` (see
+        ``acid_log.publish``). False if a concurrent writer claimed the
+        version first."""
+        if not acid_log.publish(self.path, version, entry):
             return False
-        finally:
-            os.unlink(tmp)
         try:
             self._maybe_checkpoint(version)
         except Exception:
@@ -887,7 +549,7 @@ class AcidTable:
                 src = os.path.join(stage, name)
                 stats = _footer_stats(src) if harvest_stats else {}
                 blooms = (
-                    _file_blooms(src, bloom_cols) if bloom_cols else {}
+                    acid_log.file_blooms(src, bloom_cols) if bloom_cols else {}
                 )
                 os.rename(src, os.path.join(dest_dir, final))
                 rel = final if subdir is None else f"{subdir}/{final}"
@@ -978,7 +640,7 @@ class AcidTable:
                     [F.col(c).eqNullSafe(F.lit(v)) for c, v in vals.items()],
                 )
                 subdir = "/".join(
-                    _part_segment(c, vals[c]) for c in part_cols
+                    acid_log.part_segment(c, vals[c]) for c in part_cols
                 )
                 staged = self._stage_files(
                     # optimize()'s file-count convention (~8 files per
@@ -1348,10 +1010,10 @@ class AcidTable:
                     for f in candidates
                     if (
                         lambda bl: bl is None
-                        or any(bloom_maybe_contains(bl, v) for v in ks)
+                        or any(acid_log.bloom_maybe_contains(bl, v) for v in ks)
                     )(
                         (state["live"][f].get("bloom") or {}).get(
-                            self._physical_name(
+                            acid_log.physical_name(
                                 key,
                                 state["live"][f]["added"],
                                 state["schema_ops"],
@@ -1793,7 +1455,7 @@ class AcidTable:
                 else:
                     df = df.coalesce(per_part)
                 subdir = (
-                    "/".join(_part_segment(c, v) for c, v in key)
+                    "/".join(acid_log.part_segment(c, v) for c, v in key)
                     if key is not None
                     else None
                 )
@@ -1997,7 +1659,7 @@ class AcidTable:
             )
         state = self._state(src_v)
         dest = AcidTable(self.spark, dest_path)
-        if dest._versions():
+        if acid_log.versions(dest.path):
             raise ValueError(f"{dest_path}: clone target is not empty")
         # Register the vacuum-protection marker BEFORE anything else
         # (r11 review): a source vacuum racing clone creation would
@@ -2113,7 +1775,7 @@ class AcidTable:
         return dest
 
     def _clones_dir(self) -> str:
-        return os.path.join(self.path, _LOG_DIR, "clones")
+        return os.path.join(acid_log.log_dir(self.path), "clones")
 
     def _register_clone(self, dest_path: str, src_v: int) -> None:
         """Write the clone marker the SOURCE's vacuum consults —
@@ -2164,7 +1826,7 @@ class AcidTable:
                 dest, v = rec["dest"], int(rec["source_version"])
             except (OSError, ValueError, KeyError, json.JSONDecodeError):
                 continue  # torn/foreign file: leave it, protect nothing
-            if os.path.isdir(os.path.join(dest, _LOG_DIR)):
+            if os.path.isdir(acid_log.log_dir(dest)):
                 out.append((dest, v))
                 continue
             parent = os.path.dirname(dest.rstrip(os.sep)) or os.sep
@@ -2348,17 +2010,6 @@ class AcidTable:
             out = out.drop("__acid_base", "__acid_pos")
         return out
 
-    @staticmethod
-    def _physical_name(col: str, added: int, ops: list[dict]) -> str:
-        """Reverse-translate a CURRENT logical column name to the name
-        physically stored in a file added at version ``added`` (walk
-        the applicable renames newest-to-oldest backwards)."""
-        name = col
-        for op in reversed(ops):
-            if op["v"] > added and op["op"] == "rename" and op["new"] == name:
-                name = op["old"]
-        return name
-
     # --------------------------------------------------------- reads
 
     def snapshot(self, version: int | None = None) -> DataFrame:
@@ -2390,7 +2041,7 @@ class AcidTable:
         out = []
         ops = state["schema_ops"]
         for path, action in sorted(state["live"].items()):
-            phys = self._physical_name(col, action["added"], ops)
+            phys = acid_log.physical_name(col, action["added"], ops)
             # a POINT lookup consults the file's bloom too (r10): on a
             # non-clustered high-cardinality key the [min, max] check
             # keeps nearly every file, the bloom keeps ~1 — this is
@@ -2398,7 +2049,7 @@ class AcidTable:
             # of O(table) on a bloom'd CDC table
             if point:
                 bl = (action.get("bloom") or {}).get(phys)
-                if bl is not None and not bloom_maybe_contains(bl, lo):
+                if bl is not None and not acid_log.bloom_maybe_contains(bl, lo):
                     continue
             s = action["stats"].get(phys)
             if s is None or s[0] is None or s[1] is None:
@@ -2507,7 +2158,7 @@ class AcidTable:
         end = last if end is None else end
         if start < 0 or start > end:
             raise ValueError(f"table_changes: bad range [{start}, {end}]")
-        retained = set(self._versions())
+        retained = set(acid_log.versions(self.path))
         missing = [v for v in range(start, end + 1) if v not in retained]
         if missing:
             raise ValueError(
@@ -2836,7 +2487,7 @@ class AcidTable:
 
     def history(self) -> list[dict]:
         """The commit log, oldest first."""
-        return [dict(self._read_entry(v)) for v in self._versions()]
+        return [dict(self._read_entry(v)) for v in acid_log.versions(self.path)]
 
     def cleanup_log(self) -> list[str]:
         """Delete commit JSONs strictly below the newest checkpoint —
@@ -2850,11 +2501,11 @@ class AcidTable:
         if cp is None:
             return []
         deleted = []
-        for v in self._versions():
+        for v in acid_log.versions(self.path):
             if v >= cp:
                 break
             try:
-                os.remove(self._log_path(v))
+                os.remove(acid_log.entry_path(self.path, v))
             except OSError:
                 continue
             deleted.append(f"{v:010d}.json")
@@ -2924,7 +2575,7 @@ class AcidTable:
                 deleted.append(rel)
         # CDC change files: referenced by a retained commit's ``cdc``
         cdc_ref: set[str] = set()
-        for v in self._versions():
+        for v in acid_log.versions(self.path):
             cdc_ref.update(self._read_entry(v).get("cdc", []))
         deleted.extend(self._sweep_sidecars(_CDC_DIR, cdc_ref, horizon))
         # Deletion-vector sidecars: referenced by a retained commit's
@@ -2933,7 +2584,7 @@ class AcidTable:
         # live file's refs visible only through the checkpoint), or a
         # registered clone's pinned version (folded into `referenced`)
         dv_ref: set[str] = set()
-        for v in self._versions():
+        for v in acid_log.versions(self.path):
             e = self._read_entry(v)
             dv_ref.update(e.get("dv", {}).get("sidecars", []))
             for a in e.get("add", []):

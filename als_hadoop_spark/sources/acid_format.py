@@ -1,5 +1,5 @@
 """``format("acid")`` — the commit-log ACID table as a REGISTERED Spark
-batch source AND sink (r8)::
+batch source AND sink::
 
     register_acid_format(spark)
     df.write.format("acid").mode("append").save("/data/orders_acid")
@@ -9,10 +9,8 @@ batch source AND sink (r8)::
     stream.writeStream.format("acid").option("checkpointLocation", c) \
         .start("/data/orders_acid")   # exactly-once streaming appends
 
-Until now the table was driven through the :class:`AcidTable` Python
-API; this module makes it an idiomatic Spark format, completing the
-extension-API trilogy (batch source ``ratings_gen``, stream source
-``acid_cdf``, and now a transactional batch source+sink).
+The same table :class:`~als_hadoop_spark.sources.acid.AcidTable`
+drives through its Python API, as an idiomatic Spark format.
 
 Why the DataSource WRITER API fits a log-commit table exactly: Spark's
 commit protocol — executors each ``write()`` their partition and return
@@ -51,23 +49,25 @@ the staged rows — use ``AcidTable.append``, which validates before
 publishing); ``mode("overwrite")`` racing a concurrent commit raises
 CommitConflict (same contract as ``AcidTable.overwrite``).
 
-Classes are built inside :func:`build_acid_format_source` so
-cloudpickle ships them BY VALUE (the sources/generator.py:47
-discipline), and reference nothing from this package — the log
-parsing they need is self-contained json/os against the documented
-on-disk format (sources/acid.py:87).
+By-value rule: the classes run in Python workers that may not have
+this package on their path, so they are built inside
+:func:`build_acid_format_source` (cloudpickle ships local classes by
+value) and reach shared code ONLY through
+:mod:`~als_hadoop_spark.sources.acid_log` — which imports only the
+standard library and pyarrow and is registered for pickling by value.
 """
 
 from __future__ import annotations
 
+from . import acid_log
+
 
 def build_acid_format_source(with_pushdown: bool = True):
-    """Return the AcidFormatSource class (function-local so cloudpickle
-    serializes it by value to executors). ``with_pushdown=False`` omits
-    the ``pushFilters`` override for sessions where
-    ``spark.sql.python.filterPushdown.enabled`` cannot be turned on
-    (Spark refuses a reader that declares pushdown while the flag is
-    off — the sources/generator.py:47 precedent)."""
+    """Return the AcidFormatSource class (module docstring: by-value
+    rule). ``with_pushdown=False`` omits the ``pushFilters`` override
+    for sessions where ``spark.sql.python.filterPushdown.enabled``
+    cannot be turned on (Spark refuses a reader that declares pushdown
+    while the flag is off — the sources/generator.py:47 precedent)."""
     from dataclasses import dataclass, field
 
     import pyarrow as pa
@@ -84,168 +84,6 @@ def build_acid_format_source(with_pushdown: bool = True):
         LessThanOrEqual,
         WriterCommitMessage,
     )
-
-    LOG_DIR = "_acid_log"
-
-    # ---- self-contained log parsing (mirrors sources/acid.py format)
-
-    def _versions(path: str) -> list[int]:
-        import os
-
-        log_dir = os.path.join(path, LOG_DIR)
-        if not os.path.isdir(log_dir):
-            return []
-        return sorted(
-            int(n[:-5])
-            for n in os.listdir(log_dir)
-            if n.endswith(".json")
-            and not n.endswith(".checkpoint.json")
-            and n[:-5].isdigit()
-        )
-
-    def _entry(path: str, v: int) -> dict:
-        """Parsed commit entry at ``v``, with the bounded torn-read
-        retry (sources/acid.py ``_load_entry_retry`` twin): entries
-        published by this module are complete-on-visibility (link
-        publish in ``AcidWriter.commit``), so the retry only fires
-        against a pre-r9 writer still mid-``json.dump``."""
-        import json
-        import os
-        import time
-
-        p = os.path.join(path, LOG_DIR, f"{v:010d}.json")
-        for i in range(50):
-            try:
-                with open(p) as f:
-                    return json.load(f)
-            except json.JSONDecodeError:
-                if i == 49:
-                    raise
-                time.sleep(0.01)
-
-    def _state(path: str, version=None) -> dict:
-        """Replayed {live: {file: {stats, added}}, schema_ops,
-        constraints, txns} at ``version`` (default latest) —
-        CHECKPOINT-AWARE like AcidTable._compute_state: load the newest
-        ``_last_checkpoint`` at-or-below the target and replay only the
-        log suffix, so format reads/commits stay O(interval) on
-        long-lived tables and cleanup_log'd prefixes remain readable.
-        Raises clearly on a true log gap (files removed out of band)."""
-        import json
-        import os
-
-        all_vs = _versions(path)
-        vs = all_vs
-        if version is not None:
-            vs = [v for v in vs if v <= int(version)]
-        live: dict = {}
-        ops: list = []
-        cons: dict = {}
-        txns: dict = {}
-        start = 0
-        try:
-            with open(os.path.join(path, LOG_DIR, "_last_checkpoint")) as f:
-                cp = int(json.load(f)["version"])
-        except (OSError, ValueError, KeyError):
-            cp = None
-        if cp is not None and (version is None or cp <= int(version)):
-            try:
-                with open(
-                    os.path.join(path, LOG_DIR, f"{cp:010d}.checkpoint.json")
-                ) as f:
-                    st = json.load(f)["state"]
-                live = dict(st.get("live", {}))
-                ops = list(st.get("schema_ops", []))
-                cons = dict(st.get("constraints", {}))
-                txns = dict(st.get("txns", {}))
-                start = cp + 1
-            except (OSError, KeyError, json.JSONDecodeError):
-                start = 0  # corrupt/missing checkpoint: full replay
-        if start == 0 and all_vs and all_vs[0] != 0:
-            # Full replay needed but the log prefix was checkpoint-
-            # cleaned: the requested version predates the retained log
-            # (no checkpoint at-or-below it covers the gap). Without
-            # this guard a time travel below the horizon would return
-            # a silently EMPTY live set — with a user-supplied schema
-            # the reader would yield zero rows instead of an error
-            # (AcidTable._compute_state raises here; match it).
-            raise ValueError(
-                f"acid format: version {version} predates the retained "
-                f"log (earliest commit JSON is {all_vs[0]}; the prefix "
-                "was checkpoint-cleaned) — time travel below the "
-                "checkpoint horizon is gone"
-            )
-        vs = [v for v in vs if v >= start]
-        if vs and vs[0] != start:
-            raise ValueError(
-                f"acid format: replay should start at {start} but the "
-                f"earliest retained commit at-or-after it is {vs[0]} — "
-                "the prefix was cleaned without a covering checkpoint "
-                "or log files were removed out of band; read through "
-                "AcidTable for the race-retry path"
-            )
-        if vs and vs != list(range(vs[0], vs[-1] + 1)):
-            raise ValueError(
-                "acid format: non-contiguous commit log in replay "
-                f"range starting {vs[0]} — log files were removed out "
-                "of band"
-            )
-        st = {
-            "live": live,
-            "schema_ops": ops,
-            "constraints": cons,
-            "txns": txns,
-        }
-        for v in vs:
-            _apply(st, v, _entry(path, v))
-        return st
-
-    def _apply(st: dict, v: int, e: dict) -> None:
-        """Fold one commit entry into a replayed state in place —
-        shared by the full replay above and the commit loop's
-        INCREMENTAL rebase (a lost race folds only the interleaved
-        entries instead of replaying the whole log)."""
-        for p in e.get("remove", []):
-            st["live"].pop(p, None)
-        for a in e.get("add", []):
-            act = {"stats": a.get("stats") or {}, "added": v}
-            if a.get("partition"):
-                act["partition"] = a["partition"]
-            if a.get("bloom"):
-                act["bloom"] = a["bloom"]
-            if a.get("dv"):
-                # a RESTORE/CLONE re-add carries the file's
-                # deletion-vector refs (r11)
-                act["dv"] = list(a["dv"])
-            st["live"][a["path"]] = act
-        dv = e.get("dv")
-        if dv:
-            # merge-on-read commit (r11): attach the sidecar refs to
-            # every file it masks rows of — AcidTable._apply_entry twin
-            for f in dv.get("files", {}):
-                act = st["live"].get(f)
-                if act is not None:
-                    act["dv"] = sorted(
-                        set(act.get("dv", ())) | set(dv.get("sidecars", ()))
-                    )
-        op = e.get("schema_op")
-        if op:
-            st["schema_ops"].append({"v": v, **op})
-        c = e.get("constraint")
-        if c:
-            st["constraints"][c["name"]] = c["expr"]
-        t = e.get("txn")
-        if t and "app" in t:
-            st["txns"][t["app"]] = max(
-                int(st["txns"].get(t["app"], -1)), int(t.get("batch", -1))
-            )
-
-    def _physical_name(col: str, added: int, ops: list) -> str:
-        name = col
-        for op in reversed(ops):
-            if op["v"] > added and op.get("op") == "rename" and op["new"] == name:
-                name = op["old"]
-        return name
 
     def _footer_stats_of(table: "pa.Table") -> dict:
         """[min, max] per JSON-scalar column of the IN-MEMORY Arrow
@@ -268,114 +106,6 @@ def build_acid_format_source(with_pushdown: bool = True):
             mn, mx = mm["min"].as_py(), mm["max"].as_py()
             if isinstance(mn, (int, float, str, bool)):
                 out[f.name] = [mn, mx]
-        return out
-
-    # ---- per-file bloom filters (r10; twins of sources/acid.py
-    # _bloom_build/bloom_maybe_contains — the factory stays
-    # self-contained for cloudpickle-by-value executor shipping, the
-    # _part_segment precedent). Write-side build runs in executor
-    # tasks; plan-side consult runs on the driver in partitions().
-    _BLOOM_K = 7
-    _BLOOM_BITS_PER_VALUE = 10
-    _BLOOM_MAX_BITS = 1 << 16
-
-    def _bloom_tag(v):
-        if isinstance(v, bool):
-            return "b"
-        if isinstance(v, int):
-            return "i"
-        if isinstance(v, float):
-            return "f"
-        if isinstance(v, str):
-            return "s"
-        return None
-
-    def _bloom_hashes(v):
-        import hashlib
-        import struct
-
-        if isinstance(v, bool):
-            data = b"\x01" if v else b"\x00"
-        elif isinstance(v, int):
-            try:
-                data = v.to_bytes(8, "little", signed=True)
-            except OverflowError:
-                return None
-        elif isinstance(v, float):
-            data = struct.pack("<d", v)
-        elif isinstance(v, str):
-            data = v.encode("utf-8")
-        else:
-            return None
-        d = hashlib.blake2b(data, digest_size=16).digest()
-        return (
-            int.from_bytes(d[:8], "little"),
-            int.from_bytes(d[8:], "little"),
-        )
-
-    def _bloom_build(values):
-        import base64
-
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return None
-        tags = {_bloom_tag(v) for v in vals}
-        if len(tags) != 1 or None in tags:
-            return None
-        m = max(64, min(_BLOOM_MAX_BITS, _BLOOM_BITS_PER_VALUE * len(vals)))
-        m = (m + 7) // 8 * 8
-        arr = bytearray(m // 8)
-        for v in vals:
-            hs = _bloom_hashes(v)
-            if hs is None:
-                return None
-            h1, h2 = hs
-            for i in range(_BLOOM_K):
-                b = (h1 + i * h2) % m
-                arr[b >> 3] |= 1 << (b & 7)
-        return {
-            "m": m,
-            "k": _BLOOM_K,
-            "t": tags.pop(),
-            "b64": base64.b64encode(bytes(arr)).decode("ascii"),
-        }
-
-    def _bloom_test(bloom, v):
-        """True = maybe present (conservative); False = DEFINITELY absent."""
-        import base64
-
-        if v is None or _bloom_tag(v) != bloom.get("t"):
-            return True
-        hs = _bloom_hashes(v)
-        if hs is None:
-            return True
-        try:
-            arr = base64.b64decode(bloom["b64"])
-            m = int(bloom["m"])
-            k = int(bloom.get("k", _BLOOM_K))
-        except (KeyError, ValueError, TypeError):
-            return True
-        if m <= 0 or len(arr) * 8 < m:
-            return True
-        h1, h2 = hs
-        for i in range(k):
-            b = (h1 + i * h2) % m
-            if not arr[b >> 3] & (1 << (b & 7)):
-                return False
-        return True
-
-    def _blooms_of(tbl, cols):
-        """Executor-side harvest from the in-memory Arrow table the
-        task is about to write — distinct values per declared column."""
-        import pyarrow.compute as pc
-
-        out = {}
-        for c in cols:
-            if c not in tbl.column_names:
-                continue
-            b = _bloom_build(pc.unique(tbl[c]).to_pylist())
-            if b is not None:
-                out[c] = b
         return out
 
     # ------------------------------------------------------- reader
@@ -446,7 +176,7 @@ def build_acid_format_source(with_pushdown: bool = True):
         def partitions(self):
             import os
 
-            st = _state(self.path, self.version)
+            st = acid_log.replay(self.path, self.version)
             ops = st["schema_ops"]
             parts = []
             for fname in sorted(st["live"]):
@@ -458,7 +188,7 @@ def build_acid_format_source(with_pushdown: bool = True):
                     # stats keep the file iff SOME listed value fits
                     # [mn, mx]. This is what turns the ANN serve path's
                     # cell IN (probed) into nprobe/K planned files.
-                    phys = _physical_name(col, action["added"], ops)
+                    phys = acid_log.physical_name(col, action["added"], ops)
                     if phys in part:
                         v = part[phys]
                         if v is None or v not in vset:
@@ -478,7 +208,7 @@ def build_acid_format_source(with_pushdown: bool = True):
                 if skip:
                     continue
                 for col, (lo, hi) in self._bounds.items():
-                    phys = _physical_name(col, action["added"], ops)
+                    phys = acid_log.physical_name(col, action["added"], ops)
                     if phys in part:
                         # PARTITION ELIMINATION (r9) — before stats:
                         # the file holds ONLY rows with this exact
@@ -525,20 +255,20 @@ def build_acid_format_source(with_pushdown: bool = True):
                 if blooms:
                     for col, vals in self._eq.items():
                         bl = blooms.get(
-                            _physical_name(col, action["added"], ops)
+                            acid_log.physical_name(col, action["added"], ops)
                         )
                         if bl and any(
-                            not _bloom_test(bl, v) for v in vals
+                            not acid_log.bloom_maybe_contains(bl, v) for v in vals
                         ):
                             skip = True
                             break
                     if not skip:
                         for col, vset in self._in_sets.items():
                             bl = blooms.get(
-                                _physical_name(col, action["added"], ops)
+                                acid_log.physical_name(col, action["added"], ops)
                             )
                             if bl and not any(
-                                _bloom_test(bl, v) for v in vset
+                                acid_log.bloom_maybe_contains(bl, v) for v in vset
                             ):
                                 skip = True
                                 break
@@ -637,20 +367,6 @@ def build_acid_format_source(with_pushdown: bool = True):
         #: rows across partition values
         files: tuple
 
-    def _part_segment(col: str, v) -> str:
-        """One ``col=value`` directory segment — value percent-encoded
-        so separators/equals/unicode can't corrupt the layout (the
-        Hive-layout escaping idea); NULL uses the Hive default-partition
-        sentinel."""
-        from urllib.parse import quote
-
-        enc = (
-            "__HIVE_DEFAULT_PARTITION__"
-            if v is None
-            else quote(str(v), safe="")
-        )
-        return f"{col}={enc}"
-
     class AcidWriter(DataSourceArrowWriter):
         def __init__(self, options, overwrite: bool):
             self.path = options.get("path")
@@ -701,7 +417,7 @@ def build_acid_format_source(with_pushdown: bool = True):
                 pq.write_table(tbl, os.path.join(self.path, name))
                 add = {"path": name, "stats": _footer_stats_of(tbl)}
                 if self.bloom_cols:
-                    blooms = _blooms_of(tbl, self.bloom_cols)
+                    blooms = acid_log.blooms_of(tbl, self.bloom_cols)
                     if blooms:
                         add["bloom"] = blooms
                 return AddFiles((add,))
@@ -758,7 +474,7 @@ def build_acid_format_source(with_pushdown: bool = True):
                     mask = m if mask is None else pc.and_(mask, m)
                 part_tbl = tbl.filter(mask)
                 seg = "/".join(
-                    _part_segment(c, combo[c]) for c in self.partition_cols
+                    acid_log.part_segment(c, combo[c]) for c in self.partition_cols
                 )
                 os.makedirs(os.path.join(self.path, seg), exist_ok=True)
                 name = f"{seg}/w-{uuid.uuid4().hex}.parquet"
@@ -769,7 +485,7 @@ def build_acid_format_source(with_pushdown: bool = True):
                     "partition": {c: combo[c] for c in self.partition_cols},
                 }
                 if self.bloom_cols:
-                    blooms = _blooms_of(part_tbl, self.bloom_cols)
+                    blooms = acid_log.blooms_of(part_tbl, self.bloom_cols)
                     if blooms:
                         add["bloom"] = blooms
                 files.append(add)
@@ -788,41 +504,26 @@ def build_acid_format_source(with_pushdown: bool = True):
                         pass
 
         def commit(self, messages):
-            """Publish the staged files as one log entry.
+            """Publish the staged files as one log entry
+            (``acid_log.publish``).
 
-            Two r9 correctness properties of this loop:
-
-            - NO TOCTOU between state and version: the base version is
-              pinned FIRST and the table state derived AT that pinned
-              base (``_state(path, base)``), so a commit landing
-              between the two reads collides at the ``base+1`` publish
-              and flows through the conflict/rebase path instead of
-              silently being folded into a stale snapshot (an
-              overwrite must remove exactly the files live at its
-              base; a rebasing append must see any interleaved CHECK
-              constraint / txn watermark). Same ordering inside the
-              retry arm.
-            - ATOMIC publish: tmp-write + fsync + ``os.link`` — the
-              visible ``<version>.json`` is complete from the instant
-              it exists (link(2) gives the same EEXIST exclusivity as
-              O_CREAT|O_EXCL without the torn-read window the judge
-              reproduced in r8). The tmp name must not end in ``.json``
-              so ``_versions()`` never lists it.
-            """
-            import json
-            import os
-            import uuid
-
+            No TOCTOU between state and version: the base version is
+            pinned FIRST and the table state replayed AT that base, so
+            a commit landing between the two reads collides at the
+            ``base+1`` publish and flows through the conflict/rebase
+            path instead of silently being folded into a stale snapshot
+            (an overwrite must remove exactly the files live at its
+            base; a rebasing append must see any interleaved CHECK
+            constraint / txn watermark). Same ordering inside the retry
+            arm."""
             import random
             import time
 
             adds = [
                 dict(f) for m in messages if m is not None for f in m.files
             ]
-            log_dir = os.path.join(self.path, LOG_DIR)
-            os.makedirs(log_dir, exist_ok=True)
-            base = max(_versions(self.path), default=-1)
-            st = _state(self.path, base) if base >= 0 else _state(self.path)
+            base = max(acid_log.versions(self.path), default=-1)
+            st = acid_log.replay(self.path, base)
             for attempt in range(25):
                 if st["constraints"]:
                     self._cleanup(messages)
@@ -849,40 +550,27 @@ def build_acid_format_source(with_pushdown: bool = True):
                     entry = {"operation": "append", "add": adds}
                 if self.txn is not None:
                     entry["txn"] = self.txn
-                v = base + 1
-                tmp = os.path.join(
-                    log_dir, f".commit-{uuid.uuid4().hex}.tmp"
-                )
-                with open(tmp, "w") as f:
-                    json.dump({"version": v, **entry}, f)
-                    f.flush()
-                    os.fsync(f.fileno())
-                try:
-                    os.link(tmp, os.path.join(log_dir, f"{v:010d}.json"))
+                if acid_log.publish(self.path, base + 1, entry):
                     return
-                except FileExistsError:
-                    if self.overwrite:
-                        self._cleanup(messages)
-                        raise RuntimeError(
-                            "acid format: CommitConflict — table "
-                            "changed during overwrite; re-run on the "
-                            "new state"
-                        ) from None
-                    # blind append: rebase onto the new head — pin it
-                    # first (no-TOCTOU ordering), then fold ONLY the
-                    # interleaved entries into the held state. A full
-                    # _state replay here was the r9 stress livelock:
-                    # O(log) re-reads per retry widen the race window
-                    # as the log grows, and under load a writer lost
-                    # every round. Incremental fold + jittered backoff
-                    # keeps each retry O(interleaved commits).
-                    new_base = max(_versions(self.path), default=-1)
-                    for iv in range(base + 1, new_base + 1):
-                        _apply(st, iv, _entry(self.path, iv))
-                    base = new_base
-                    time.sleep(random.random() * 0.002 * (attempt + 1))
-                finally:
-                    os.unlink(tmp)
+                if self.overwrite:
+                    self._cleanup(messages)
+                    raise RuntimeError(
+                        "acid format: CommitConflict — table changed "
+                        "during overwrite; re-run on the new state"
+                    )
+                # blind append: rebase onto the new head — pin it first
+                # (no-TOCTOU ordering), then fold ONLY the interleaved
+                # entries into the held state. A full replay per retry
+                # livelocks under load: O(log) re-reads widen the race
+                # window as the log grows. Incremental fold + jittered
+                # backoff keeps each retry O(interleaved commits).
+                new_base = max(acid_log.versions(self.path), default=-1)
+                for iv in range(base + 1, new_base + 1):
+                    acid_log.apply_entry(
+                        st, iv, acid_log.read_entry(self.path, iv)
+                    )
+                base = new_base
+                time.sleep(random.random() * 0.002 * (attempt + 1))
             self._cleanup(messages)
             raise RuntimeError(
                 "acid format: append lost 25 commit races; retry"
@@ -950,7 +638,7 @@ def build_acid_format_source(with_pushdown: bool = True):
             if not path:
                 raise ValueError("acid format: option 'path' is required")
             v = self.options.get("version")
-            st = _state(path, int(v) if v is not None else None)
+            st = acid_log.replay(path, int(v) if v is not None else None)
             if not st["live"]:
                 raise ValueError(
                     "acid format: table has no live data to derive a "
@@ -1015,6 +703,9 @@ def register_acid_format(spark) -> None:
     enabling Python-source filter pushdown when the session permits
     (without it, reads are identical — only log-stats file pruning at
     planning time is lost)."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(acid_log)
     conf = "spark.sql.python.filterPushdown.enabled"
     try:
         spark.conf.set(conf, "true")

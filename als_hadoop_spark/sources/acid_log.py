@@ -1,0 +1,414 @@
+"""The commit-log protocol of the ACID table — the one definition of the
+on-disk format that :class:`~als_hadoop_spark.sources.acid.AcidTable`,
+``format("acid")`` and the ``acid_cdf`` stream source all read and
+write (the Delta log protocol, Armbrust et al., VLDB 2020, reduced to
+its core):
+
+- ``_acid_log/<version:010d>.json`` — one immutable commit entry per
+  version (add / remove / dv / cdc / schema_op / constraint /
+  properties / txn actions), published with create-if-absent
+  exclusivity by :func:`publish`;
+- ``_acid_log/<version:010d>.checkpoint.json`` — the fully replayed
+  state at ``version``, and ``_acid_log/_last_checkpoint`` pointing at
+  the newest one; :func:`replay` loads it and folds only the suffix.
+
+This module imports only the standard library and pyarrow, and the
+source factories register it for cloudpickle's pickling BY VALUE: the
+Python DataSource classes reach it from Python workers that do not
+have this package on their path.
+"""
+
+import json
+import os
+import time
+import uuid
+
+_LOG_DIR = "_acid_log"
+_LAST_CHECKPOINT = "_last_checkpoint"
+_CHECKPOINT_SUFFIX = ".checkpoint.json"
+
+#: Bloom parameters: ~10 bits/value at k=7 gives ~1% fpp; the per-file
+#: bitset is capped at 64 Kbit (8 KB raw, ~11 KB base64 in the commit
+#: JSON) — past ~6.5 K distinct values the fpp degrades gracefully
+#: instead of the log entry growing unboundedly.
+_BLOOM_K = 7
+_BLOOM_BITS_PER_VALUE = 10
+_BLOOM_MAX_BITS = 1 << 16
+
+
+# ------------------------------------------------------------- layout
+
+
+def log_dir(path: str) -> str:
+    return os.path.join(path, _LOG_DIR)
+
+
+def entry_path(path: str, version: int) -> str:
+    return os.path.join(path, _LOG_DIR, f"{version:010d}.json")
+
+
+def _checkpoint_path(path: str, version: int) -> str:
+    return os.path.join(path, _LOG_DIR, f"{version:010d}{_CHECKPOINT_SUFFIX}")
+
+
+def versions(path: str) -> list[int]:
+    """Retained commit versions, ascending (checkpoints and in-flight
+    ``.tmp`` publishes excluded)."""
+    d = log_dir(path)
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        int(n[:-5])
+        for n in os.listdir(d)
+        if n.endswith(".json")
+        and not n.endswith(_CHECKPOINT_SUFFIX)
+        and n[:-5].isdigit()
+    )
+
+
+def read_entry(path: str, version: int) -> dict:
+    """Parsed commit entry, with a bounded retry on a torn/empty file.
+    Entries published by :func:`publish` are complete the instant they
+    are visible, so the retry only fires against a writer that creates
+    and then writes the file; ~0.5 s outlasts any in-flight dump of a
+    KB-sized entry, after which the parse error propagates."""
+    p = entry_path(path, version)
+    for attempt in range(50):
+        try:
+            with open(p) as f:
+                return json.load(f)
+        except json.JSONDecodeError:
+            if attempt == 49:
+                raise
+            time.sleep(0.01)
+
+
+def read_last_checkpoint(path: str) -> int | None:
+    """Version the ``_last_checkpoint`` pointer names, or None."""
+    try:
+        with open(os.path.join(path, _LOG_DIR, _LAST_CHECKPOINT)) as f:
+            return int(json.load(f)["version"])
+    except (OSError, ValueError, KeyError):
+        return None
+
+
+def _replace_json(dest: str, obj: dict) -> None:
+    tmp = dest + f".tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, dest)
+
+
+def write_checkpoint(path: str, version: int, state: dict) -> None:
+    """Write the checkpoint at ``version`` and move the pointer to it
+    (forward only). Both writes are tmp + rename: atomic, and
+    idempotent because the state at a fixed version is immutable."""
+    _replace_json(
+        _checkpoint_path(path, version), {"version": version, "state": state}
+    )
+    prev = read_last_checkpoint(path)
+    if prev is None or prev < version:
+        _replace_json(
+            os.path.join(path, _LOG_DIR, _LAST_CHECKPOINT),
+            {"version": version},
+        )
+
+
+def publish(path: str, version: int, entry: dict) -> bool:
+    """Atomically create the commit entry for ``version``; False if a
+    concurrent writer claimed the version first.
+
+    tmp-write + fsync + ``os.link``: link(2) gives the same EEXIST
+    exclusivity as O_CREAT|O_EXCL, and the visible ``<version>.json`` is
+    complete from the instant it exists — create-then-write lets a
+    concurrent reader parse an empty entry. The tmp name does not end in
+    ``.json``, so :func:`versions` never lists it."""
+    d = log_dir(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".commit-{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"version": version, **entry}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, entry_path(path, version))
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+    return True
+
+
+# ------------------------------------------------------------- replay
+
+
+def empty_state() -> dict:
+    return {
+        "live": {},
+        "schema_ops": [],
+        "constraints": {},
+        "txns": {},
+        "props": {},
+    }
+
+
+def apply_entry(state: dict, version: int, entry: dict) -> None:
+    """Fold one commit entry into a replayed state in place. ``live``
+    maps each live file to ``{stats, added, [schema], [partition],
+    [bloom], [dv]}``."""
+    live = state["live"]
+    for p in entry.get("remove", []):
+        live.pop(p, None)
+    for a in entry.get("add", []):
+        act = {"stats": a.get("stats") or {}, "added": version}
+        for k in ("schema", "partition", "bloom"):
+            if a.get(k):
+                act[k] = a[k]
+        if a.get("dv"):
+            # a RESTORE/CLONE re-add carries the deletion-vector refs
+            # of the state it reproduces
+            act["dv"] = list(a["dv"])
+        live[a["path"]] = act
+    dv = entry.get("dv")
+    if dv:
+        # attach the commit's sidecar(s) to every file it masks rows
+        # of — a sidecar's rows for OTHER files match no basename of a
+        # pruned scan, so per-file slicing is not needed
+        for f in dv.get("files", {}):
+            act = live.get(f)
+            if act is not None:
+                act["dv"] = sorted(
+                    set(act.get("dv", ())) | set(dv.get("sidecars", ()))
+                )
+    c = entry.get("constraint")
+    if c:
+        state["constraints"][c["name"]] = c["expr"]
+    props = list(entry.get("properties", ()))
+    if entry.get("property"):  # single-pair shape of older logs
+        props.insert(0, entry["property"])
+    for prop in props:
+        state["props"][prop["key"]] = prop["value"]
+    op = entry.get("schema_op")
+    if op:
+        state["schema_ops"].append({"v": version, **op})
+    txn = entry.get("txn")
+    if txn and "app" in txn:
+        app = txn["app"]
+        state["txns"][app] = max(
+            int(state["txns"].get(app, -1)), int(txn.get("batch", -1))
+        )
+
+
+def replay(path: str, version: int | None = None, read=None) -> dict:
+    """Table state at ``version`` (default latest): the newest
+    checkpoint at-or-below it plus the log suffix. ``read(v)`` returns
+    the parsed entry at ``v`` (default :func:`read_entry`; callers pass
+    their caching readers).
+
+    Raises ValueError instead of returning partial state when the
+    needed log is gone: the version predates the retained log, a
+    commit in the replay range is missing, or the range is not
+    contiguous. A gap right after a stale ``_last_checkpoint`` (a
+    concurrent ``cleanup_log`` moved it) re-reads the pointer once."""
+    read = read or (lambda v: read_entry(path, v))
+    vs = versions(path)
+    target = version if version is not None else (vs[-1] if vs else -1)
+    if target < 0:
+        return empty_state()
+    for attempt in range(2):
+        state, start = empty_state(), 0
+        cp = read_last_checkpoint(path)
+        if cp is not None and cp <= target:
+            try:
+                with open(_checkpoint_path(path, cp)) as f:
+                    state = {**state, **json.load(f)["state"]}
+                start = cp + 1
+            except (OSError, KeyError, ValueError):
+                pass  # corrupt/missing checkpoint: full replay
+        if start == 0 and vs and vs[0] != 0:
+            raise ValueError(
+                f"{path}: version {target} predates the retained log "
+                f"(earliest commit JSON is {vs[0]}; the prefix was "
+                "checkpoint-cleaned) — time travel below the checkpoint "
+                "horizon is gone"
+            )
+        relevant = [v for v in vs if start <= v <= target]
+        if not relevant or relevant[0] == start:
+            break
+        if attempt == 0 and read_last_checkpoint(path) != cp:
+            vs = versions(path)
+            continue
+        raise ValueError(
+            f"{path}: log gap — replay should start at {start} but the "
+            f"earliest retained commit at-or-after it is {relevant[0]} "
+            "(the range was cleaned without a covering checkpoint or "
+            "removed out of band); re-open the table to read through "
+            "the newer checkpoint"
+        )
+    if relevant != list(range(start, start + len(relevant))):
+        raise ValueError(
+            f"{path}: non-contiguous commit log in replay range "
+            f"{relevant[:5]}... — log files were removed out of band"
+        )
+    for v in relevant:
+        apply_entry(state, v, read(v))
+    return state
+
+
+def physical_name(col: str, added: int, ops: list) -> str:
+    """Reverse-translate a CURRENT logical column name to the name
+    physically stored in a file added at version ``added`` (walk the
+    applicable renames newest-to-oldest)."""
+    name = col
+    for op in reversed(ops):
+        if op["v"] > added and op.get("op") == "rename" and op["new"] == name:
+            name = op["old"]
+    return name
+
+
+def part_segment(col: str, value) -> str:
+    """One ``col=value`` partition directory segment: the value
+    percent-encoded so separators/equals/unicode cannot corrupt the
+    layout, NULL as the Hive default-partition sentinel."""
+    from urllib.parse import quote
+
+    enc = (
+        "__HIVE_DEFAULT_PARTITION__"
+        if value is None
+        else quote(str(value), safe="")
+    )
+    return f"{col}={enc}"
+
+
+# ------------------------------------------------------------- blooms
+
+
+def _bloom_tag(value) -> str | None:
+    """Type tag stored with (and checked against) the bloom — a filter
+    literal of a DIFFERENT type category must not be tested (an int 5
+    and a float 5.0 hash differently; a mismatched test would be a
+    false NEGATIVE, i.e. wrong pruning). bool first: it subclasses
+    int."""
+    if isinstance(value, bool):
+        return "b"
+    if isinstance(value, int):
+        return "i"
+    if isinstance(value, float):
+        return "f"
+    if isinstance(value, str):
+        return "s"
+    return None
+
+
+def _bloom_hashes(value) -> tuple[int, int] | None:
+    """(h1, h2) 64-bit double-hashing pair (Kirsch–Mitzenmacher) from
+    a canonical byte encoding — the same function runs at write
+    (harvest) and plan (consult) time."""
+    import hashlib
+    import struct
+
+    if isinstance(value, bool):
+        data = b"\x01" if value else b"\x00"
+    elif isinstance(value, int):
+        try:
+            data = value.to_bytes(8, "little", signed=True)
+        except OverflowError:
+            return None
+    elif isinstance(value, float):
+        data = struct.pack("<d", value)
+    elif isinstance(value, str):
+        data = value.encode("utf-8")
+    else:
+        return None
+    d = hashlib.blake2b(data, digest_size=16).digest()
+    return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little")
+
+
+def _bloom_build(values) -> dict | None:
+    """Serialized bloom over the distinct non-NULL ``values`` of one
+    file's column: {"m": bits, "k": hashes, "t": type tag, "b64":
+    bitset}. None when the column is all-NULL, mixed-type, or
+    unhashable — absence means "no verdict", never "absent"."""
+    import base64
+
+    vals = [v for v in values if v is not None]
+    if not vals:
+        return None
+    tags = {_bloom_tag(v) for v in vals}
+    if len(tags) != 1 or None in tags:
+        return None
+    m = max(64, min(_BLOOM_MAX_BITS, _BLOOM_BITS_PER_VALUE * len(vals)))
+    m = (m + 7) // 8 * 8
+    arr = bytearray(m // 8)
+    for v in vals:
+        hs = _bloom_hashes(v)
+        if hs is None:
+            return None
+        h1, h2 = hs
+        for i in range(_BLOOM_K):
+            b = (h1 + i * h2) % m
+            arr[b >> 3] |= 1 << (b & 7)
+    return {
+        "m": m,
+        "k": _BLOOM_K,
+        "t": tags.pop(),
+        "b64": base64.b64encode(bytes(arr)).decode("ascii"),
+    }
+
+
+def bloom_maybe_contains(bloom: dict, value) -> bool:
+    """Membership test against a serialized bloom. Conservative: any
+    type mismatch, NULL, or malformed bloom answers True (keep the
+    file). False is definitive — the value is NOT in the file."""
+    import base64
+
+    if value is None or _bloom_tag(value) != bloom.get("t"):
+        return True
+    hs = _bloom_hashes(value)
+    if hs is None:
+        return True
+    try:
+        arr = base64.b64decode(bloom["b64"])
+        m = int(bloom["m"])
+        k = int(bloom.get("k", _BLOOM_K))
+    except (KeyError, ValueError, TypeError):
+        return True
+    if m <= 0 or len(arr) * 8 < m:
+        return True
+    h1, h2 = hs
+    for i in range(k):
+        b = (h1 + i * h2) % m
+        if not arr[b >> 3] & (1 << (b & 7)):
+            return False
+    return True
+
+
+def blooms_of(table, cols) -> dict:
+    """Per-column serialized blooms harvested from an Arrow table (the
+    distinct values of each declared column it has); unbuildable
+    columns are simply absent (consulted conservatively)."""
+    import pyarrow.compute as pc
+
+    out = {}
+    for c in cols:
+        if c in table.column_names:
+            b = _bloom_build(pc.unique(table[c]).to_pylist())
+            if b is not None:
+                out[c] = b
+    return out
+
+
+def file_blooms(path: str, cols) -> dict:
+    """:func:`blooms_of` for a just-staged parquet file. Unlike footer
+    stats this IS a data re-read of the declared columns — the write
+    amplification the opt-in costs."""
+    import pyarrow.parquet as pq
+
+    try:
+        present = pq.read_schema(path).names
+        want = [c for c in cols if c in present]
+        if not want:
+            return {}
+        return blooms_of(pq.read_table(path, columns=want), want)
+    except OSError:
+        return {}

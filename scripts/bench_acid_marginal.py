@@ -29,23 +29,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def commit_intervals(table_dir: str) -> list[float]:
     """Publish-to-publish gaps (seconds) between consecutive commit
     JSONs, ordered by version."""
-    log_dir = os.path.join(table_dir, "_acid_log")
-    stamps = sorted(
-        (int(n[:-5]), os.path.getmtime(os.path.join(log_dir, n)))
-        for n in os.listdir(log_dir)
-        if n.endswith(".json")
-        and not n.endswith(".checkpoint.json")
-        and n[:-5].isdigit()
-    )
-    return [
-        round(b[1] - a[1], 2) for a, b in zip(stamps, stamps[1:])
+    from als_hadoop_spark.sources import acid_log
+
+    stamps = [
+        os.path.getmtime(acid_log.entry_path(table_dir, v))
+        for v in acid_log.versions(table_dir)
     ]
+    return [round(b - a, 2) for a, b in zip(stamps, stamps[1:])]
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf01_x100"
     from als_hadoop_spark.operators import timeseries
     from als_hadoop_spark.session import get_spark
+    from als_hadoop_spark.sources import acid_log
 
     spark = get_spark(
         "acid_marginal", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32))
@@ -73,7 +70,7 @@ def main():
         }
         for tag in tags:
             d = os.path.join(scratch, f"{app}-{tag}-{base}")
-            if os.path.isdir(os.path.join(d, "_acid_log")):
+            if acid_log.versions(d):
                 iv = commit_intervals(d)
                 rec[f"commits_{tag}"] = len(iv) + 1
                 rec[f"intervals_{tag}"] = iv

@@ -460,7 +460,8 @@ def test_checkpoint_accelerated_replay_matches_full_replay(spark, tmp_path):
     through full log replay; time travel below the newest checkpoint
     still works (falls back to replay); the pointer and checkpoint
     files actually exist."""
-    from als_hadoop_spark.sources.acid import _LOG_DIR, CHECKPOINT_INTERVAL
+    from als_hadoop_spark.sources.acid import CHECKPOINT_INTERVAL
+    from als_hadoop_spark.sources.acid_log import _LOG_DIR
 
     t = AcidTable(spark, str(tmp_path / "t"))
     # 100 commits: appends carry data; constraint/rename churn exercises
@@ -1017,7 +1018,7 @@ def test_stale_checkpoint_gap_is_loud(spark, tmp_path):
     (ADVICE r5 on cleanup_log races)."""
     import json as _json
 
-    from als_hadoop_spark.sources.acid import _LAST_CHECKPOINT, _LOG_DIR
+    from als_hadoop_spark.sources.acid_log import _LAST_CHECKPOINT, _LOG_DIR
 
     t = AcidTable(spark, str(tmp_path / "t"))
     for i in range(21):  # checkpoints at v10 and v20

@@ -11,11 +11,8 @@ import os
 import pytest
 
 from als_hadoop_spark.sources import register_acid_format
-from als_hadoop_spark.sources.acid import (
-    AcidTable,
-    _bloom_build,
-    bloom_maybe_contains,
-)
+from als_hadoop_spark.sources.acid import AcidTable
+from als_hadoop_spark.sources.acid_log import _bloom_build, bloom_maybe_contains
 from als_hadoop_spark.sources.acid_format import build_acid_format_source
 
 N_FILES = 16

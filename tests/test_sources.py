@@ -769,3 +769,88 @@ def test_acid_format_timetravel_below_horizon_raises(spark, tmp_path):
             .load(p)
             .collect()
         )
+
+
+def test_acid_readers_agree_without_checkpoint_pointer(spark, tmp_path):
+    """AcidTable, format("acid") and the acid_cdf source replay the log
+    through one protocol: once cleanup_log has removed the prefix and
+    the _last_checkpoint pointer is lost, all three refuse with the
+    same error instead of replaying the retained suffix alone."""
+    import os
+
+    import pytest as _pytest
+
+    from als_hadoop_spark.sources import acid_log, register_acid_format
+    from als_hadoop_spark.sources.acid import AcidTable
+    from als_hadoop_spark.sources.acid_cdf import build_acid_cdf_source
+
+    register_acid_format(spark)
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    one = spark.createDataFrame([(1, "a")], "k LONG, s STRING").coalesce(1)
+    for _ in range(12):  # version 10 writes a checkpoint
+        t.append(one)
+    assert t.cleanup_log()
+    os.remove(os.path.join(acid_log.log_dir(p), acid_log._LAST_CHECKPOINT))
+    AcidTable._STATE_CACHE.clear()  # a fresh reader process
+
+    with _pytest.raises(ValueError, match="predates the retained log"):
+        AcidTable(spark, p)._state()
+    with _pytest.raises(Exception, match="predates the retained log"):
+        spark.read.format("acid").load(p).collect()
+    with _pytest.raises(ValueError, match="predates the retained log"):
+        build_acid_cdf_source()(options={"path": p}).schema()
+
+
+def test_acid_sources_run_from_a_foreign_cwd(tmp_path):
+    """Python workers see neither the driver's sys.path nor, here, a
+    PYTHONPATH or a cwd holding the package: a driver started from
+    another directory, with the repo on its own sys.path only, still
+    writes and reads format("acid") (with a pushed filter, so planning
+    runs in a Python worker) and folds an acid_cdf micro-batch. This is
+    what fails if the shared log protocol is pickled by reference."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = str(tmp_path / "t")
+    child = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+from als_hadoop_spark.sources import register_acid_cdf, register_acid_format
+register_acid_format(spark)
+register_acid_cdf(spark)
+p = {path!r}
+rows = [(i, "s%d" % i) for i in range(6)]
+(spark.createDataFrame(rows, "k LONG, s STRING").coalesce(2)
+ .write.format("acid").mode("append").save(p))
+print("READ", sorted(r.k for r in
+      spark.read.format("acid").load(p).filter("k >= 4").collect()))
+q = (spark.readStream.format("acid_cdf").option("path", p).load()
+     .writeStream.format("memory").queryName("feed")
+     .option("checkpointLocation", p + "_ck")
+     .trigger(availableNow=True).start())
+q.awaitTermination(120)
+print("FEED", sorted((r.k, r._change_type, r._commit_version)
+                     for r in spark.table("feed").collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=240,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "READ [4, 5]" in out.stdout
+    feed = [(k, "insert", 0) for k in range(6)]
+    assert f"FEED {feed}" in out.stdout
