@@ -6,20 +6,22 @@ non-distributed anti-pattern. The obvious Spark rewrite,
 ``dense_rank() OVER (ORDER BY key)``, is just as bad at 100 TB: an
 unpartitioned window funnels every distinct key through ONE task.
 
-``dense_ids`` instead does a fully-JVM distributed enumeration:
+``dense_ids`` instead does a fully-JVM distributed enumeration (the
+``grouped_ranks`` recipe over the distinct keys; several key columns
+share one enumeration, one group per column):
 
-1. ``distinct`` + ``repartitionByRange(key)`` + ``sortWithinPartitions``
-   — keys globally sorted across partitions (partition *p*'s keys all
-   precede partition *p+1*'s).
+1. ``distinct`` (column, key) pairs + ``repartitionByRange(column,
+   key)`` + ``sortWithinPartitions`` — pairs globally sorted across
+   partitions (partition *p*'s pairs all precede partition *p+1*'s).
 2. per-partition local index via ``monotonically_increasing_id()``
    decomposition: Spark packs ``partition_id`` into the upper bits and a
    0-based sequential row index into the lower 33 bits, so
    ``local_idx = id & (2^33 - 1)`` — computed inside whole-stage
    codegen, no shuffle, no Python.
-3. per-partition counts → cumulative offsets (a window over the
-   #partitions-row counts frame — bounded by the partition count, never
-   by data size) broadcast-joined back:
-   ``dense_id = offset[pid] + local_idx``.
+3. per-(column, partition) counts and first local index → cumulative
+   offsets (a window over a frame bounded by partitions × columns,
+   never by data size) broadcast-joined back:
+   ``dense_id = offset[column, pid] + local_idx - first[column, pid]``.
 
 The result is bit-identical to ``dense_rank()-1`` ordered by key, while
 every step stays O(rows/partitions) per task. Any single boundary
@@ -50,42 +52,36 @@ _MONO_LOCAL_MASK = (1 << 33) - 1
 
 def dense_ids(
     df: DataFrame,
-    key: str,
+    key: str | list[str],
     num_partitions: int | None = None,
     pin: bool = True,
 ) -> DataFrame:
-    """Return a mapping DataFrame ``(key, dense_id: long)`` where
-    ``dense_id`` is the 0-based rank of ``key`` in global sort order."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    """Dense 0-based ids in sorted key order.
 
-    mono = F.monotonically_increasing_id()
-    enumerated = (
-        df.select(key)
-        .distinct()
-        .repartitionByRange(num_partitions, key)
-        .sortWithinPartitions(key)
-        .select(
-            key,
-            F.shiftrightunsigned(mono, 33).cast("int").alias("_pid"),
-            mono.bitwiseAND(F.lit(_MONO_LOCAL_MASK)).alias("_local_idx"),
+    ``key`` a column name: the mapping ``(key, dense_id: long)``, where
+    ``dense_id`` is the rank of ``key`` among its distinct values.
+
+    ``key`` a list of column names of one type: ONE enumeration encodes
+    them all. The (column, value) pairs are stacked, deduplicated and
+    enumerated as ``grouped_ranks`` groups, so each column gets its own
+    0-based ids and a range partition may straddle the boundary between
+    two columns. Returns ``(column: string, key, dense_id: long)``: the
+    key column's name, one of its distinct values, and that value's
+    rank within the column — the same ids one single-key call per
+    column would give, for one shuffle and one pin instead of N."""
+    if isinstance(key, str):
+        ranked = grouped_ranks(df.select(key).distinct(), [], key, num_partitions, pin)
+        return ranked.select(key, (F.col("rank") - 1).alias("dense_id"))
+
+    stacked = df.select(
+        F.inline(
+            F.array(
+                *[F.struct(F.lit(k).alias("column"), F.col(k).alias("key")) for k in key]
+            )
         )
-    )
-    if pin:  # see module docstring: two-consumer layout pin
-        enumerated = enumerated.localCheckpoint(eager=False)
-
-    counts = enumerated.groupBy("_pid").agg(F.count("*").alias("_n"))
-    # Cumulative count of rows in partitions before _pid. Unpartitioned
-    # window is safe here: the frame has at most `num_partitions` rows.
-    w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_n").over(w), F.lit(0)).alias("_offset")
-    )
-
-    return enumerated.join(F.broadcast(offsets), "_pid").select(
-        key, (F.col("_offset") + F.col("_local_idx")).alias("dense_id")
-    )
+    ).distinct()
+    ranked = grouped_ranks(stacked, ["column"], "key", num_partitions, pin)
+    return ranked.select("column", "key", (F.col("rank") - 1).alias("dense_id"))
 
 
 def global_ranks(
@@ -229,8 +225,8 @@ def grouped_ranks(
     group ORDER BY v)``.
 
     A window with low-cardinality partitions sorts EACH GROUP IN ONE
-    TASK (3 groups over 10¹¹ rows = 3 impossible sorts). Here the same
-    dense_ids trick generalizes: ``repartitionByRange(group, order)``
+    TASK (3 groups over 10¹¹ rows = 3 impossible sorts). Here the
+    global_ranks enumeration generalizes: ``repartitionByRange(group, order)``
     spreads every group across many partitions while keeping global
     (group, order) sort order across partition boundaries; rows
     enumerate locally via monotonically_increasing_id decomposition;
@@ -240,7 +236,8 @@ def grouped_ranks(
     single-task sort at any group cardinality.
 
     Ties on ``order_col`` get arbitrary-but-valid distinct ranks
-    (row_number semantics)."""
+    (row_number semantics). An empty ``group_cols`` ranks the whole
+    frame as one group."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

@@ -5,10 +5,16 @@ The reference hand-builds the pipeline as 23 MapReduce job launches
 (``ALS-Hadoop/ALS/ALS.java:217-331``): CSV parse → item-keyed sparse
 vectors → transpose → per-item means → M₀ init → 10 × (solve U | solve
 M) with the fixed factor broadcast via DistributedCache → probe scoring
-→ RMSE. Here the whole thing is one driver program:
+→ RMSE. Here the whole thing is one driver program that reads the
+ratings once:
 
-    ratings → randomSplit → ml.recommendation.ALS(...).fit → transform
-            → RegressionEvaluator-style RMSE aggregate
+    ratings + hash split flag (cached) → one stats job (n_train, μ,
+            global-mean RMSE) → ml.recommendation.ALS(...).fit(train)
+            → transform(probe) (cached) → RMSE aggregate
+
+The split is a per-row content hash of (user_id, item_id), so train and
+probe are disjoint and cover the ratings on any partition layout and
+on every re-evaluation (see ``hash_split``).
 
 with identical hyperparameters (rank=20, maxIter=10, regParam=0.065 —
 ``ALS/ALS.java:52-55``; λ=0.065 is the ALS-WR paper's tuned value, Zhou
@@ -26,6 +32,8 @@ node per iteration (``ALS/ALS.java:380-383``).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,8 +45,8 @@ REG_PARAM = 0.065  # ALS-Hadoop/ALS/ALS.java:55 (lambda)
 def _hash_unit(*cols) -> F.Column:
     """Deterministic pseudo-uniform in [0,1) from xxhash64 of the given
     columns — partition-layout independent (unlike F.rand(seed), whose
-    stream depends on task split), so the synthetic data is identical
-    on any cluster size."""
+    stream depends on task split), so the synthetic data and the
+    train/probe split are identical on any cluster size."""
     h = F.xxhash64(*cols)
     return (F.pmod(h, F.lit(1_000_003)).cast("double")) / 1_000_003.0
 
@@ -92,6 +100,31 @@ def synth_ratings(
     )
 
 
+#: split.py:5-19 — per-row Bernoulli draw, P(probe) = 0.2, seed 1
+PROBE_FRACTION = 0.2
+SPLIT_SEED = 1
+_PROBE = "_probe"
+
+
+def hash_split(ratings: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """split.py's seeded 0.8/0.2 Bernoulli split as a per-row content
+    hash: a rating is a probe row iff ``_hash_unit(user_id, item_id,
+    SPLIT_SEED) < PROBE_FRACTION``.
+
+    Returns ``(flagged, train, probe)``: the ratings plus a boolean
+    ``_probe`` column, and its two filters (flag column dropped). The
+    draw depends only on the row's ids, so train and probe are disjoint
+    and together cover the ratings however often, and on whatever
+    partition layout, they are evaluated. ``randomSplit`` draws from a
+    per-partition RNG stream instead: two evaluations over different
+    layouts share rows."""
+    flag = _hash_unit(F.col("user_id"), F.col("item_id"), F.lit(SPLIT_SEED))
+    flagged = ratings.withColumn(_PROBE, flag < PROBE_FRACTION)
+    train = flagged.filter(~F.col(_PROBE)).drop(_PROBE)
+    probe = flagged.filter(F.col(_PROBE)).drop(_PROBE)
+    return flagged, train, probe
+
+
 def als_pipeline(
     ratings: DataFrame,
     rank: int = RANK,
@@ -101,65 +134,85 @@ def als_pipeline(
 ) -> tuple[DataFrame, float, float, "object"]:
     """§3.1 end-to-end: split → fit → score → RMSE.
 
-    Returns (predictions, rmse, global_mean_rmse, fitted_model). The split mirrors
-    split.py:5-19 (per-row Bernoulli 0.8/0.2, seed 1); cold-start rows
-    are dropped exactly like the reference's join-miss drop at
-    ALS/ALS.java:460-464.
+    Returns (predictions, rmse, global_mean_rmse, fitted_model). The
+    split is ``hash_split`` (split.py:5-19's 0.8/0.2, seed 1, drawn per
+    row from its ids); cold-start rows are dropped exactly like the
+    reference's join-miss drop at ALS/ALS.java:460-464.
+
+    One pass over the ratings: the flagged frame is cached, and
+    train, probe and the statistics all read that one copy.
+
+    1. One aggregate job fills the cache and returns ``n_train``, the
+       train mean μ and the probe's n, Σr and Σr². The global-mean
+       baseline RMSE over all probe rows is
+       ``sqrt((Σr² - 2μΣr + nμ²) / n)``.
+    2. MLlib fits on the train filter of the cached frame.
+    3. ``preds = transform(probe)`` is cached (the caller keeps it and
+       unpersists it) and the RMSE aggregate reads it.
+
+    The flagged frame is released before returning, and also when the
+    fit or the scoring raises.
     """
     from pyspark.ml.recommendation import ALS
 
-    train, probe = ratings.randomSplit([0.8, 0.2], seed=1)
-    # MLlib iterates over train 2×maxIter times — cache for the fit,
-    # release right after (the reference instead re-reads HDFS
-    # SequenceFiles every iteration, ALS/ALS.java:312-327).
-    train = train.cache()
-    # Size the factor blocks to the data: every ALS iteration launches
-    # O(blocks) tasks per side, so the default 10×10 grid pays pure
-    # scheduling overhead on small inputs (4 blocks: 4.1 s → 1.4 s fit
-    # on the 24k-rating fixture). The count also materializes the
-    # cache before the iterative fit. ~250k ratings/block keeps block
-    # state comfortably in executor memory at any scale, capped at the
-    # session's parallelism.
-    n_train = train.count()
-    spark = train.sparkSession
-    blocks = int(
-        min(max(4, n_train // 250_000), spark.sparkContext.defaultParallelism)
+    flagged, train, probe = hash_split(ratings)
+    flagged = flagged.cache()
+    try:
+        p = F.col(_PROBE)
+        r = F.col("rating").cast("double")
+        stats = flagged.agg(
+            F.count(F.when(~p, 1)).alias("n_train"),
+            F.avg(F.when(~p, r)).alias("mu"),
+            F.count(F.when(p, 1)).alias("n_probe"),
+            F.sum(F.when(p, r)).alias("s1"),
+            F.sum(F.when(p, r * r)).alias("s2"),
+        ).collect()[0]
+        # Size the factor blocks to the data: every ALS iteration launches
+        # O(blocks) tasks per side, so the default 10×10 grid pays pure
+        # scheduling overhead on small inputs (4 blocks: 4.1 s → 1.4 s fit
+        # on the 24k-rating fixture). ~250k ratings/block keeps block
+        # state comfortably in executor memory at any scale, capped at the
+        # session's parallelism.
+        n_train = stats["n_train"]
+        spark = flagged.sparkSession
+        blocks = int(
+            min(max(4, n_train // 250_000), spark.sparkContext.defaultParallelism)
+        )
+        model = ALS(
+            rank=rank,
+            maxIter=max_iter,
+            regParam=reg_param,
+            userCol="user_id",
+            itemCol="item_id",
+            ratingCol="rating",
+            coldStartStrategy="drop",
+            seed=seed,
+            numUserBlocks=blocks,
+            numItemBlocks=blocks,
+        ).fit(train)
+
+        # preds is consumed twice (RMSE here + the caller's own action):
+        # cache it and keep it cached for the caller. The RMSE job loads
+        # every partition, so releasing the flagged frame below keeps it.
+        preds = model.transform(probe).cache()
+        err = preds.select((F.col("rating") - F.col("prediction")).alias("err"))
+        rmse = err.agg(F.sqrt(F.avg(F.pow("err", F.lit(2))))).collect()[0][0]
+    finally:
+        flagged.unpersist()
+
+    n, mu = stats["n_probe"], stats["mu"]
+    base_rmse = math.sqrt(
+        max(stats["s2"] - 2 * mu * stats["s1"] + n * mu * mu, 0.0) / n
     )
-    model = ALS(
-        rank=rank,
-        maxIter=max_iter,
-        regParam=reg_param,
-        userCol="user_id",
-        itemCol="item_id",
-        ratingCol="rating",
-        coldStartStrategy="drop",
-        seed=seed,
-        numUserBlocks=blocks,
-        numItemBlocks=blocks,
-    ).fit(train)
-
-    # preds is consumed twice (RMSE here + the caller's own action) and
-    # its lineage re-runs randomSplit + transform each time — cache it
-    # and keep it cached for the caller.
-    preds = model.transform(probe).cache()
-    err = preds.select((F.col("rating") - F.col("prediction")).alias("err"))
-    rmse = err.agg(F.sqrt(F.avg(F.pow("err", F.lit(2))))).collect()[0][0]
-
-    mean = train.agg(F.avg("rating").alias("mu"))
-    base_err = probe.crossJoin(F.broadcast(mean)).select(
-        (F.col("rating") - F.col("mu")).alias("err")
-    )
-    base_rmse = base_err.agg(F.sqrt(F.avg(F.pow("err", F.lit(2))))).collect()[0][0]
-    train.unpersist()
-    return preds, float(rmse), float(base_rmse), model
+    return preds, float(rmse), base_rmse, model
 
 
-#: one fitted pipeline per SparkContext — q_als_fit_predict and
-#: q_als_rmse share a single .fit() (the round-1 version fit twice per
-#: correctness run, VERDICT r1 "What's wrong" #5). Keyed on the
-#: applicationId string (unique per context, never recycled) — the r2
-#: id(jvm object) key could in principle be reused after GC and serve
-#: a dead session's DataFrames to a new one (VERDICT r2 #4).
+#: one fitted pipeline per SparkContext, so q_als_fit_predict,
+#: q_als_rmse and the other q_als_* queries share a single .fit().
+#: Keyed on the applicationId string (unique per context, never
+#: recycled), so a new session never sees a dead session's DataFrames;
+#: at most one session's artifacts are held. The cached predictions
+#: stay valid if evicted: the hash split recomputes the same probe set.
 _PIPELINE_CACHE: dict[str, tuple[DataFrame, float, float, object]] = {}
 
 
@@ -201,7 +254,7 @@ def reference_pipeline(spark: SparkSession, csv_path: str) -> tuple[DataFrame, f
     """The reference's FULL §3.1 workflow, end to end, from raw CSV:
 
         csv scan (A1) → dense-id encode user+item (A7, mapid.py) →
-        seeded 0.8/0.2 split (A8, split.py) → ALS fit/predict
+        seeded 0.8/0.2 hash split (A8, split.py) → ALS fit/predict
         (A9-A13) → RMSE (A14)
 
     — the 23 MapReduce job launches of ``ALS-Hadoop/ALS/ALS.java:
@@ -224,11 +277,17 @@ def pipeline_from_ratings(raw: DataFrame):
     dense-encode → split → fit → RMSE program."""
     from ..functions.ids import dense_ids
 
-    umap = dense_ids(raw, "user_id").withColumnRenamed("dense_id", "u")
-    imap = dense_ids(raw, "item_id").withColumnRenamed("dense_id", "i")
+    # one enumeration encodes both id columns (one pinned shuffle, not two)
+    ids = dense_ids(raw, ["user_id", "item_id"])
+
+    def id_map(col: str, alias: str) -> DataFrame:
+        return ids.filter(F.col("column") == col).select(
+            F.col("key").alias(col), F.col("dense_id").alias(alias)
+        )
+
     encoded = (
-        raw.join(umap, "user_id")
-        .join(imap, "item_id")
+        raw.join(id_map("user_id", "u"), "user_id")
+        .join(id_map("item_id", "i"), "item_id")
         .select(
             F.col("u").cast("int").alias("user_id"),
             F.col("i").cast("int").alias("item_id"),

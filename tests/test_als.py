@@ -3,7 +3,19 @@ reference's own held-out-RMSE gate, ALS-Hadoop/ALS/ALS.java:392-433)."""
 
 from __future__ import annotations
 
-from als_hadoop_spark.operators.als import als_pipeline, synth_ratings
+import pytest
+from pyspark.errors import IllegalArgumentException
+
+from als_hadoop_spark.operators.als import als_pipeline, hash_split, synth_ratings
+
+#: Spark jobs of one reference_pipeline call on the small CSV below
+#: (local[4], 8 shuffle partitions). The two-call dense-id encode,
+#: randomSplit and separate count / mean / baseline jobs took 49.
+REFERENCE_PIPELINE_MAX_JOBS = 28
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_synth_ratings_deterministic_and_bounded(spark):
@@ -43,12 +55,61 @@ def test_reference_pipeline_from_csv(spark, tmp_path):
     )
     path = str(tmp_path / "ratings.csv")
     csv.write.mode("overwrite").option("header", "false").csv(path)
-    preds, rmse, base_rmse, _ = reference_pipeline(spark, path)
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = "test_reference_pipeline_from_csv"
+    sc.setJobGroup(group, "reference_pipeline job count")
+    try:
+        preds, rmse, base_rmse, _ = reference_pipeline(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= REFERENCE_PIPELINE_MAX_JOBS, n_jobs
     assert preds.count() > 0
     assert rmse < base_rmse, f"rmse={rmse} vs global-mean={base_rmse}"
     # dense re-encoding: ids are 0..n-1
     mx = preds.selectExpr("max(user_id) mu", "max(item_id) mi").collect()[0]
     assert mx["mu"] < 150 and mx["mi"] < 80
+    # the pipeline's own cached frame is gone; the caller's preds is the
+    # only thing left to release
+    preds.unpersist()
+    assert _cache_is_empty(spark)
+
+
+def test_failed_fit_leaves_nothing_cached(spark):
+    spark.catalog.clearCache()
+    ratings = synth_ratings(spark, n_users=50, n_items=30, n_ratings=500)
+    with pytest.raises(IllegalArgumentException):
+        als_pipeline(ratings, rank=0)
+    assert _cache_is_empty(spark)
+
+
+def test_hash_split_is_layout_independent(spark):
+    """train and probe evaluated over DIFFERENT partition layouts of
+    the same ratings are disjoint, cover the ratings and keep the
+    0.8/0.2 shares. (randomSplit fails this: its draw follows each
+    partition's RNG stream, so the two layouts share rows.)"""
+    ratings = synth_ratings(spark, n_users=100, n_items=50, n_ratings=3000)
+    _, train, probe = hash_split(ratings.repartition("user_id", "item_id"))
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        train_rows = [tuple(r) for r in train.collect()]
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        probe_rows = [tuple(r) for r in probe.collect()]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    everything = {tuple(r) for r in ratings.collect()}
+    assert not set(train_rows) & set(probe_rows)
+    assert len(train_rows) + len(probe_rows) == len(everything)
+    assert set(train_rows) | set(probe_rows) == everything
+    assert 0.17 < len(probe_rows) / len(everything) < 0.23
 
 
 def test_als_recommend_topk_shape(spark):

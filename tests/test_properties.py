@@ -16,16 +16,35 @@ SETTINGS = dict(
 
 
 @settings(**SETTINGS)
-@given(keys=st.lists(st.integers(-(10**6), 10**6), min_size=1, max_size=40))
-def test_dense_ids_is_sorted_bijection(spark, keys):
+@given(
+    keys=st.lists(st.integers(-(10**6), 10**6), min_size=1, max_size=40),
+    others=st.lists(st.integers(-(10**6), 10**6), min_size=0, max_size=20),
+)
+def test_dense_ids_is_sorted_bijection(spark, keys, others):
     """dense_ids == rank in sorted distinct order, for ANY key multiset
-    (duplicates collapse, negatives sort before positives)."""
+    (duplicates collapse, negatives sort before positives) — and with
+    several key columns, each column's ids are its own sorted-distinct
+    ranks. The second column shares half of the first's values, and
+    1 or 3 partitions make a partition straddle the column boundary."""
     from als_hadoop_spark.functions.ids import dense_ids
 
     df = spark.createDataFrame([(k,) for k in keys], "k LONG")
     got = {r["k"]: r["dense_id"] for r in dense_ids(df, "k", num_partitions=3).collect()}
     want = {k: i for i, k in enumerate(sorted(set(keys)))}
     assert got == want
+
+    col_b = others + keys[: (len(keys) + 1) // 2]
+    n = max(len(keys), len(col_b))
+    rows = [(keys[i % len(keys)], col_b[i % len(col_b)]) for i in range(n)]
+    two = spark.createDataFrame(rows, "a LONG, b LONG")
+    for parts in (1, 3):
+        got = {}
+        for r in dense_ids(two, ["a", "b"], num_partitions=parts).collect():
+            got.setdefault(r["column"], {})[r["key"]] = r["dense_id"]
+        assert got == {
+            c: {k: i for i, k in enumerate(sorted({row[j] for row in rows}))}
+            for j, c in enumerate(("a", "b"))
+        }, parts
 
 
 @settings(**SETTINGS)
