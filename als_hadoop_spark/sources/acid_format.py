@@ -9,8 +9,14 @@ batch source AND sink::
     stream.writeStream.format("acid").option("checkpointLocation", c) \
         .start("/data/orders_acid")   # exactly-once streaming appends
 
-The same table :class:`~als_hadoop_spark.sources.acid.AcidTable`
-drives through its Python API, as an idiomatic Spark format.
+This is the DataFrame-API reader and writer of the table that
+:class:`~als_hadoop_spark.sources.acid.AcidTable` drives through its
+Python API, as an idiomatic Spark format. The SQL front door
+(:mod:`als_hadoop_spark.sql`) does not read through it: its
+``acid.`path``` references are ``AcidTable.snapshot`` views, a JVM
+parquet scan with column pruning. What this reader adds is planning-
+time file skipping from the log's stats and blooms; its cost is that
+every column of every planned row crosses a Python worker.
 
 Why the DataSource WRITER API fits a log-commit table exactly: Spark's
 commit protocol — executors each ``write()`` their partition and return
@@ -37,7 +43,10 @@ Scale design:
   ``snapshot_where`` API gives, now triggered by an ordinary
   ``.filter()`` on the DataFrame (partial pushdown: Spark re-checks
   rows). Schema evolution (rename/drop/widen) applies per file epoch,
-  matching ``AcidTable._assemble``.
+  matching ``AcidTable._assemble``. Column types come from the Spark
+  schema of Spark-written files (INT96 is TIMESTAMP, not a naive
+  timestamp) and from the footer of Arrow-written ones, so columns,
+  order, types and rows match ``AcidTable.snapshot``.
 - IDEMPOTENT WRITES: ``.option("txnAppId", a).option("txnVersion", n)``
   stamps the commit (the Delta recipe); a replayed micro-batch whose
   (app, version) is already in the log SKIPS the commit and removes
@@ -107,6 +116,30 @@ def build_acid_format_source(with_pushdown: bool = True):
             if isinstance(mn, (int, float, str, bool)):
                 out[f.name] = [mn, mx]
         return out
+
+    def _file_schema(path: str, action: dict) -> "pa.Schema":
+        """Arrow schema of one live file in the types its writer meant.
+        Spark writes TIMESTAMP as INT96, which the footer reports as a
+        NAIVE ``timestamp[ns]``; a Spark-written file's own Spark schema
+        — logged on its add-action, else kept in the footer's
+        ``org.apache.spark.sql.parquet.row.metadata`` — types it
+        TIMESTAMP. Arrow-written files (this module's writer) carry no
+        Spark schema and their footer types are exact."""
+        import json
+
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        spark_json = action.get("schema")
+        if spark_json is None:
+            footer = pq.read_schema(path)
+            spark_json = (footer.metadata or {}).get(
+                b"org.apache.spark.sql.parquet.row.metadata"
+            )
+            if spark_json is None:
+                return footer
+        return to_arrow_schema(StructType.fromJson(json.loads(spark_json)))
 
     # ------------------------------------------------------- reader
 
@@ -307,7 +340,12 @@ def build_acid_format_source(with_pushdown: bool = True):
                     [pa.nulls(0, f.type) for f in target], schema=target
                 )
                 return
-            tbl = pq.read_table(partition.path)
+            # INT96 (Spark's TIMESTAMP) reads as naive micros — the
+            # nanosecond default overflows outside 1677–2262 — and the
+            # cast to the target type below makes it UTC-adjusted
+            tbl = pq.read_table(
+                partition.path, coerce_int96_timestamp_unit="us"
+            )
             if partition.dv:
                 # merge-on-read (r11): drop the positions this file's
                 # deletion-vector sidecars name. Positions are row
@@ -631,7 +669,6 @@ def build_acid_format_source(with_pushdown: bool = True):
         def schema(self):
             import os
 
-            import pyarrow.parquet as pq
             from pyspark.sql.pandas.types import from_arrow_schema
 
             path = self.options.get("path")
@@ -647,8 +684,9 @@ def build_acid_format_source(with_pushdown: bool = True):
             ops = st["schema_ops"]
             footers = []
             for fname in sorted(st["live"]):
-                sch = pq.read_schema(os.path.join(path, fname))
-                added = st["live"][fname]["added"]
+                action = st["live"][fname]
+                sch = _file_schema(os.path.join(path, fname), action)
+                added = action["added"]
                 fields = []
                 widen_types = {
                     "int": pa.int32(),
@@ -659,6 +697,11 @@ def build_acid_format_source(with_pushdown: bool = True):
                 for f in sch:
                     name = f.name
                     typ = f.type
+                    if pa.types.is_timestamp(typ) and typ.tz is not None:
+                        # an instant: the writer's session zone ("UTC",
+                        # "Etc/UTC", ...) is display only, and unify
+                        # refuses to merge two zone names
+                        typ = pa.timestamp(typ.unit, "UTC")
                     dropped = False
                     for op in ops:
                         if op["v"] <= added:
@@ -678,12 +721,13 @@ def build_acid_format_source(with_pushdown: bool = True):
                         fields.append(pa.field(name, typ))
                 footers.append(pa.schema(fields))
             unified = pa.unify_schemas(footers, promote_options="permissive")
-            # prefer_timestamp_ntz: a NAIVE footer timestamp must round-
-            # trip as TIMESTAMP_NTZ — the default maps it to tz-aware
+            # prefer_timestamp_ntz: a NAIVE timestamp must round-trip as
+            # TIMESTAMP_NTZ — the default maps it to tz-aware
             # TimestampType, which silently retypes an NTZ table on
-            # read AND poisons later copy-on-write rewrites with
-            # mixed isAdjustedToUTC flags (mergeSchema then refuses
-            # the table — found via the r10 CDC-erosion experiment)
+            # read AND poisons later copy-on-write rewrites with mixed
+            # isAdjustedToUTC flags (mergeSchema then refuses the
+            # table). Spark's INT96 TIMESTAMPs are not naive here:
+            # _file_schema types them from the Spark schema.
             return from_arrow_schema(unified, prefer_timestamp_ntz=True)
 
         def reader(self, schema) -> DataSourceReader:

@@ -1,5 +1,4 @@
-"""SQL statement surface for ACID table management (r10, VERDICT r9
-"what's missing" #5).
+"""SQL statement surface for ACID table management.
 
 A pure-Python DataSource cannot plug Spark's SQL parser or catalog
 (no ``VERSION AS OF`` / ``MERGE INTO`` support reaches a
@@ -11,9 +10,18 @@ API; every other statement passes through to ``spark.sql`` verbatim
 (after time-travel rewriting). The supported grammar is EXACTLY:
 
 - ``... acid.`/path/to/table` [VERSION AS OF <n>] ...`` anywhere in a
-  query: each reference is materialized as a temp view of that
-  snapshot and the reference text is substituted — arbitrary SELECTs
-  (joins, CTEs, windows) over time-traveled ACID tables just work.
+  query: each reference becomes a temp view of
+  ``AcidTable.snapshot(n)`` and the reference text is substituted —
+  arbitrary SELECTs (joins, CTEs, windows, self-joins across versions,
+  a MERGE ``USING (subquery)``) over time-traveled ACID tables just
+  work. Read contract: the view is Spark's own parquet scan of the
+  live files under the logged schema, with the per-epoch schema ops
+  and the deletion-vector anti-join, so Spark prunes it to the
+  referenced columns and pushes row-group filters into its vectorized
+  reader. Whole-file skipping from the log's [min, max] stats and
+  bloom filters is not part of this path; it lives in
+  ``spark.read.format("acid")`` (pushed filters) and
+  ``AcidTable.snapshot_where``.
 - ``MERGE INTO acid.`<path>` [AS <t>] USING <view|(subquery)> [AS <s>]
   ON <t>.<key> = <s>.<key> WHEN MATCHED THEN UPDATE SET * WHEN NOT
   MATCHED THEN INSERT *`` — the canonical upsert (Delta's most common
@@ -26,22 +34,24 @@ API; every other statement passes through to ``spark.sql`` verbatim
 - ``DESCRIBE HISTORY acid.`<path>``` → one row per commit (version,
   operation, n_added, n_removed).
 - ``RESTORE acid.`<path>` TO VERSION AS OF <n>`` → the rollback
-  commit's version (r10: zero-copy live-set rollback, history kept).
+  commit's version (zero-copy: the old live set is republished,
+  history is kept).
 - ``CREATE TABLE acid.`<dest>` SHALLOW CLONE acid.`<src>` [VERSION AS
-  OF <n>]`` → zero-copy table branch (r10).
+  OF <n>]`` → zero-copy table branch.
 - ``ALTER TABLE acid.`<path>` RENAME COLUMN <a> TO <b> | DROP COLUMN
   <c> | ALTER COLUMN <c> TYPE <t> | ADD CONSTRAINT <name> CHECK
   (<expr>)`` → the committed version (log-only schema evolution and
-  CHECK registration, r10).
+  CHECK registration; no data file is rewritten).
 - ``ALTER TABLE acid.`<path>` SET TBLPROPERTIES ('k' = 'v', ...)`` →
-  the committed version (r11; ``'deletionVectors' = 'true'`` flips
-  DELETE/UPDATE/MERGE to merge-on-read).
+  the committed version; every pair lands in one commit
+  (``'deletionVectors' = 'true'`` flips DELETE/UPDATE/MERGE to
+  merge-on-read).
 - ``SHOW TBLPROPERTIES acid.`<path>``` → one (key, value) row per
-  active property (r11).
+  active property.
 - ``DELETE FROM acid.`<path>` [WHERE <pred>]`` → the committed
-  version (r11; no WHERE deletes every row, the SQL semantics).
+  version (no WHERE deletes every row, the SQL semantics).
 - ``UPDATE acid.`<path>` SET <col> = <expr>[, ...] [WHERE <pred>]``
-  → the committed version (r11; assignments evaluate simultaneously
+  → the committed version (assignments evaluate simultaneously
   against the original row — ``SET a=b, b=a`` swaps).
 
 The point is API parity with the SQL text a Delta/Iceberg user already
@@ -49,12 +59,14 @@ writes, not a general parser: anything outside this grammar is either
 passed through untouched (plain SQL) or refused loudly (a MERGE/
 OPTIMIZE/VACUUM variant we'd half-execute). Reference ancestry: the
 reference drives everything from hand-built job mains
-(ALS-Hadoop/ALS/ALS.java:217-331); the SQL front door is this engine's
+(ALS-Hadoop/ALS/ALS.java:217-331) and reads each intermediate matrix
+with the engine's native scan; the SQL front door is this engine's
 equivalent of "the interface users already have."
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -107,7 +119,7 @@ _HISTORY = re.compile(
 )
 
 #: the four ALTER TABLE forms backed by existing AcidTable services —
-#: log-only schema evolution + CHECK constraints (r10 session-2)
+#: log-only schema evolution + CHECK constraints
 _ALTER = re.compile(
     r"^\s*ALTER\s+TABLE\s+acid\.`(?P<path>[^`]+)`\s+(?:"
     r"RENAME\s+COLUMN\s+(?P<old>\w+)\s+TO\s+(?P<new>\w+)"
@@ -225,35 +237,39 @@ def _split_top_level(text: str) -> list[str]:
 
 
 def _register_refs(spark: SparkSession, text: str) -> str:
-    """Materialize every ``acid.`path` [VERSION AS OF n]`` reference as
-    a temp view of that snapshot and substitute the view name — the
-    time-travel rewrite that lets plain ``spark.sql`` run the rest."""
-    from .sources import register_acid_format
+    """Register every ``acid.`path` [VERSION AS OF n]`` reference as a
+    temp view of ``AcidTable(spark, path).snapshot(n)`` and substitute
+    the view name, so plain ``spark.sql`` runs the rest of the text.
+
+    Read contract: the view is the engine's JVM snapshot read — the
+    parquet scan under the schema logged on each add-action, the
+    per-epoch rename/drop/widen ops, and the deletion-vector anti-join.
+    Spark therefore prunes the scan to the referenced columns and
+    pushes row-group filters into the vectorized reader. What the view
+    does not do is skip whole files at planning time from the log's
+    [min, max] stats and bloom filters: that lives in
+    ``spark.read.format("acid")`` (pushed filters) and
+    ``AcidTable.snapshot_where``.
+
+    The view name is the readable squashed path and version plus a
+    digest of the exact (path, version): two paths that squash to the
+    same text (``/data/t.new`` and ``/data/t_new``) get distinct views,
+    so one reference never reads another's snapshot."""
 
     def sub(m: re.Match) -> str:
-        register_acid_format(spark)
-        reader = spark.read.format("acid")
-        v = m.group("version")
-        if v is not None:
-            reader = reader.option("version", int(v))
-        # the readable squashed form PLUS a digest of the exact
-        # (path, version): two paths that normalize identically (e.g.
-        # /data/t.new vs /data/t_new) must not collide into one view —
-        # the second registration would silently hijack the first
-        import hashlib
-
+        path, v = m.group("path"), m.group("version")
         digest = hashlib.blake2b(
-            f"{m.group('path')}\x00{v}".encode(), digest_size=6
+            f"{path}\x00{v}".encode(), digest_size=6
         ).hexdigest()
         name = (
             "acid_ref_"
-            + re.sub(
-                r"\W", "_", f"{m.group('path')}_v{v if v else 'head'}"
-            ).strip("_")
+            + re.sub(r"\W", "_", f"{path}_v{v if v else 'head'}").strip("_")
             + "_"
             + digest
         )
-        reader.load(m.group("path")).createOrReplaceTempView(name)
+        AcidTable(spark, path).snapshot(
+            int(v) if v is not None else None
+        ).createOrReplaceTempView(name)
         return name
 
     return _REF.sub(sub, text)
@@ -373,12 +389,11 @@ def acid_sql(spark: SparkSession, text: str):
         text,
         re.IGNORECASE,
     ) or (
-        # only CLONE statements that actually reference an acid table
-        # (post-r10 advice): a bare \bCLONE\b false-positived on
-        # legitimate pass-through SQL that merely names a column
-        # "clone" (CREATE TABLE t AS SELECT clone FROM s); a CLONE
-        # variant over acid.` refs (DEEP CLONE, extra clauses) must
-        # still refuse rather than half-execute through view rewriting
+        # only CLONE statements that actually reference an acid table:
+        # pass-through SQL that merely names a column "clone" (CREATE
+        # TABLE t AS SELECT clone FROM s) runs, while a CLONE variant
+        # over acid.` refs (DEEP CLONE, extra clauses) refuses rather
+        # than half-executing through view rewriting
         re.match(
             r"^\s*CREATE\s+TABLE\b.*\bCLONE\b",
             text,

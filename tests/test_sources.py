@@ -452,6 +452,73 @@ def test_acid_format_reads_schema_evolved_table(spark, tmp_path):
     assert got == want
 
 
+def test_acid_format_reads_spark_written_timestamp_as_timestamp(
+    spark, tmp_path
+):
+    """Spark writes TIMESTAMP as INT96, which the parquet footer shows
+    as a naive nanosecond timestamp; the format reader must still type
+    the column TIMESTAMP (not TIMESTAMP_NTZ) and return its instants."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from als_hadoop_spark.sources import register_acid_format
+    from als_hadoop_spark.sources.acid import AcidTable
+
+    register_acid_format(spark)
+    p = str(tmp_path / "t")
+    AcidTable(spark, p).append(
+        spark.sql(
+            "SELECT id AS k, timestamp_seconds(id * 86400) AS ts "
+            "FROM range(3)"
+        ).coalesce(1)
+    )
+    got = spark.read.format("acid").load(p)
+    assert got.schema["ts"].dataType == T.TimestampType()
+    assert [r["ts"] for r in got.orderBy("k").collect()] == [
+        dt.datetime(1970, 1, d) for d in (1, 2, 3)
+    ]
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, AcidTable(spark, p).snapshot().collect())
+    )
+
+
+def test_acid_format_reads_timestamps_after_a_rewrite(spark, tmp_path):
+    """A format-written table (Arrow timestamps) whose DELETE rewrote
+    one file through Spark (INT96 timestamps) holds two physical types
+    for one column; the format reader returns the surviving rows. The
+    Arrow files are written under a session zone spelled "Etc/UTC",
+    which their type carries, so the reader also meets two zone names
+    for one instant column."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from als_hadoop_spark.sources import register_acid_format
+    from als_hadoop_spark.sql import acid_sql
+
+    register_acid_format(spark)
+    p = str(tmp_path / "t")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Etc/UTC")
+    try:
+        spark.sql(
+            "SELECT id AS k, timestamp_seconds(id * 3600) AS ts "
+            "FROM range(10)"
+        ).repartitionByRange(2, "k").write.format("acid").mode(
+            "append"
+        ).save(p)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    # rewrites the file holding k < 3 only; the other stays Arrow-written
+    acid_sql(spark, f"DELETE FROM acid.`{p}` WHERE k < 3")
+    got = spark.read.format("acid").load(p)
+    assert got.schema["ts"].dataType == T.TimestampType()
+    assert [(r["k"], r["ts"]) for r in got.orderBy("k").collect()] == [
+        (k, dt.datetime(1970, 1, 1, k)) for k in range(3, 10)
+    ]
+
+
 def test_acid_format_streaming_sink_exactly_once(spark, tmp_path):
     """writeStream.format('acid') (r8): micro-batches commit with
     txn batch = batchId, so a rerun over the same checkpoint adds

@@ -5,6 +5,8 @@ user migrating to this engine writes directly (SURVEY §3: our
 
 from __future__ import annotations
 
+import re
+
 from als_hadoop_spark.sources import load, register_views
 from als_hadoop_spark.sources.tables import read_json
 
@@ -436,3 +438,128 @@ def test_acid_sql_tblproperties_single_commit(spark, tmp_path):
     )
     assert v == before + 1 == t.latest_version()
     assert t.properties() == {"a": "1", "b": "2", "c": "3"}
+
+
+# ------------------------------------------------------------ read contract
+# acid.`p` references read through AcidTable.snapshot, the same JVM
+# parquet scan as the API; format("acid") is the DataFrame-API reader
+
+
+def _parity_tables(spark, tmp_path):
+    """Two tables with the same history, one written by AcidTable.append
+    and one by format("acid") with partitionBy: TIMESTAMP, TIMESTAMP_NTZ,
+    int, bigint and string columns; deletion vectors on; a DELETE, an
+    UPDATE, a rename, a widen, a drop, then an append in the evolved
+    schema. Returns the two paths and the version right after the
+    DELETE (before any schema op)."""
+    from als_hadoop_spark.sources import register_acid_format
+    from als_hadoop_spark.sources.acid import AcidTable
+    from als_hadoop_spark.sql import acid_sql
+
+    register_acid_format(spark)
+    first = spark.sql(
+        "SELECT id AS k, CAST(id % 3 AS STRING) AS part, "
+        "CAST(id * 10 AS INT) AS n, timestamp_seconds(id * 3600) AS ts, "
+        "CAST(timestamp_seconds(id * 60) AS TIMESTAMP_NTZ) AS ntz, "
+        "concat('s', id) AS s, concat('x', id) AS extra FROM range(12)"
+    ).repartition(2, "k")
+    later = spark.sql(
+        "SELECT id AS k, CAST(id % 3 AS STRING) AS part, "
+        "id * 1000000000000 AS n, timestamp_seconds(id * 7200) AS ts, "
+        "CAST(timestamp_seconds(id) AS TIMESTAMP_NTZ) AS ntz, "
+        "concat('l', id) AS label FROM range(20, 24)"
+    ).coalesce(1)
+    paths = (str(tmp_path / "api"), str(tmp_path / "fmt"))
+    for p in paths:
+        if p.endswith("api"):
+            AcidTable(spark, p).append(first)
+        else:
+            first.write.format("acid").option("partitionBy", "part").mode(
+                "append"
+            ).save(p)
+        t = f"acid.`{p}`"
+        acid_sql(
+            spark,
+            f"ALTER TABLE {t} SET TBLPROPERTIES ('deletionVectors' = 'true')",
+        )
+        deleted = acid_sql(spark, f"DELETE FROM {t} WHERE k % 5 = 0")
+        acid_sql(spark, f"UPDATE {t} SET n = n + 1 WHERE k = 7")
+        acid_sql(spark, f"ALTER TABLE {t} RENAME COLUMN s TO label")
+        acid_sql(spark, f"ALTER TABLE {t} ALTER COLUMN n TYPE bigint")
+        acid_sql(spark, f"ALTER TABLE {t} DROP COLUMN extra")
+        if p.endswith("api"):
+            AcidTable(spark, p).append(later)
+        else:
+            later.write.format("acid").option("partitionBy", "part").mode(
+                "append"
+            ).save(p)
+    return paths, deleted
+
+
+def test_acid_readers_agree(spark, tmp_path):
+    """The front door, format("acid") and AcidTable.snapshot return the
+    same columns, in the same order, with the same types and rows — at
+    head and at an older version, for an API-written and a
+    format-written partitioned table."""
+    from als_hadoop_spark.sources.acid import AcidTable
+    from als_hadoop_spark.sql import acid_sql
+
+    paths, old = _parity_tables(spark, tmp_path)
+    for p in paths:
+        for v in (None, old):
+            travel = "" if v is None else f" VERSION AS OF {v}"
+            reader = spark.read.format("acid")
+            if v is not None:
+                reader = reader.option("version", v)
+            frames = {
+                "sql": acid_sql(spark, f"SELECT * FROM acid.`{p}`{travel}"),
+                "format": reader.load(p),
+                "snapshot": AcidTable(spark, p).snapshot(v),
+            }
+            shapes = {
+                k: [(f.name, f.dataType.simpleString()) for f in df.schema]
+                for k, df in frames.items()
+            }
+            rows = {
+                k: sorted(map(tuple, df.collect()), key=lambda r: r[0])
+                for k, df in frames.items()
+            }
+            want_cols = (
+                ["k", "part", "n", "ts", "ntz", "label"]
+                if v is None
+                else ["k", "part", "n", "ts", "ntz", "s", "extra"]
+            )
+            assert [c for c, _ in shapes["snapshot"]] == want_cols, (p, v)
+            assert dict(shapes["snapshot"])["ts"] == "timestamp"
+            assert dict(shapes["snapshot"])["ntz"] == "timestamp_ntz"
+            assert shapes["sql"] == shapes["format"] == shapes["snapshot"], (
+                p, v, shapes,
+            )
+            assert rows["sql"] == rows["format"] == rows["snapshot"], (p, v)
+            # 12 rows, k = 0, 5 and 10 deleted; at head plus 4 appended
+            assert len(rows["snapshot"]) == (13 if v is None else 9)
+
+
+def test_acid_sql_read_prunes_columns_in_the_jvm(spark, tmp_path):
+    """An aggregate over two columns of a wider table plans a parquet
+    scan of just those columns, with no Python data-source scan."""
+    from als_hadoop_spark.sources.acid import AcidTable
+    from als_hadoop_spark.sql import acid_sql
+
+    p = str(tmp_path / "t")
+    AcidTable(spark, p).append(
+        spark.sql(
+            "SELECT id AS k, id % 3 AS g, CAST(id * 2 AS DOUBLE) AS v, "
+            "'x' AS s, timestamp_seconds(id) AS ts FROM range(30)"
+        )
+    )
+    df = acid_sql(spark, f"SELECT g, sum(v) AS t FROM acid.`{p}` GROUP BY g")
+    assert sorted(map(tuple, df.collect())) == [
+        (0, 270.0), (1, 290.0), (2, 310.0),
+    ]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the parent's Python source printed "BatchScan acid[...] (Python)"
+    assert "(Python)" not in plan and "BatchScan acid" not in plan, plan
+    # the initial and the final AQE plan each print the scan once
+    schemas = set(re.findall(r"ReadSchema: (struct<[^>]*>)", plan))
+    assert schemas == {"struct<g:bigint,v:double>"}, plan
