@@ -143,38 +143,6 @@ class ConstraintViolation(Exception):
     commit was aborted and nothing was published."""
 
 
-def _footer_stats(path: str) -> dict:
-    """Per-column [min, max] from the parquet footer the writer already
-    produced — no data re-read. Only JSON-comparable scalar types are
-    kept (int/float/str/bool); anything else is simply absent, which
-    the pruner treats conservatively (file kept)."""
-    import pyarrow.parquet as pq
-
-    md = pq.read_metadata(path)
-    mins: dict = {}
-    maxs: dict = {}
-    for rg in range(md.num_row_groups):
-        row = md.row_group(rg)
-        for ci in range(row.num_columns):
-            col = row.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            name = col.path_in_schema
-            try:
-                mn, mx = st.min, st.max
-            except Exception:
-                # pyarrow can't extract min/max for some logical types
-                # (e.g. small decimals) — stats are an optimization,
-                # the pruner treats a statless column conservatively
-                continue
-            if "." in name or not isinstance(mn, (int, float, str, bool)):
-                continue
-            mins[name] = mn if name not in mins else min(mins[name], mn)
-            maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-    return {k: [mins[k], maxs[k]] for k in mins}
-
-
 #: parsed-schema memo for _merge_schema_jsons — schema JSON strings
 #: repeat across every read of a table, so parse each distinct one once
 _SCHEMA_PARSE_CACHE: dict = {}
@@ -237,6 +205,15 @@ def _merge_schema_jsons(jsons: list):
             if name not in names and not fields[name].nullable:
                 fields[name] = T.StructField(name, fields[name].dataType, True)
     return T.StructType([fields[n] for n in order])
+
+
+def _range_conjuncts(col: str, lo, hi) -> list[tuple]:
+    """``col`` in [lo, hi] (None: an open end) as
+    ``acid_log.prune_files`` conjuncts; ``lo == hi`` is an equality,
+    so a point lookup also consults the files' blooms."""
+    if lo is not None and lo == hi:
+        return [(col, "=", lo)]
+    return [(col, op, v) for op, v in ((">=", lo), ("<=", hi)) if v is not None]
 
 
 def _copy_state(state: dict) -> dict:
@@ -547,7 +524,7 @@ class AcidTable:
             if name.startswith("part-") and name.endswith(".parquet"):
                 final = f"{token}-{i:05d}.parquet"
                 src = os.path.join(stage, name)
-                stats = _footer_stats(src) if harvest_stats else {}
+                stats = acid_log.footer_stats(src) if harvest_stats else {}
                 blooms = (
                     acid_log.file_blooms(src, bloom_cols) if bloom_cols else {}
                 )
@@ -886,15 +863,18 @@ class AcidTable:
         caller owns the WHEN MATCHED/NOT MATCHED semantics — e.g. the
         q_merge_upsert fold); rows of untouched files never move.
 
-        Touched-file discovery is two-stage: (1) the change keys'
-        [min, max] (one tiny agg) prunes candidate files through the
-        commit log's per-file stats — files whose key range can't
-        intersect are never opened; (2) only the candidates are scanned
-        and semi-joined against the distinct change keys (no forced
-        broadcast — AQE picks the join strategy from the actual change
-        size, so a backfill-sized change set doesn't OOM a broadcast).
-        A selective MERGE on a range-clustered table therefore reads
-        O(matching files), not O(table).
+        Touched-file discovery is two-stage: (1) the commit log prunes
+        candidate files (``acid_log.prune_files``) — by ``key IN
+        (...)`` when the change set has at most 64 distinct non-NULL
+        keys on a table with blooms (partition values, [min, max] and
+        blooms all apply), else by the change keys' [min, max] (one
+        tiny agg) — so files that cannot hold a change key are never
+        opened; (2) only the candidates are scanned and semi-joined
+        against the distinct change keys (no forced broadcast — AQE
+        picks the join strategy from the actual change size, so a
+        backfill-sized change set doesn't OOM a broadcast). A
+        selective MERGE on a range-clustered or bloom'd table
+        therefore reads O(matching files), not O(table).
 
         ``cdf=True`` additionally stages a CDC sidecar under
         ``_acid_cdc/`` with the precise row-level change set (update
@@ -920,17 +900,8 @@ class AcidTable:
         Snapshot-isolated: raises CommitConflict if the table head
         moved between the snapshot read and the commit.
 
-        r11 measurement note (guide §5): persisting ``changes`` for
-        the transaction was A/B'd and REJECTED — the cache
-        materialization barrier cost more than the recompute it saved
-        on every acid query (six-query bench 27.8 s → 39.0 s with the
-        persist), because each consumer's fused whole-stage plan over
-        the small change batch is cheaper than a cache write + read.
-        What stayed: on bloom'd tables the bounded key collect (which
-        the bloom probe needed anyway) now also derives the
-        stats-prune bounds, so a CDC-sized merge pays ONE bounded job
-        instead of two; bloom-less tables keep the single min/max agg
-        unchanged."""
+        ``changes`` is not persisted: each consumer's fused plan over a
+        small change batch is cheaper than a cache write and read."""
         base = self.latest_version()
         state = self._state(base)
         mode = self._resolve_mode(mode, state)
@@ -942,30 +913,19 @@ class AcidTable:
             ks: list = []
             has_blooms = any(a.get("bloom") for a in state["live"].values())
             if has_blooms:
-                # ONE bounded job serves both pruning stages for the
-                # common CDC-sized batch: <= 64 distinct keys yield the
-                # stats bounds (min/max of the keys, computed here) AND
-                # the per-key bloom probe. limit-under-aggregate, not
-                # limit().collect(): CollectLimit executes incrementally
-                # (1 partition, then 4x more, ...) and costs several
-                # jobs when the first partitions come up short.
-                # NULL keys are excluded BEFORE the limit (r12, VERDICT
-                # r11 #1): a NULL never matches an equi semi-join or a
-                # bloom probe, but if it occupied one of the 65 sampled
-                # slots, collect_list would silently drop it and a
-                # 65-distinct-non-NULL-key batch could masquerade as 64
-                # — probing an incomplete key set and pruning files
-                # that hold the missing key. Filtering first makes the
-                # 65th slot count only probe-relevant keys.
-                # Trade-off (kept deliberately, see ADVICE r11): a
-                # backfill-sized batch on a bloom'd table pays this
-                # bounded distinct pass AND the min/max fallback below
-                # — two passes over `changes` where pre-r11 paid one.
-                # The batch-size cases are asymmetric: the CDC-sized
-                # batch (every declared acid query; the latency-bound
-                # case) saves a whole job, while the backfill batch's
-                # extra distinct pass is noise next to the file
-                # rewrite it is about to do.
+                # ONE bounded job: <= 64 distinct non-NULL keys are the
+                # IN list the pruner probes blooms with.
+                # limit-under-aggregate, not limit().collect():
+                # CollectLimit runs incrementally and costs several
+                # jobs when the first partitions come up short. NULL
+                # keys go BEFORE the limit: a NULL never matches the
+                # semi-join or a bloom, and one in the 65 sampled
+                # slots would let a 65-key batch pass as 64 and prune
+                # files holding the missing key. A larger batch pays
+                # this pass AND the [min, max] agg below; kept because
+                # the CDC-sized batch, the latency-bound case, saves a
+                # job while a backfill's extra pass is noise next to
+                # its file rewrite.
                 row = (
                     keys.where(F.col(key).isNotNull())
                     .limit(65)
@@ -974,15 +934,11 @@ class AcidTable:
                 )
                 ks = row["k"] or []
             if ks and len(ks) <= 64:
-                lo, hi = min(ks), max(ks)  # collect_list skips NULLs
-                # the bounded collect just PROVED the distinct non-NULL
-                # key set is exactly `ks` — swap the semi-join side for
-                # a driver-local 64-row frame so touched-file discovery
-                # doesn't replan and re-execute the caller's whole
-                # change pipeline a second time (r12, guide §2.4: the
-                # literal side broadcasts for free). NULL keys never
-                # match an equi semi-join, so dropping them from the
-                # frame changes nothing for any consumer.
+                conjuncts = [(key, "IN", tuple(ks))]
+                # the bounded collect proved the distinct non-NULL key
+                # set is exactly `ks`: a driver-local frame replaces
+                # the semi-join side, so touched-file discovery does
+                # not re-execute the caller's change pipeline
                 keys = self.spark.createDataFrame(
                     [(k,) for k in ks], keys.schema
                 )
@@ -990,37 +946,8 @@ class AcidTable:
                 bounds = changes.agg(
                     F.min(key).alias("lo"), F.max(key).alias("hi")
                 ).first()
-                lo, hi = bounds["lo"], bounds["hi"]
-            candidates = self._files_where(state, key, lo, hi)
-            # a SMALL change-key set tests each candidate's bloom
-            # against every key (r10): a CDC batch of k keys on a
-            # bloom'd table scans O(files holding those keys), not
-            # O(files overlapping [min, max]) — which for random keys
-            # is the whole table. Larger sets fall back to the
-            # stats-range candidates unchanged.
-            if (
-                len(candidates) > 1
-                and 0 < len(ks) <= 64
-                and any(
-                    state["live"][f].get("bloom") for f in candidates
-                )
-            ):
-                candidates = [
-                    f
-                    for f in candidates
-                    if (
-                        lambda bl: bl is None
-                        or any(acid_log.bloom_maybe_contains(bl, v) for v in ks)
-                    )(
-                        (state["live"][f].get("bloom") or {}).get(
-                            acid_log.physical_name(
-                                key,
-                                state["live"][f]["added"],
-                                state["schema_ops"],
-                            )
-                        )
-                    )
-                ]
+                conjuncts = _range_conjuncts(key, bounds["lo"], bounds["hi"])
+            candidates = acid_log.prune_files(state, conjuncts)
             if candidates and mode == "cow":
                 # file discovery rides the __acid_base helper column
                 # (NOT input_file_name(), which rejects the multi-
@@ -1086,9 +1013,8 @@ class AcidTable:
         DV anti-join in ``_assemble``; OPTIMIZE materializes.
         ``keys`` is merge()'s single-column distinct-key frame (its
         one column IS the merge key), built once in merge() and shared
-        with the cow path; it is recomputed lazily per consumer —
-        persisting the change batch was A/B'd and REJECTED (r11, see
-        merge()'s measurement note)."""
+        with the cow path; it is recomputed lazily per consumer, like
+        the unpersisted change batch (merge())."""
         key = keys.columns[0]
         sidecars: list[str] = []
         dv_files: dict = {}
@@ -2036,33 +1962,6 @@ class AcidTable:
             )
         return self._assemble(state)
 
-    def _files_where(self, state: dict, col: str, lo=None, hi=None) -> list[str]:
-        point = lo is not None and lo == hi  # equality probe
-        out = []
-        ops = state["schema_ops"]
-        for path, action in sorted(state["live"].items()):
-            phys = acid_log.physical_name(col, action["added"], ops)
-            # a POINT lookup consults the file's bloom too (r10): on a
-            # non-clustered high-cardinality key the [min, max] check
-            # keeps nearly every file, the bloom keeps ~1 — this is
-            # what makes a single-key MERGE touch O(1) files instead
-            # of O(table) on a bloom'd CDC table
-            if point:
-                bl = (action.get("bloom") or {}).get(phys)
-                if bl is not None and not acid_log.bloom_maybe_contains(bl, lo):
-                    continue
-            s = action["stats"].get(phys)
-            if s is None or s[0] is None or s[1] is None:
-                out.append(path)
-                continue
-            mn, mx = s
-            if lo is not None and mx < lo:
-                continue
-            if hi is not None and mn > hi:
-                continue
-            out.append(path)
-        return out
-
     def files_where(
         self,
         col: str,
@@ -2070,12 +1969,16 @@ class AcidTable:
         hi=None,
         version: int | None = None,
     ) -> list[str]:
-        """Live file names whose logged [min, max] for ``col`` can
-        intersect [lo, hi] — log-level data skipping: the decision
-        uses only the commit log, no file is listed or opened. Files
-        without stats for ``col`` are conservatively kept; renamed
-        columns are translated to each file's physical name first."""
-        return self._files_where(self._state(version), col, lo, hi)
+        """Live file names that may hold a row with ``col`` in [lo, hi]
+        (None: an open end) — log-level data skipping through
+        ``acid_log.prune_files``: no file is listed or opened. Renamed
+        columns are translated to each file's physical name; a file
+        is kept when the log cannot rule it out (no stats, a
+        cross-type or NaN comparison). ``lo == hi`` is a point lookup
+        that also consults blooms."""
+        return acid_log.prune_files(
+            self._state(version), _range_conjuncts(col, lo, hi)
+        )
 
     def snapshot_where(
         self,
@@ -2091,7 +1994,7 @@ class AcidTable:
         snapshot schema (columns living only in pruned-out files come
         back as NULL), so pruning never narrows the shape."""
         state = self._state(version)
-        files = self._files_where(state, col, lo, hi)
+        files = acid_log.prune_files(state, _range_conjuncts(col, lo, hi))
         full = self._assemble(state)  # lazy: used for schema alignment
         if not files:
             return full.limit(0)

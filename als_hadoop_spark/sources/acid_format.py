@@ -34,19 +34,19 @@ Scale design:
 
 - WRITE: data never moves after the task writes it — no staging
   rename pass, no driver IO; per-file [min, max] stats are computed
-  executor-side from the in-memory Arrow table and travel in the
-  commit message (KBs), so the log entry carries pruning stats with
-  ZERO extra reads.
+  executor-side from the in-memory Arrow table
+  (``acid_log.write_data_file``) and travel in the commit message
+  (KBs), so the log entry carries pruning stats with ZERO extra reads.
 - READ: planning replays the log (KBs of JSON) and emits one
-  InputPartition per live file; ``pushFilters`` prunes ENTIRE FILES at
-  planning time from the log's per-file stats — the same skip the
-  ``snapshot_where`` API gives, now triggered by an ordinary
-  ``.filter()`` on the DataFrame (partial pushdown: Spark re-checks
-  rows). Schema evolution (rename/drop/widen) applies per file epoch,
-  matching ``AcidTable._assemble``. Column types come from the Spark
-  schema of Spark-written files (INT96 is TIMESTAMP, not a naive
-  timestamp) and from the footer of Arrow-written ones, so columns,
-  order, types and rows match ``AcidTable.snapshot``.
+  InputPartition per live file that ``acid_log.prune_files`` keeps for
+  the pushed =, IN, <, <=, >, >= filters — the same decision
+  ``AcidTable.snapshot_where`` and MERGE make, triggered by an
+  ordinary ``.filter()`` on the DataFrame (partial pushdown: Spark
+  re-checks rows). Schema evolution (rename/drop/widen) applies per
+  file epoch, matching ``AcidTable._assemble``. Column types come from
+  the Spark schema of Spark-written files (INT96 is TIMESTAMP, not a
+  naive timestamp) and from the footer of Arrow-written ones, so
+  columns, order, types and rows match ``AcidTable.snapshot``.
 - IDEMPOTENT WRITES: ``.option("txnAppId", a).option("txnVersion", n)``
   stamps the commit (the Delta recipe); a replayed micro-batch whose
   (app, version) is already in the log SKIPS the commit and removes
@@ -94,28 +94,14 @@ def build_acid_format_source(with_pushdown: bool = True):
         WriterCommitMessage,
     )
 
-    def _footer_stats_of(table: "pa.Table") -> dict:
-        """[min, max] per JSON-scalar column of the IN-MEMORY Arrow
-        table the task is about to write — no file re-read."""
-        import pyarrow.compute as pc
-
-        out = {}
-        for f in table.schema:
-            if not (
-                pa.types.is_integer(f.type)
-                or pa.types.is_floating(f.type)
-                or pa.types.is_string(f.type)
-                or pa.types.is_boolean(f.type)
-            ):
-                continue
-            col = table.column(f.name)
-            if col.null_count == len(col):
-                continue
-            mm = pc.min_max(col)
-            mn, mx = mm["min"].as_py(), mm["max"].as_py()
-            if isinstance(mn, (int, float, str, bool)):
-                out[f.name] = [mn, mx]
-        return out
+    _PUSHED_OPS = {
+        EqualTo: "=",
+        In: "IN",
+        LessThan: "<",
+        LessThanOrEqual: "<=",
+        GreaterThan: ">",
+        GreaterThanOrEqual: ">=",
+    }
 
     def _file_schema(path: str, action: dict) -> "pa.Schema":
         """Arrow schema of one live file in the types its writer meant.
@@ -148,7 +134,7 @@ def build_acid_format_source(with_pushdown: bool = True):
         path: str  # absolute parquet path
         ops: tuple  # schema ops applicable to this file, oldest first
         schema: object = field(default=None)  # target pa.Schema
-        dv: tuple = ()  # absolute deletion-vector sidecar paths (r11)
+        dv: tuple = ()  # absolute deletion-vector sidecar paths
 
     class AcidReader(DataSourceReader):
         def __init__(self, options, schema):
@@ -160,50 +146,18 @@ def build_acid_format_source(with_pushdown: bool = True):
             v = options.get("version")
             self.version = int(v) if v is not None else None
             self._arrow_schema = to_arrow_schema(schema)
-            self._bounds: dict = {}  # col -> [lo, hi]
-            self._in_sets: dict = {}  # col -> set of allowed values
-            self._eq: dict = {}  # col -> set of REQUIRED values (bloom)
+            self._conjuncts: list = []  # (column, op, value)
 
         def _push_filters(self, filters):
+            """Collect each single-column comparison as a conjunct for
+            :func:`~als_hadoop_spark.sources.acid_log.prune_files` and
+            yield every filter back: files are pruned at planning time,
+            Spark still re-checks every row."""
             for f in filters:
                 attr = getattr(f, "attribute", None)
-                if not (isinstance(attr, tuple) and len(attr) == 1):
-                    yield f
-                    continue
-                col = attr[0]
-                if isinstance(f, In):
-                    vals = f.value
-                    if all(
-                        isinstance(v, (int, float, str, bool)) for v in vals
-                    ):
-                        # col IN (...): intersect with any earlier set
-                        # (a file survives only if it can hold SOME
-                        # listed value). One non-scalar value makes
-                        # the whole list unprunable — a file could
-                        # match that value.
-                        s = set(vals)
-                        prev = self._in_sets.get(col)
-                        self._in_sets[col] = s if prev is None else prev & s
-                    yield f
-                    continue
-                val = getattr(f, "value", None)
-                if not isinstance(val, (int, float, str, bool)):
-                    yield f
-                    continue
-                b = self._bounds.setdefault(col, [None, None])
-                if isinstance(f, EqualTo):
-                    b[0] = val if b[0] is None else max(b[0], val)
-                    b[1] = val if b[1] is None else min(b[1], val)
-                    # every pushed equality must hold — a file whose
-                    # bloom rules ANY of them out is skippable
-                    self._eq.setdefault(col, set()).add(val)
-                elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    b[0] = val if b[0] is None else max(b[0], val)
-                elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    b[1] = val if b[1] is None else min(b[1], val)
-                # partial pushdown: files are pruned here, Spark still
-                # re-checks every row (exact contract — also covers the
-                # strict/non-strict inequality difference)
+                op = _PUSHED_OPS.get(type(f))
+                if op and isinstance(attr, tuple) and len(attr) == 1:
+                    self._conjuncts.append((attr[0], op, f.value))
                 yield f
 
         def partitions(self):
@@ -212,101 +166,8 @@ def build_acid_format_source(with_pushdown: bool = True):
             st = acid_log.replay(self.path, self.version)
             ops = st["schema_ops"]
             parts = []
-            for fname in sorted(st["live"]):
+            for fname in acid_log.prune_files(st, self._conjuncts):
                 action = st["live"][fname]
-                skip = False
-                part = action.get("partition") or {}
-                for col, vset in self._in_sets.items():
-                    # col IN (...) — partition value must be listed;
-                    # stats keep the file iff SOME listed value fits
-                    # [mn, mx]. This is what turns the ANN serve path's
-                    # cell IN (probed) into nprobe/K planned files.
-                    phys = acid_log.physical_name(col, action["added"], ops)
-                    if phys in part:
-                        v = part[phys]
-                        if v is None or v not in vset:
-                            skip = True
-                            break
-                        continue
-                    s = action["stats"].get(phys)
-                    if s is None or s[0] is None or s[1] is None:
-                        continue
-                    mn, mx = s
-                    try:
-                        if not any(mn <= v <= mx for v in vset):
-                            skip = True
-                            break
-                    except TypeError:
-                        continue  # cross-type compare: keep the file
-                if skip:
-                    continue
-                for col, (lo, hi) in self._bounds.items():
-                    phys = acid_log.physical_name(col, action["added"], ops)
-                    if phys in part:
-                        # PARTITION ELIMINATION (r9) — before stats:
-                        # the file holds ONLY rows with this exact
-                        # partition value (the writer split by value),
-                        # so the decision is exact, not conservative.
-                        # A NULL partition value satisfies no SQL
-                        # comparison → eliminated under any bound
-                        # (Spark re-checks rows — partial pushdown —
-                        # so elimination only ever drops files with
-                        # zero qualifying rows).
-                        v = part[phys]
-                        try:
-                            if v is None or (
-                                (lo is not None and v < lo)
-                                or (hi is not None and v > hi)
-                            ):
-                                skip = True
-                                break
-                        except TypeError:
-                            pass  # cross-type compare: fall to stats
-                        else:
-                            continue  # exact verdict: stats redundant
-                    s = action["stats"].get(phys)
-                    if s is None or s[0] is None or s[1] is None:
-                        continue  # no stats: keep the file
-                    mn, mx = s
-                    try:
-                        if (lo is not None and mx < lo) or (
-                            hi is not None and mn > hi
-                        ):
-                            skip = True
-                            break
-                    except TypeError:
-                        continue  # cross-type compare: keep the file
-                if skip:
-                    continue
-                # BLOOM consult (r10) — after partition elimination
-                # and min/max: point lookups on high-cardinality
-                # NON-clustered keys are exactly where [min, max]
-                # stats are decorative (every file overlaps) and a
-                # per-file bloom is decisive. False = definitely
-                # absent; anything else keeps the file.
-                blooms = action.get("bloom") or {}
-                if blooms:
-                    for col, vals in self._eq.items():
-                        bl = blooms.get(
-                            acid_log.physical_name(col, action["added"], ops)
-                        )
-                        if bl and any(
-                            not acid_log.bloom_maybe_contains(bl, v) for v in vals
-                        ):
-                            skip = True
-                            break
-                    if not skip:
-                        for col, vset in self._in_sets.items():
-                            bl = blooms.get(
-                                acid_log.physical_name(col, action["added"], ops)
-                            )
-                            if bl and not any(
-                                acid_log.bloom_maybe_contains(bl, v) for v in vset
-                            ):
-                                skip = True
-                                break
-                if skip:
-                    continue
                 ap = os.path.join(self.path, fname)
                 if not os.path.exists(ap):
                     raise ValueError(
@@ -347,7 +208,7 @@ def build_acid_format_source(with_pushdown: bool = True):
                 partition.path, coerce_int96_timestamp_unit="us"
             )
             if partition.dv:
-                # merge-on-read (r11): drop the positions this file's
+                # merge-on-read: drop the positions this file's
                 # deletion-vector sidecars name. Positions are row
                 # indices in FILE order — exactly pyarrow's read order
                 # — so a boolean mask applies them without any join.
@@ -443,7 +304,6 @@ def build_acid_format_source(with_pushdown: bool = True):
 
             import pyarrow as pa
             import pyarrow.compute as pc
-            import pyarrow.parquet as pq
 
             batches = [b for b in iterator if b.num_rows]
             if not batches:
@@ -452,8 +312,10 @@ def build_acid_format_source(with_pushdown: bool = True):
             os.makedirs(self.path, exist_ok=True)
             if not self.partition_cols:
                 name = f"w-{uuid.uuid4().hex}.parquet"
-                pq.write_table(tbl, os.path.join(self.path, name))
-                add = {"path": name, "stats": _footer_stats_of(tbl)}
+                stats = acid_log.write_data_file(
+                    tbl, os.path.join(self.path, name)
+                )
+                add = {"path": name, "stats": stats}
                 if self.bloom_cols:
                     blooms = acid_log.blooms_of(tbl, self.bloom_cols)
                     if blooms:
@@ -516,10 +378,12 @@ def build_acid_format_source(with_pushdown: bool = True):
                 )
                 os.makedirs(os.path.join(self.path, seg), exist_ok=True)
                 name = f"{seg}/w-{uuid.uuid4().hex}.parquet"
-                pq.write_table(part_tbl, os.path.join(self.path, name))
+                stats = acid_log.write_data_file(
+                    part_tbl, os.path.join(self.path, name)
+                )
                 add = {
                     "path": name,
-                    "stats": _footer_stats_of(part_tbl),
+                    "stats": stats,
                     "partition": {c: combo[c] for c in self.partition_cols},
                 }
                 if self.bloom_cols:

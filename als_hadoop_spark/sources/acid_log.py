@@ -12,6 +12,11 @@ its core):
   state at ``version``, and ``_acid_log/_last_checkpoint`` pointing at
   the newest one; :func:`replay` loads it and folds only the suffix.
 
+It also holds the one file-skipping decision: the producers of each
+add-action's ``stats`` (:func:`footer_stats`, :func:`table_stats`) and
+blooms, and :func:`prune_files`, the only code that relies on what
+they promise.
+
 This module imports only the standard library and pyarrow, and the
 source factories register it for cloudpickle's pickling BY VALUE: the
 Python DataSource classes reach it from Python workers that do not
@@ -364,6 +369,10 @@ def bloom_maybe_contains(bloom: dict, value) -> bool:
 
     if value is None or _bloom_tag(value) != bloom.get("t"):
         return True
+    if isinstance(value, float) and (value == 0.0 or value != value):
+        # the bits hashed are raw IEEE: -0.0 and 0.0 differ, as do NaN
+        # payloads, while Spark holds -0.0 = 0.0 and NaN = NaN
+        return True
     hs = _bloom_hashes(value)
     if hs is None:
         return True
@@ -412,3 +421,191 @@ def file_blooms(path: str, cols) -> dict:
         return blooms_of(pq.read_table(path, columns=want), want)
     except OSError:
         return {}
+
+
+# ---------------------------------------------------- stats and pruning
+
+
+def footer_stats(path: str) -> dict:
+    """Per-column [min, max] from the parquet footer the writer already
+    produced — no data re-read. Only JSON-comparable scalar types are
+    kept (int/float/str/bool); anything else is simply absent, which
+    :func:`prune_files` treats conservatively (file kept). A Spark-
+    written footer orders NaN above every number, so a float column
+    holding NaN logs NaN as its max — a NaN bound that keeps the file —
+    and the fold over row groups keeps that NaN."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    mins: dict = {}
+    maxs: dict = {}
+    for rg in range(md.num_row_groups):
+        row = md.row_group(rg)
+        for ci in range(row.num_columns):
+            col = row.column(ci)
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                continue
+            name = col.path_in_schema
+            try:
+                mn, mx = st.min, st.max
+            except Exception:
+                # pyarrow can't extract min/max for some logical types
+                # (e.g. small decimals) — stats are an optimization,
+                # the pruner treats a statless column conservatively
+                continue
+            if "." in name or not isinstance(mn, (int, float, str, bool)):
+                continue
+            if name in mins:
+                mn = min(mins[name], mn, key=_nan_last)
+                mx = max(maxs[name], mx, key=_nan_last)
+            mins[name], maxs[name] = mn, mx
+    return {k: [mins[k], maxs[k]] for k in mins}
+
+
+def _nan_last(value) -> tuple:
+    """Sort key that puts NaN above every number, as Spark orders it."""
+    return (value != value, value)
+
+
+def _nan_columns(table) -> set:
+    """Names of the float columns of an Arrow table that hold NaN."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return {
+        f.name
+        for f in table.schema
+        if pa.types.is_floating(f.type)
+        and pc.any(pc.is_nan(table.column(f.name))).as_py()
+    }
+
+
+def table_stats(table) -> dict:
+    """[min, max] per JSON-scalar column of an IN-MEMORY Arrow table —
+    no file re-read. Arrow's ``min_max`` skips NaN, so a float column
+    holding NaN logs no stats: its bounds would rule out the NaN rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    nan = _nan_columns(table)
+    out = {}
+    for f in table.schema:
+        if f.name in nan or not (
+            pa.types.is_integer(f.type)
+            or pa.types.is_floating(f.type)
+            or pa.types.is_string(f.type)
+            or pa.types.is_boolean(f.type)
+        ):
+            continue
+        col = table.column(f.name)
+        if col.null_count == len(col):
+            continue
+        mm = pc.min_max(col)
+        mn, mx = mm["min"].as_py(), mm["max"].as_py()
+        if isinstance(mn, (int, float, str, bool)):
+            out[f.name] = [mn, mx]
+    return out
+
+
+def write_data_file(table, path: str) -> dict:
+    """Write an Arrow table as the parquet data file ``path`` and return
+    its :func:`table_stats`. The footer leaves out the statistics of a
+    float column holding NaN for the same reason the log does: parquet
+    writers skip NaN in min/max, and Spark's row-group filter trusts
+    the footer."""
+    import pyarrow.parquet as pq
+
+    nan = _nan_columns(table)
+    pq.write_table(
+        table,
+        path,
+        write_statistics=(
+            [c for c in table.column_names if c not in nan] if nan else True
+        ),
+    )
+    return table_stats(table)
+
+
+_PRUNE_OPS = ("=", "IN", "<", "<=", ">", ">=")
+
+
+def _kind(value) -> str | None:
+    """Comparison class: the bloom type tag, with ints and floats one."""
+    tag = _bloom_tag(value)
+    return "n" if tag in ("i", "f") else tag
+
+
+def _ordered(a, b) -> bool:
+    """Python orders ``a`` against ``b`` as Spark does: one comparable
+    kind and no NaN (Spark holds NaN = NaN, above every number)."""
+    kind = _kind(a)
+    return kind is not None and kind == _kind(b) and a == a and b == b
+
+
+def _may_hold(mn, mx, op: str, lit) -> bool:
+    """False only when no value in [mn, mx] satisfies ``value op lit``."""
+    if op == "IN":
+        return any(_may_hold(mn, mx, "=", v) for v in lit)
+    if not (_ordered(mn, lit) and _ordered(mx, lit)):
+        return True
+    if op == "=":
+        return mn <= lit <= mx
+    if op == "<":
+        return mn < lit
+    if op == "<=":
+        return mn <= lit
+    if op == ">":
+        return mx > lit
+    return mx >= lit
+
+
+def _file_may_hold(action: dict, conjuncts: list, schema_ops: list) -> bool:
+    cols = [physical_name(c, action["added"], schema_ops) for c, _, _ in conjuncts]
+    part = action.get("partition") or {}
+    stats = action.get("stats") or {}
+    for col, (_, op, lit) in zip(cols, conjuncts):
+        if col in part:
+            if part[col] is None:
+                return False
+            mn = mx = part[col]
+        else:
+            mn, mx = stats.get(col) or (None, None)
+        if mn is not None and mx is not None and not _may_hold(mn, mx, op, lit):
+            return False
+    blooms = action.get("bloom") or {}
+    for col, (_, op, lit) in zip(cols, conjuncts):
+        bloom = blooms.get(col)
+        if bloom and op in ("=", "IN"):
+            values = lit if op == "IN" else (lit,)
+            if not any(bloom_maybe_contains(bloom, v) for v in values):
+                return False
+    return True
+
+
+def prune_files(state: dict, conjuncts) -> list[str]:
+    """Live file names of a replayed ``state``, sorted, that may hold a
+    row satisfying every conjunct ``(logical column, op, value)`` — op
+    one of ``=``, ``IN`` (value: a tuple), ``<``, ``<=``, ``>``,
+    ``>=``. The decision reads only the log: a dropped file holds no
+    such row under Spark's semantics (NULL satisfies nothing, -0.0 =
+    0.0, NaN = NaN above every number); a kept file may hold none, so
+    callers still apply the predicate to rows. Per file, each column
+    translated to the file's physical name:
+
+    1. partition value — exact: the file holds only that value, and a
+       NULL one fails every conjunct;
+    2. logged [min, max] — no stats, a cross-type comparison, or a NaN
+       bound or value keeps the file;
+    3. blooms — every ``=`` value must be possible, and one value of
+       each ``IN`` list."""
+    conjuncts = list(conjuncts)
+    for c in conjuncts:
+        if c[1] not in _PRUNE_OPS:
+            raise ValueError(f"prune_files: unsupported conjunct {c!r}")
+    ops = state["schema_ops"]
+    return [
+        name
+        for name, action in sorted(state["live"].items())
+        if _file_may_hold(action, conjuncts, ops)
+    ]

@@ -238,6 +238,36 @@ def test_log_stats_prune_files_before_any_scan(spark, tmp_path):
     assert t.snapshot_where("k", lo=500).count() == 0
 
 
+def test_footer_stats_keep_a_nan_bound_of_any_row_group(spark, tmp_path):
+    """Spark's parquet writer logs NaN as the max of a row group holding
+    NaN; folding row groups with Python's max drops it (NaN compares
+    False), and the file's logged [min, max] would then rule out the
+    NaN rows that Spark's ``x > 100`` returns."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from als_hadoop_spark.sources.acid_log import footer_stats, prune_files
+
+    rows = [(i, float(i % 50)) for i in range(4000)]
+    rows += [(4000 + i, float("nan") if i == 5 else 1.0) for i in range(4000)]
+    out = str(tmp_path / "t")
+    (
+        spark.createDataFrame(rows, "k LONG, x DOUBLE")
+        .coalesce(1)
+        .write.option("parquet.block.size", 8192)
+        .parquet(out)
+    )
+    (f,) = glob.glob(os.path.join(out, "part-*.parquet"))
+    md = pq.read_metadata(f)
+    maxes = [md.row_group(i).column(1).statistics.max for i in range(md.num_row_groups)]
+    assert maxes[0] == 49.0 and any(m != m for m in maxes[1:]), maxes
+    mn, mx = footer_stats(f)["x"]
+    assert mn == 0.0 and mx != mx
+    state = {"live": {"f": {"stats": {"x": [mn, mx]}, "added": 0}}, "schema_ops": []}
+    assert prune_files(state, [("x", ">", 100.0)]) == ["f"]
+
+
 def test_streaming_merge_sink_applies_cdc_transactionally(spark, tmp_path):
     """A changelog stream MERGEd batch-by-batch must end at the same
     state as applying the batches sequentially in batch mode, leave
@@ -590,7 +620,8 @@ import json, os, random, sys, time
 sys.path.insert(0, {repo!r})
 import pyarrow as pa
 import pyarrow.parquet as pq
-from als_hadoop_spark.sources.acid import AcidTable, _footer_stats
+from als_hadoop_spark.sources.acid import AcidTable
+from als_hadoop_spark.sources.acid_log import footer_stats
 
 wid, n, path = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3]
 t = AcidTable(None, path)  # log protocol only — no Spark in children
@@ -602,7 +633,7 @@ for i in range(n):
         pa.table({{"k": [wid * 1000 + i], "v": [f"w{{wid}}b{{i}}"]}}),
         os.path.join(path, name),
     )
-    add = [{{"path": name, "stats": _footer_stats(os.path.join(path, name))}}]
+    add = [{{"path": name, "stats": footer_stats(os.path.join(path, name))}}]
     while True:
         v = t.latest_version() + 1
         if t._try_commit(v, {{"operation": "append", "add": add}}):

@@ -214,8 +214,37 @@ def test_bloom_partitioned_write_composes(spark, tmp_path):
     assert got.filter("cat = 'a' and uid = 'u000004'").count() == 1
 
 
+def test_float_bloom_answers_zero_and_nan_as_spark_compares(spark, tmp_path):
+    """A float bloom hashes raw IEEE bits, where -0.0 and 0.0 differ and
+    so do NaN payloads; Spark holds -0.0 = 0.0 and NaN = NaN, so such a
+    probe answers "maybe" and the file stays planned."""
+    import struct
+
+    from pyspark.sql.datasource import EqualTo
+
+    assert bloom_maybe_contains(_bloom_build([-0.0, 1.5]), 0.0)
+    assert bloom_maybe_contains(_bloom_build([0.0, 1.5]), -0.0)
+    other_nan = struct.unpack("<d", struct.pack("<Q", 0x7FF8000000000001))[0]
+    assert bloom_maybe_contains(_bloom_build([float("nan")]), other_nan)
+    assert not bloom_maybe_contains(_bloom_build([-0.0, 1.5]), 2.5)
+
+    register_acid_format(spark)
+    p = str(tmp_path / "t")
+    (
+        spark.createDataFrame([(1, -0.0), (2, 1.5)], "k LONG, x DOUBLE")
+        .coalesce(1)
+        .write.format("acid")
+        .option("bloomFilterColumns", "x")
+        .mode("append")
+        .save(p)
+    )
+    got = spark.read.format("acid").load(p)
+    assert len(_planned(spark, p, got.schema, [EqualTo(("x",), 0.0)])) == 1
+    assert [r["k"] for r in got.filter("x == 0.0").collect()] == [1]
+
+
 def test_bloom_prunes_merge_candidates(spark, tmp_path):
-    """AcidTable._files_where consults blooms on a POINT lookup: a
+    """AcidTable.files_where consults blooms on a POINT lookup: a
     single-key MERGE on a bloom'd non-clustered table scans O(1)
     candidate files instead of every stats-overlapping file."""
     from pyspark.sql import functions as F
@@ -224,14 +253,13 @@ def test_bloom_prunes_merge_candidates(spark, tmp_path):
     p = str(tmp_path / "t")
     _build_table(spark, p)
     t = AcidTable(spark, p)
-    state = t._state()
     # every file overlaps the key range (interleaved fixture): stats
     # alone keep all 16, the bloom narrows a point probe to 1
-    assert len(t._files_where(state, "uid", "u000033", "u000033")) == 1
-    assert len(t._files_where(state, "k", 33, 33)) == 1
-    assert len(t._files_where(state, "uid", "absent", "absent")) == 0
+    assert len(t.files_where("uid", "u000033", "u000033")) == 1
+    assert len(t.files_where("k", 33, 33)) == 1
+    assert len(t.files_where("uid", "absent", "absent")) == 0
     # a RANGE probe is untouched by blooms (conservative)
-    assert len(t._files_where(state, "k", 10, 20)) == N_FILES
+    assert len(t.files_where("k", 10, 20)) == N_FILES
     # and the merge itself stays correct through the pruned candidates
     def upsert(touched, chg):
         c = chg.select("uid", F.col("v").alias("_nv"))

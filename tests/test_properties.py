@@ -401,3 +401,136 @@ def test_distributed_lead_matches_window_lead(spark, rows):
         for r in df.withColumn("v_next", F.lead("v").over(w)).collect()
     }
     assert got == want
+
+
+_PRUNE_FLOATS = [float("nan"), -0.0, 0.0, 1.5, -2.0, 3.0]
+_PRUNE_STRINGS = ["", "a", "ab", "b"]
+_PRUNE_VALUES = {
+    "i": st.one_of(st.none(), st.integers(-3, 3)),
+    "f": st.one_of(st.none(), st.sampled_from(_PRUNE_FLOATS)),
+    "s": st.one_of(st.none(), st.sampled_from(_PRUNE_STRINGS)),
+}
+_PRUNE_LITERALS = {
+    "i": st.integers(-3, 3),
+    "f": st.sampled_from(_PRUNE_FLOATS + [2.5]),
+    "s": st.sampled_from(_PRUNE_STRINGS + ["zz"]),
+    "p": st.integers(-3, 3),
+}
+_ANY_LITERAL = st.one_of(
+    st.integers(-3, 3),
+    _PRUNE_LITERALS["f"],
+    _PRUNE_LITERALS["s"],
+    st.booleans(),
+)
+
+
+@st.composite
+def _conjunct(draw):
+    """(column, op, literal): the column's own type three times in
+    four, any type (a cross-type literal) otherwise."""
+    col = draw(st.sampled_from("ifsp"))
+    op = draw(st.sampled_from(["=", "IN", "<", "<=", ">", ">="]))
+    lit = _PRUNE_LITERALS[col] if draw(st.integers(0, 3)) else _ANY_LITERAL
+    if op == "IN":
+        return col, op, tuple(draw(st.lists(lit, min_size=1, max_size=3)))
+    return col, op, draw(lit)
+
+
+@st.composite
+def _pruned_table(draw):
+    """A replayed state of 1–4 small files (int ``i``, float ``f``,
+    string ``s`` and int ``p`` columns with NULL, NaN and ±0.0), some
+    partitioned on ``p``, some with blooms and Spark-writer stats (NaN
+    above every number, -0.0 below 0.0), plus a random conjunct list
+    that mixes in cross-type literals."""
+    import json
+    import math
+
+    import pyarrow as pa
+
+    from als_hadoop_spark.sources import acid_log
+
+    partitioned = draw(st.booleans())
+    bloom_cols = draw(st.lists(st.sampled_from("ifsp"), unique=True))
+    files = {}
+    live = {}
+    for j in range(draw(st.integers(1, 4))):
+        rows = draw(
+            st.lists(st.fixed_dictionaries(_PRUNE_VALUES), min_size=1, max_size=6)
+        )
+        part = draw(_PRUNE_VALUES["i"])
+        for r in rows:
+            r["p"] = part if partitioned else draw(_PRUNE_VALUES["i"])
+        tbl = pa.table(
+            {
+                "i": pa.array([r["i"] for r in rows], pa.int64()),
+                "f": pa.array([r["f"] for r in rows], pa.float64()),
+                "s": pa.array([r["s"] for r in rows], pa.string()),
+                "p": pa.array([r["p"] for r in rows], pa.int64()),
+            }
+        )
+        stats = acid_log.table_stats(tbl)
+        fs = [r["f"] for r in rows if r["f"] is not None]
+        if fs and draw(st.booleans()):
+            fs.sort(key=lambda x: (x != x, 0.0 if x != x else x, math.copysign(1, x)))
+            stats["f"] = [fs[0], fs[-1]]
+        action = {"stats": stats, "added": 0}
+        if partitioned:
+            action["partition"] = {"p": part}
+        blooms = acid_log.blooms_of(tbl, bloom_cols)
+        if blooms:
+            action["bloom"] = blooms
+        files[f"f{j}"] = rows
+        live[f"f{j}"] = action
+    state = {"live": live, "schema_ops": []}
+    state = json.loads(json.dumps(state))  # as the commit log carries it
+    conjuncts = draw(st.lists(_conjunct(), min_size=1, max_size=3))
+    return state, files, conjuncts
+
+
+def _spark_holds(value, op, lit) -> bool:
+    """``value op lit`` as Spark evaluates it: NULL satisfies nothing,
+    -0.0 = 0.0, NaN = NaN and NaN sorts above every number. A literal
+    of another type (bool / number / string) is a comparison Spark
+    would not push; the reference counts it as satisfied, so the
+    pruner must keep every file for it."""
+    if op == "IN":
+        return any(_spark_holds(value, "=", v) for v in lit)
+    if value is None:
+        return False
+
+    def kind(x):
+        return "b" if isinstance(x, bool) else "n" if isinstance(x, (int, float)) else "s"
+
+    if kind(value) != kind(lit):
+        return True
+
+    def key(x):
+        return (1, 0.0) if isinstance(x, float) and x != x else (0, x)
+
+    a, b = key(value), key(lit)
+    return {
+        "=": a == b, "<": a < b, "<=": a <= b, ">": a > b, ">=": a >= b
+    }[op]
+
+
+@settings(max_examples=400, deadline=None)
+@given(case=_pruned_table())
+def test_prune_files_never_drops_a_matching_row(case):
+    """``acid_log.prune_files`` keeps every file holding a row that
+    satisfies all conjuncts: the rows of the kept files that satisfy
+    the exact predicate are all rows that satisfy it."""
+    from als_hadoop_spark.sources import acid_log
+
+    state, files, conjuncts = case
+    kept = set(acid_log.prune_files(state, conjuncts))
+
+    def matching(names):
+        return [
+            (name, i)
+            for name in names
+            for i, row in enumerate(files[name])
+            if all(_spark_holds(row[c], op, lit) for c, op, lit in conjuncts)
+        ]
+
+    assert matching(sorted(kept)) == matching(sorted(files))

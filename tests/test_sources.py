@@ -3,6 +3,8 @@ SequenceFile-equivalent storage, overwrite semantics)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -420,6 +422,59 @@ def test_acid_format_pushdown_prunes_files(spark, tmp_path):
     rng = rd.filter("k >= 180")
     assert rng.rdd.getNumPartitions() == 1
     assert rng.count() == 20
+
+
+def test_acid_format_nan_column_keeps_its_rows(spark, tmp_path):
+    """Arrow's min_max and its parquet footer both skip NaN, so a float
+    column holding NaN gets neither logged stats nor footer statistics:
+    Spark orders NaN above every number, and ``x > 5`` must return the
+    NaN row through every reader."""
+    import pyarrow.parquet as pq
+
+    from als_hadoop_spark.sources import register_acid_format
+    from als_hadoop_spark.sources.acid import AcidTable
+    from als_hadoop_spark.sql import acid_sql
+
+    register_acid_format(spark)
+    p = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, 3.0)], "k LONG, x DOUBLE"
+    ).coalesce(1).write.format("acid").mode("append").save(p)
+    t = AcidTable(spark, p)
+    (name, action), = t._state()["live"].items()
+    assert "x" not in action["stats"] and action["stats"]["k"] == [1, 3]
+    footer = pq.read_metadata(os.path.join(p, name)).row_group(0)
+    assert not footer.column(1).statistics or not (
+        footer.column(1).statistics.has_min_max
+    )
+    fmt = spark.read.format("acid").load(p)
+    assert [r["k"] for r in fmt.filter("x > 5").collect()] == [2]
+    assert [r["k"] for r in t.snapshot().filter("x > 5").collect()] == [2]
+    got = acid_sql(spark, f"SELECT k FROM acid.`{p}` WHERE x > 5").collect()
+    assert [r["k"] for r in got] == [2]
+
+
+def test_acid_format_reads_past_a_nan_bound(spark, tmp_path):
+    """Spark's parquet writer logs NaN as a float column's max; a NaN
+    bound compares False against everything in Python, and the format
+    reader must keep the file rather than prune it."""
+    from als_hadoop_spark.sources import register_acid_format
+    from als_hadoop_spark.sources.acid import AcidTable
+
+    register_acid_format(spark)
+    p = str(tmp_path / "t")
+    t = AcidTable(spark, p)
+    t.append(
+        spark.createDataFrame(
+            [(1, 1.0), (2, float("nan")), (3, 5.0)], "k LONG, x DOUBLE"
+        ).coalesce(1)
+    )
+    (stats,) = [a["stats"]["x"] for a in t._state()["live"].values()]
+    assert stats[0] == 1.0 and stats[1] != stats[1]  # [1.0, NaN]
+    fmt = spark.read.format("acid").load(p)
+    assert [r["k"] for r in fmt.filter("x IN (5.0, 7.0)").collect()] == [3]
+    snap = t.snapshot().filter("x IN (5.0, 7.0)")
+    assert [r["k"] for r in snap.collect()] == [3]
 
 
 def test_acid_format_reads_schema_evolved_table(spark, tmp_path):
