@@ -216,6 +216,14 @@ def _range_conjuncts(col: str, lo, hi) -> list[tuple]:
     return [(col, op, v) for op, v in ((">=", lo), ("<=", hi)) if v is not None]
 
 
+def _union_by_name(frames) -> DataFrame:
+    """Union of ``frames`` by column name; a column one side lacks is
+    NULL there."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+
+
 def _copy_state(state: dict) -> dict:
     """Shallow-per-container copy of a replayed state — callers get
     their own top-level dicts/lists (the cached original must never be
@@ -541,9 +549,10 @@ class AcidTable:
         return adds
 
     def _read_staged(self, adds: list[dict]) -> DataFrame:
-        """Read just-staged add files with their logged schema (one
-        write → one schema; r12), falling back to a mergeSchema pass
-        for adds staged by an older writer."""
+        """Read staged files — a write's adds, or a commit's CDC
+        sidecar — with their logged schema (one write → one schema),
+        falling back to a mergeSchema pass for files staged by an older
+        writer."""
         paths = [os.path.join(self.path, a["path"]) for a in adds]
         sch = _merge_schema_jsons([a.get("schema") for a in adds])
         if sch is not None:
@@ -752,6 +761,23 @@ class AcidTable:
             raise CommitConflict("table changed during overwrite")
         return base + 1
 
+    @staticmethod
+    def _multiset_diff(
+        before: DataFrame, after: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """``(gone, born)``: the rows of ``before`` that ``after`` lacks
+        and the rows of ``after`` that ``before`` lacks, as multisets
+        (``exceptAll`` both ways), so rows carried over unchanged
+        cancel. ``before`` is first aligned to ``after``'s columns: a
+        column the rewrite added is NULL on the before side."""
+        for c in after.columns:
+            if c not in before.columns:
+                before = before.withColumn(
+                    c, F.lit(None).cast(dict(after.dtypes)[c])
+                )
+        before = before.select(after.columns)
+        return before.exceptAll(after), after.exceptAll(before)
+
     def _cdc_diff(self, before: DataFrame, after: DataFrame, key: str) -> DataFrame:
         """Row-level change set between a commit's rewritten files:
         multiset diff both ways (rows carried over unchanged cancel
@@ -762,14 +788,7 @@ class AcidTable:
         table schema; cost is one shuffle over the touched rows only —
         proportional to the rewrite the merge already paid for, never
         the table."""
-        for c in after.columns:
-            if c not in before.columns:
-                before = before.withColumn(
-                    c, F.lit(None).cast(dict(after.dtypes)[c])
-                )
-        before = before.select(after.columns)
-        gone = before.exceptAll(after)
-        born = after.exceptAll(before)
+        gone, born = self._multiset_diff(before, after)
         gone_keys = gone.select(key).distinct()
         born_keys = born.select(key).distinct()
         tag = "_change_type"
@@ -2014,13 +2033,13 @@ class AcidTable:
         one's schema epoch)."""
         return self._assemble(self._state(version), files=files)
 
-    def _dv_masked_rows(self, v: int, entry: dict) -> DataFrame:
-        """The rows a merge-on-read commit at ``v`` masked: read the
-        DV'd files AT v-1 (older masks already applied — previously
-        hidden rows stay hidden) and keep only positions this commit's
-        sidecars name. Positions never overlap older masks because the
-        writers derive them from the already-masked read."""
-        dv = entry["dv"]
+    def _dv_masked_rows(self, v: int, dv: dict) -> DataFrame:
+        """The rows the merge-on-read commit at ``v`` masked, given its
+        deletion-vector action ``dv``: read the DV'd files AT v-1
+        (older masks already applied — previously hidden rows stay
+        hidden) and keep only positions this commit's sidecars name.
+        Positions never overlap older masks because the writers derive
+        them from the already-masked read."""
         rows = self._assemble(
             self._state(v - 1), files=sorted(dv["files"]), with_pos=True
         )
@@ -2040,17 +2059,16 @@ class AcidTable:
         with two extra columns — ``_change_type`` ∈ {insert, delete,
         update_preimage, update_postimage} and ``_commit_version``.
 
-        Per commit:
-        - MERGE/DELETE committed with ``cdf=True`` replay their staged
-          ``_acid_cdc/`` sidecar (precise update pairing, no recompute);
-        - append: the added files, tagged insert;
-        - overwrite: rows of the removed files tagged delete plus the
-          added files tagged insert;
-        - MERGE/DELETE without a sidecar: derived from the commit's own
-          add/remove actions — the multiset diff of removed-file rows
-          vs added-file rows (carried-over rows cancel), tagged
-          delete/insert; exact as a change set, but update rows appear
-          as a delete+insert pair instead of pre/post images;
+        Per commit, by the kind ``acid_log.change_files`` gives it:
+        - a CDC sidecar (MERGE/DELETE/UPDATE with ``cdf=True``) is
+          replayed as staged (precise update pairing, no recompute);
+        - file lists (append, overwrite): rows of the removed files
+          tagged delete plus the added files tagged insert;
+        - a cross-file diff (MERGE/DELETE/UPDATE without a sidecar):
+          the multiset diff of the removed-file and DV-masked rows
+          against the added-file rows (carried-over rows cancel),
+          tagged delete/insert; exact as a change set, but update rows
+          appear as a delete+insert pair instead of pre/post images;
         - OPTIMIZE and metadata-only commits change no data → nothing.
 
         This is what turns the table into an INCREMENTAL source at
@@ -2073,71 +2091,29 @@ class AcidTable:
         parts: list[DataFrame] = []
         for v in range(start, end + 1):
             entry = self._read_entry(v)
-            op = entry.get("operation")
-            adds = [a["path"] for a in entry.get("add", [])]
-            removes = entry.get("remove", [])
-            dv = entry.get("dv")
-            if op == "optimize" or (not adds and not removes and not dv):
-                continue  # dataChange=false / metadata-only
-            if entry.get("cdc"):
-                cdc_paths = [os.path.join(self.path, p) for p in entry["cdc"]]
-                cdc_schema = (
-                    _merge_schema_jsons([entry["cdc_schema"]])
-                    if entry.get("cdc_schema")
-                    else None
-                )
-                if cdc_schema is not None:
-                    df = self.spark.read.schema(cdc_schema).parquet(*cdc_paths)
-                else:
-                    df = self.spark.read.option("mergeSchema", "true").parquet(
-                        *cdc_paths
-                    )
-            elif not removes and not dv:  # append (or any pure-add commit)
-                df = self._read_files_at(v, adds).withColumn(tag, F.lit("insert"))
-            elif op == "overwrite":
-                df = self._read_files_at(v - 1, removes).withColumn(
-                    tag, F.lit("delete")
-                )
-                if adds:
-                    df = df.unionByName(
-                        self._read_files_at(v, adds).withColumn(
-                            tag, F.lit("insert")
-                        ),
-                        allowMissingColumns=True,
-                    )
-            else:  # merge/delete/update without a CDC sidecar: derive
-                # the delete side is removed-file rows (copy-on-write)
-                # or DV-masked rows (merge-on-read) — same multiset
-                # semantics either way, so the exceptAll cancel below
-                # applies identically
+            kind, files, dv = acid_log.change_files(entry)
+            if kind == "none":
+                continue
+            if kind == "cdc":
+                sch = entry.get("cdc_schema")
+                df = self._read_staged([{"path": p, "schema": sch} for p, _ in files])
+            else:
+                removed = [p for p, t in files if t == "delete"]
+                added = [p for p, t in files if t == "insert"]
+                gone = self._read_files_at(v - 1, removed) if removed else None
                 if dv:
-                    before = self._dv_masked_rows(v, entry)
-                    if removes:
-                        before = before.unionByName(
-                            self._read_files_at(v - 1, removes),
-                            allowMissingColumns=True,
-                        )
-                else:
-                    before = self._read_files_at(v - 1, removes)
-                if adds:
-                    after = self._read_files_at(v, adds)
-                    for c in after.columns:
-                        if c not in before.columns:
-                            before = before.withColumn(
-                                c, F.lit(None).cast(dict(after.dtypes)[c])
-                            )
-                    before = before.select(after.columns)
-                    df = (
-                        before.exceptAll(after)
-                        .withColumn(tag, F.lit("delete"))
-                        .unionByName(
-                            after.exceptAll(before).withColumn(
-                                tag, F.lit("insert")
-                            )
-                        )
+                    masked = self._dv_masked_rows(v, dv)
+                    gone = masked if gone is None else masked.unionByName(
+                        gone, allowMissingColumns=True
                     )
-                else:
-                    df = before.withColumn(tag, F.lit("delete"))
+                born = self._read_files_at(v, added) if added else None
+                if kind == "diff" and born is not None:
+                    gone, born = self._multiset_diff(gone, born)
+                df = _union_by_name(
+                    side.withColumn(tag, F.lit(t))
+                    for side, t in ((gone, "delete"), (born, "insert"))
+                    if side is not None
+                )
             parts.append(df.withColumn("_commit_version", F.lit(v).cast("bigint")))
         if not parts:
             # typed empty frame: current table schema + the CDF columns
@@ -2151,10 +2127,7 @@ class AcidTable:
             return empty.withColumn(tag, F.lit("")).withColumn(
                 "_commit_version", F.lit(0).cast("bigint")
             )
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df, allowMissingColumns=True)
-        return out
+        return _union_by_name(parts)
 
     def incremental_refresh(
         self,

@@ -30,19 +30,22 @@ Scale design:
   micro-batch re-reads exactly its bytes (the exactly-once source
   contract; the sink side is ``stream_maintain_rollup``'s txn-stamped
   fold).
-- CHANGE DERIVATION is file-local by construction: append → added
-  files tagged ``insert``; overwrite → removed files tagged ``delete``
-  plus added files tagged ``insert``; MERGE/DELETE replay their staged
-  ``_acid_cdc/`` sidecar (which carries precise pre/post images).
-  A MERGE/DELETE committed WITHOUT ``cdf=True`` needs a multiset diff
-  across files — not expressible as independent file reads — so
-  planning raises and names the fix (same posture as Delta, where CDF
-  streaming requires ``delta.enableChangeDataFeed`` at write time).
+- CHANGE DERIVATION is file-local by construction, per the commit
+  kind ``acid_log.change_files`` gives (as for ``table_changes``):
+  append → added files tagged ``insert``; overwrite → removed files
+  tagged ``delete`` plus added files tagged ``insert``; a write with
+  ``cdf=True`` → its ``_acid_cdc/`` sidecar (precise pre/post images).
 
 Limitations (all raise loudly at planning, never wrong answers):
-schema-op commits (rename/drop/widen) in the streamed range require a
-stream restart (Delta parity); vacuumed change files below the
-retention horizon; log versions cleaned below ``startingVersion``.
+
+- a MERGE/DELETE/UPDATE committed WITHOUT ``cdf=True``, copy-on-write
+  or deletion-vector: its changes are a multiset diff across files, so
+  planning raises and names the fix (Delta likewise requires
+  ``delta.enableChangeDataFeed`` at write time);
+- schema-op commits (rename/drop/widen) in the streamed range require
+  a stream restart (Delta parity);
+- change files vacuumed below the retention horizon;
+- log versions cleaned below ``startingVersion``.
 
 By-value rule: the classes run in Python workers that may not have
 this package on their path, so they are built inside
@@ -87,7 +90,7 @@ def build_acid_cdf_source():
             if not self.path:
                 raise ValueError("acid_cdf: option 'path' is required")
             self.starting = int(options.get("startingVersion", 0))
-            #: per-batch version cap (r10, VERDICT r9 #7): pyspark's
+            #: per-batch version cap: pyspark's
             #: DataSourceStreamReader lacks SupportsTriggerAvailableNow
             #: AND ReadLimit, so Trigger.AvailableNow falls back to ONE
             #: batch over everything available — a month-long backlog
@@ -206,25 +209,14 @@ def build_acid_cdf_source():
             parts: list[ChangeFile] = []
             for v in range(lo + 1, hi + 1):
                 e = self._entry_cached(v)
-                op = e.get("operation")
-                adds = [a["path"] for a in e.get("add", [])]
-                removes = e.get("remove", [])
-                if op == "optimize" or (not adds and not removes):
-                    continue  # dataChange=false / metadata-only
-                if e.get("cdc"):
-                    files = [(p, None) for p in e["cdc"]]
-                elif not removes:  # append / pure-add
-                    files = [(p, "insert") for p in adds]
-                elif op == "overwrite":
-                    files = [(p, "delete") for p in removes]
-                    files += [(p, "insert") for p in adds]
-                else:
+                kind, files, _ = acid_log.change_files(e)
+                if kind == "diff":
                     raise ValueError(
-                        f"acid_cdf: version {v} is a {op} committed "
-                        "without a CDC sidecar — its change set is a "
-                        "cross-file multiset diff, which a streaming "
-                        "file read cannot express. Write MERGE/DELETE "
-                        "with cdf=True to stream this table."
+                        f"acid_cdf: version {v} is a {e.get('operation')} "
+                        "committed without a CDC sidecar — its change set "
+                        "is a cross-file multiset diff, which a streaming "
+                        "file read cannot express. Write MERGE/DELETE/"
+                        "UPDATE with cdf=True to stream this table."
                     )
                 for rel, tag in files:
                     ap = os.path.join(self.path, rel)

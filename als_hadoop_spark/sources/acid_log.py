@@ -260,6 +260,36 @@ def replay(path: str, version: int | None = None, read=None) -> dict:
     return state
 
 
+def change_files(entry: dict) -> tuple[str, list, dict | None]:
+    """What one commit changed, as files: the one classification behind
+    ``AcidTable.table_changes`` and the ``acid_cdf`` stream. Returns
+    ``(kind, files, dv)``, ``files`` a list of ``(table-relative path,
+    tag)``:
+
+    - ``"none"``: OPTIMIZE or a metadata-only commit, no files;
+    - ``"cdc"``: a staged CDC sidecar, whose rows carry their own
+      ``_change_type`` (tag None);
+    - ``"files"``: a pure-add or overwrite commit: the removed files,
+      read at the version before, tagged ``delete``, the added ones
+      ``insert``;
+    - ``"diff"``: a MERGE/DELETE/UPDATE/RESTORE without a sidecar that
+      removes files or masks rows (``dv``, its deletion-vector action;
+      None for the other kinds): files tagged as above, but the change
+      set is their multiset diff, which no per-file read expresses."""
+    op = entry.get("operation")
+    adds = [a["path"] for a in entry.get("add", ())]
+    removes = entry.get("remove", ())
+    dv = entry.get("dv")
+    if op == "optimize" or not (adds or removes or dv):
+        return "none", [], None
+    if entry.get("cdc"):
+        return "cdc", [(p, None) for p in entry["cdc"]], None
+    files = [(p, "delete") for p in removes] + [(p, "insert") for p in adds]
+    if op == "overwrite" or not (removes or dv):
+        return "files", files, None
+    return "diff", files, dv
+
+
 def physical_name(col: str, added: int, ops: list) -> str:
     """Reverse-translate a CURRENT logical column name to the name
     physically stored in a file added at version ``added`` (walk the
@@ -481,14 +511,16 @@ def _nan_columns(table) -> set:
     }
 
 
-def table_stats(table) -> dict:
+def table_stats(table, nan: set | None = None) -> dict:
     """[min, max] per JSON-scalar column of an IN-MEMORY Arrow table —
     no file re-read. Arrow's ``min_max`` skips NaN, so a float column
-    holding NaN logs no stats: its bounds would rule out the NaN rows."""
+    holding NaN logs no stats: its bounds would rule out the NaN rows.
+    ``nan``: the table's :func:`_nan_columns`, when already known."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    nan = _nan_columns(table)
+    if nan is None:
+        nan = _nan_columns(table)
     out = {}
     for f in table.schema:
         if f.name in nan or not (
@@ -513,18 +545,21 @@ def write_data_file(table, path: str) -> dict:
     its :func:`table_stats`. The footer leaves out the statistics of a
     float column holding NaN for the same reason the log does: parquet
     writers skip NaN in min/max, and Spark's row-group filter trusts
-    the footer."""
+    the footer. ``write_statistics`` names parquet leaf paths, which a
+    zero-row write lists, so nested leaves keep theirs."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     nan = _nan_columns(table)
-    pq.write_table(
-        table,
-        path,
-        write_statistics=(
-            [c for c in table.column_names if c not in nan] if nan else True
-        ),
-    )
-    return table_stats(table)
+    keep = True
+    if nan:
+        buf = pa.BufferOutputStream()
+        pq.write_table(table.schema.empty_table(), buf)
+        leaves = pq.read_metadata(pa.BufferReader(buf.getvalue())).schema
+        paths = (leaves.column(i).path for i in range(len(leaves)))
+        keep = [c for c in paths if c not in nan]
+    pq.write_table(table, path, write_statistics=keep)
+    return table_stats(table, nan)
 
 
 _PRUNE_OPS = ("=", "IN", "<", "<=", ">", ">=")

@@ -1,41 +1,31 @@
-"""Streaming CHANGE-DATA-FEED reader over the commit-log ACID table —
-the consumer side of ``AcidTable.table_changes`` (r7, VERDICT r6 #4):
-r6 gave the table a CDF; this module tails it continuously, closing
-the CDC loop ``writer → ACID table → change feed → incremental
-rollup`` that a 100 TB pipeline actually runs.
+"""Consumers of the ACID table's change feed (``table_changes`` and
+its streaming twin, the ``acid_cdf`` source), closing the loop
+``writer → ACID table → change feed → incremental rollup``:
 
-Two layers, mirroring Delta's CDF streaming reads (public docs):
+- :class:`CdfFollower` — a micro-batch tailer with a file-checkpointed
+  offset: ``poll()`` yields the next ``table_changes`` batch,
+  ``commit()`` advances the offset (temp + atomic rename). A crash
+  between the two replays the batch: AT-LEAST-ONCE.
+- :func:`maintain_rollup` — one step of rollup maintenance driven by
+  the follower; :func:`stream_maintain_rollup` — the same as a
+  Structured Streaming query over ``acid_cdf``.
 
-- :class:`CdfFollower` — the generic micro-batch tailer: a
-  file-checkpointed last-consumed-version offset; each ``poll()``
-  yields the next ``table_changes`` batch as a DataFrame, ``commit()``
-  advances the offset via write-temp + atomic rename. Crash between
-  the two replays the batch → AT-LEAST-ONCE, so consumers must be
-  idempotent (the same contract Structured Streaming's foreachBatch
-  gives its sinks).
+Both maintainers are EXACTLY-ONCE through one fold step: it pins the
+rollup version and its consumed offset ``rollup.last_txn(app_id)``
+once, folds the change rows above the offset into the rollup at that
+version (``AcidTable.fold_changes``), and commits ONE ``overwrite``
+pinned to that version and stamped ``txn={"app": app_id, "batch":
+<last source version folded>}``. Offset and data land atomically (the
+Delta txnAppId/txnVersion recipe): the follower or streaming
+checkpoint is only a hint, a replayed batch folds nothing twice, and a
+maintainer that commits after the pin makes the overwrite raise
+``CommitConflict`` — the batch step yields 0, the stream fails.
 
-- :func:`maintain_rollup` — EXACTLY-ONCE incremental view
-  maintenance composed from the follower + ``incremental_refresh``:
-  the refreshed rollup lands in its own AcidTable via ONE ``overwrite``
-  commit stamped ``txn={"app", "batch": <consumed source version>}``
-  — offset-advance and data are atomic, so a replayed batch (follower
-  checkpoint lost, process crash after rollup commit, double driver)
-  is recognized from the rollup table's own log and skipped. This is
-  the Delta txnAppId/txnVersion recipe applied to reads: the OFFSET
-  lives in the sink's transaction log, the follower checkpoint is
-  only a fast-path hint.
-
-Scale posture: each batch's cost is ∝ changed rows (table_changes
-reads only the commits in range; incremental_refresh's fold joins
-bounded per-key deltas). The rollup overwrite rewrites the rollup —
-which is grouped, bounded by key cardinality, and orders of magnitude
-smaller than the fact table. Nothing corpus-shaped reaches the
-driver: the offset is one integer.
-
-The reference's only dataflow is batch jobs chained by HDFS dirs
-(ALS-Hadoop/ALS/ALS.java:217-331); continuous maintenance of a
-derived result is the north-star extension of its A15/A16 persistence
-contract.
+Cost: a step reads only the commits in range (∝ changed rows) and
+rewrites the rollup, which is bounded by key cardinality; the offset
+is one integer. The reference chains batch jobs through HDFS dirs
+(ALS-Hadoop/ALS/ALS.java:217-331); continuous maintenance of a derived
+result is this engine's extension of it.
 """
 
 from __future__ import annotations
@@ -44,6 +34,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.acid import AcidTable, CommitConflict
 
@@ -95,6 +86,60 @@ class CdfFollower:
         os.replace(tmp, self._offset_path)
 
 
+def _rollup_aggs(sums, count_col=None, minmax=None, avgs=None) -> list:
+    """The rollup's aggregate columns, as its recompute computes them:
+    SUM per ``sums`` entry, COUNT(*) as ``count_col``, MIN/MAX per
+    ``minmax`` entry, and per ``avgs`` entry the AVG plus the two
+    companions ``fold_changes`` maintains it through (``{out}_sum`` and
+    the non-null count ``{out}_cnt``)."""
+    aggs = [F.sum(c).alias(out) for out, c in sums.items()]
+    if count_col is not None:
+        aggs.append(F.count(F.lit(1)).alias(count_col))
+    for out, (c, how) in (minmax or {}).items():
+        aggs.append(getattr(F, how)(F.col(c)).alias(out))
+    for out, c in (avgs or {}).items():
+        aggs.append(F.avg(F.col(c)).alias(out))
+        aggs.append(F.sum(F.col(c)).alias(f"{out}_sum"))
+        aggs.append(F.count(F.col(c)).alias(f"{out}_cnt"))
+    return aggs
+
+
+def _fold_step(
+    src: AcidTable,
+    rt: AcidTable,
+    app_id: str,
+    changes_after,
+    keys: list[str],
+    sums: dict[str, str],
+    **agg,
+) -> tuple[int, int] | None:
+    """The fold step of both maintainers (module docstring).
+    ``changes_after(consumed)`` returns the change rows above the
+    pinned offset and the last source version they reach, ``(changes,
+    end)`` — ``changes`` None asks for a recompute at ``end`` — or None
+    when there is nothing to fold. Returns ``(consumed, end)``."""
+    rollup_v = rt.latest_version()
+    consumed = rt.last_txn(app_id, version=rollup_v if rollup_v >= 0 else None)
+    batch = changes_after(consumed)
+    if batch is None:
+        return None
+    changes, end = batch
+    aggs = _rollup_aggs(sums, **agg)
+    if changes is None:
+        refreshed = src.snapshot(version=end).groupBy(*keys).agg(*aggs)
+    else:
+        base = (
+            rt.snapshot(version=rollup_v)
+            if consumed >= 0
+            else src.snapshot(version=end).limit(0).groupBy(*keys).agg(*aggs)
+        )
+        refreshed = src.fold_changes(base, changes, keys, sums, end=end, **agg)
+    rt.overwrite(
+        refreshed, txn={"app": app_id, "batch": end}, expected_version=rollup_v
+    )
+    return consumed, end
+
+
 def maintain_rollup(
     spark: SparkSession,
     source_path: str,
@@ -110,7 +155,8 @@ def maintain_rollup(
 ) -> int:
     """Drive the continuous-IVM loop ONE step: fold every unconsumed
     source commit into the materialized rollup, exactly once. Returns
-    the number of source versions consumed (0 = caught up).
+    the number of source versions consumed (0 = caught up, or another
+    maintainer committed first).
 
     Call it from a scheduler, a loop, or a foreachBatch trigger — the
     step is self-contained and restart-safe: the authoritative offset
@@ -121,81 +167,37 @@ def maintain_rollup(
     First call bootstraps: an empty rollup table is seeded with the
     full aggregate of the source snapshot at ``latest`` (one
     recompute), stamped as having consumed everything up to it."""
-    from pyspark.sql import functions as F
-
-    src = AcidTable(spark, source_path)
-    rt = AcidTable(spark, rollup_path)
     follower = CdfFollower(spark, source_path, checkpoint_dir)
+    src = follower.table
 
-    def _aggs():
-        aggs = [F.sum(c).alias(out) for out, c in sums.items()]
-        if count_col is not None:
-            aggs.append(F.count(F.lit(1)).alias(count_col))
-        for out, (c, how) in (minmax or {}).items():
-            aggs.append(getattr(F, how)(F.col(c)).alias(out))
-        for out, c in (avgs or {}).items():
-            # AVG + its fold companions (sum / non-null count) — the
-            # contract fold_changes maintains them under
-            aggs.append(F.avg(F.col(c)).alias(out))
-            aggs.append(F.sum(F.col(c)).alias(f"{out}_sum"))
-            aggs.append(F.count(F.col(c)).alias(f"{out}_cnt"))
-        return aggs
+    def changes_after(consumed: int):
+        if consumed < 0:
+            # bootstrap; an empty source waits: committing txn
+            # batch=-1 would be indistinguishable from never-bootstrapped
+            end = src.latest_version()
+            return None if end < 0 else (None, end)
+        # reconcile the hint with the authoritative offset (checkpoint
+        # may be stale — lost file — or ahead — crash before the data
+        # commit)
+        if follower.last_consumed() != consumed:
+            follower.commit(consumed)
+        batch = follower.poll(max_versions=max_versions)
+        return None if batch is None else (batch[0], batch[2])
 
-    # Pin the rollup version ONCE: last_txn, snapshot, and the
-    # overwrite's claimed base all use this one version, and overwrite
-    # commits exactly rollup_v + 1 — a concurrent maintainer's commit
-    # landing anywhere after this read makes _try_commit lose and
-    # raises CommitConflict instead of silently folding the batch on
-    # top of a base this step never saw (double-fold TOCTOU, post-r7
-    # advice).
-    rollup_v = rt.latest_version()
-    consumed_v = rt.last_txn(app_id, version=rollup_v if rollup_v >= 0 else None)
-    if consumed_v < 0:
-        # bootstrap: one full recompute of the current snapshot
-        end = src.latest_version()
-        if end < 0:
-            # empty source: committing txn batch=-1 would be
-            # indistinguishable from never-bootstrapped — wait for the
-            # first source commit instead
-            return 0
-        seed = src.snapshot().groupBy(*keys).agg(*_aggs())
-        try:
-            rt.overwrite(
-                seed, txn={"app": app_id, "batch": end},
-                expected_version=rollup_v,
-            )
-        except CommitConflict:
-            # another maintainer bootstrapped first; its commit carries
-            # the offset, so this step simply yields
-            return 0
-        follower.commit(end)
-        return end + 1
-
-    # reconcile the hint with the authoritative offset (checkpoint may
-    # be stale — lost file — or ahead — crash before the data commit)
-    if follower.last_consumed() != consumed_v:
-        follower.commit(consumed_v)
-
-    batch = follower.poll(max_versions=max_versions)
-    if batch is None:
-        return 0
-    _, start, end = batch
-    refreshed = src.incremental_refresh(
-        rt.snapshot(version=rollup_v), keys, sums, start=start, end=end,
-        count_col=count_col, minmax=minmax, avgs=avgs,
-    )
     try:
-        rt.overwrite(
-            refreshed, txn={"app": app_id, "batch": end},
-            expected_version=rollup_v,
+        step = _fold_step(
+            src, AcidTable(spark, rollup_path), app_id, changes_after,
+            keys, sums, count_col=count_col, minmax=minmax, avgs=avgs,
         )
     except CommitConflict:
-        # another maintainer instance interleaved (bumping the rollup
-        # past rollup_v); whatever it committed carries its own offset,
-        # so this step yields rather than double-folding
+        # another maintainer committed after this step's pin; its
+        # commit carries its own offset, so this step yields
         return 0
+    if step is None:
+        return 0
+    consumed, end = step
     follower.commit(end)
-    return end - start + 1
+    return end - consumed
 
 
 def stream_maintain_rollup(
@@ -213,33 +215,31 @@ def stream_maintain_rollup(
     trigger: dict | None = None,
 ):
     """:func:`maintain_rollup` as an ALWAYS-ON Structured Streaming
-    pipeline (r8, VERDICT r7 #1): the ``acid_cdf`` source
-    (sources/acid_cdf.py) owns triggers, offset checkpointing, replay
-    and backpressure; each micro-batch of change rows is folded into
-    the materialized rollup with :meth:`AcidTable.fold_changes` and
-    committed in ONE txn-stamped, version-pinned overwrite. Returns the
-    started :class:`~pyspark.sql.streaming.StreamingQuery` (default
+    pipeline: the ``acid_cdf`` source (sources/acid_cdf.py) owns
+    triggers, offset checkpointing, replay and backpressure; each
+    micro-batch of change rows goes through the same fold step. Returns
+    the started :class:`~pyspark.sql.streaming.StreamingQuery` (default
     trigger ``availableNow`` — process everything pending, then stop;
     pass ``trigger={"processingTime": "10 seconds"}`` for always-on).
 
     Exactly-once, independent of Spark's offset log: the authoritative
     consumed-offset is ``rollup.last_txn(app_id)`` — the max source
-    ``_commit_version`` folded so far, committed atomically WITH the
-    refreshed data. Each batch first drops rows at-or-below it, so a
-    replayed batch (restart mid-fold) folds nothing twice, and even a
-    LOST STREAMING CHECKPOINT — where Spark restarts batch ids from 0
-    and replays from ``starting_version`` — degrades to re-reading
-    already-folded change files whose rows all filter out. A competing
-    maintainer trips the pinned overwrite's CommitConflict and fails
-    the query rather than double-folding (single-maintainer contract,
-    same as :func:`maintain_rollup`).
+    ``_commit_version`` folded so far. Each batch folds only rows
+    above it, so a replayed batch (restart mid-fold) folds nothing
+    twice, and even a LOST STREAMING CHECKPOINT — where Spark restarts
+    batch ids from 0 and replays from ``starting_version`` — degrades
+    to re-reading already-folded change files whose rows all filter
+    out. A competing maintainer trips the pinned overwrite's
+    CommitConflict and fails the query rather than double-folding.
 
     Bootstrap falls out of replay: from ``starting_version=0`` the
     first batch IS the table's whole history folded into an empty
     rollup — no separate recompute path. For a table with deep history
     point ``starting_version`` at a recent version and seed the rollup
     with one batch recompute stamped ``txn={"app": app_id, "batch":
-    starting_version - 1}`` first.
+    starting_version - 1}`` first. Every commit in range must be
+    streamable: MERGE/DELETE/UPDATE written with ``cdf=True`` (see the
+    ``acid_cdf`` limitations).
 
     Note: Python data sources don't implement Spark's
     SupportsTriggerAvailableNow, so ``availableNow`` falls back to
@@ -248,8 +248,6 @@ def stream_maintain_rollup(
     that batch — is harmless here: the next run (or the always-on
     trigger) picks up the rest, and the txn watermark keeps every
     path exactly-once."""
-    from pyspark.sql import functions as F
-
     from ..sources.acid_cdf import register_acid_cdf
 
     register_acid_cdf(spark)
@@ -261,67 +259,25 @@ def stream_maintain_rollup(
     )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        src = AcidTable(spark, source_path)
-        rt = AcidTable(spark, rollup_path)
-        # pin the rollup version once — same TOCTOU discipline as
-        # maintain_rollup (post-r7 advice)
-        rollup_v = rt.latest_version()
-        consumed = rt.last_txn(
-            app_id, version=rollup_v if rollup_v >= 0 else None
-        )
-        # Persist the filtered micro-batch (r12): the watermark agg,
-        # the signed-delta fold, and the MIN/MAX touched-key frames
-        # each re-execute the batch plan, and every execution re-reads
-        # the change files through a Python data-source worker (task
-        # dispatch + Arrow hop per read). Unlike the MERGE change
-        # batch (persist A/B'd and REJECTED in r11 — fused codegen
-        # scan beat the cache barrier), this plan's leaf is the
-        # Python source itself, so caching the KB-sized change set
-        # once is cheaper than 3-4 worker round trips.
-        fresh = batch_df.filter(F.col("_commit_version") > consumed).persist()
-        try:
-            _fold_batch(src, rt, rollup_v, consumed, fresh)
-        finally:
-            fresh.unpersist()
+        def rows_after(consumed: int):
+            fresh = batch_df.filter(F.col("_commit_version") > consumed)
+            hi = fresh.agg(F.max("_commit_version")).collect()[0][0]
+            # None: the batch is fully below the folded offset (replay)
+            return None if hi is None else (fresh, int(hi))
 
-    def _fold_batch(
-        src: AcidTable,
-        rt: AcidTable,
-        rollup_v: int,
-        consumed: int,
-        fresh: DataFrame,
-    ) -> None:
-        # rollup_v/consumed are _fold's ONE pinned read — re-reading
-        # them here would reopen the double-fold TOCTOU the pin closed
-        hi = fresh.agg(F.max("_commit_version")).collect()[0][0]
-        if hi is None:
-            return  # batch fully below the folded watermark: replay
-        hi = int(hi)
-        if consumed < 0:
-            # empty rollup: fold the replayed history into a typed
-            # zero-row frame with exactly the recompute's schema
-            aggs = [F.sum(c).alias(out) for out, c in sums.items()]
-            if count_col is not None:
-                aggs.append(F.count(F.lit(1)).alias(count_col))
-            for out, (c, how) in (minmax or {}).items():
-                aggs.append(getattr(F, how)(F.col(c)).alias(out))
-            for out, c in (avgs or {}).items():
-                aggs.append(F.avg(F.col(c)).alias(out))
-                aggs.append(F.sum(F.col(c)).alias(f"{out}_sum"))
-                aggs.append(F.count(F.col(c)).alias(f"{out}_cnt"))
-            rollup_df = (
-                src.snapshot(version=hi).limit(0).groupBy(*keys).agg(*aggs)
+        # the offset max, the signed-delta fold and the MIN/MAX
+        # touched-key frames each execute the batch plan, whose leaf
+        # is the Python source: cache the KB-sized change set once
+        # instead of re-reading it through a Python worker per use
+        batch_df.persist()
+        try:
+            _fold_step(
+                AcidTable(spark, source_path), AcidTable(spark, rollup_path),
+                app_id, rows_after, keys, sums,
+                count_col=count_col, minmax=minmax, avgs=avgs,
             )
-        else:
-            rollup_df = rt.snapshot(version=rollup_v)
-        refreshed = src.fold_changes(
-            rollup_df, fresh, keys, sums, end=hi,
-            count_col=count_col, minmax=minmax, avgs=avgs,
-        )
-        rt.overwrite(
-            refreshed, txn={"app": app_id, "batch": hi},
-            expected_version=rollup_v,
-        )
+        finally:
+            batch_df.unpersist()
 
     writer = (
         changes.writeStream.foreachBatch(_fold)

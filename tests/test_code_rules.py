@@ -98,3 +98,95 @@ def test_file_pruning_is_decided_only_in_acid_log():
                     f"{rel}:{n}" for n in _pruning_decisions(f.read(), path)
                 ]
     assert found == [], f"file-pruning decisions outside acid_log: {found}"
+
+
+#: commit-entry keys whose presence decides what a commit changed
+_CHANGE_KEYS = ("cdc", "dv", "remove")
+#: operations whose name decides it
+_CHANGE_OPS = ("optimize", "overwrite")
+
+
+def _change_decisions(source: str, path: str) -> list[tuple[int, str, str]]:
+    """``(line, enclosing function, what)`` for each read of a commit
+    entry's ``"cdc"``/``"dv"``/``"remove"`` key (``e["k"]``,
+    ``e.get("k")``, ``"k" in e``) and each comparison with the
+    operation names ``"optimize"``/``"overwrite"`` in ``source``."""
+    tree = ast.parse(source, path)
+    found = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        what = None
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "get"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value in _CHANGE_KEYS
+        ):
+            what = node.args[0].value
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, ast.Load)
+            and isinstance(node.slice, ast.Constant)
+            and node.slice.value in _CHANGE_KEYS
+        ):
+            what = node.slice.value
+        elif isinstance(node, ast.Compare):
+            consts = [
+                n.value
+                for n in [node.left, *node.comparators]
+                if isinstance(n, ast.Constant)
+            ]
+            if any(c in _CHANGE_OPS for c in consts):
+                what = next(c for c in consts if c in _CHANGE_OPS)
+            elif isinstance(node.ops[0], (ast.In, ast.NotIn)) and any(
+                c in _CHANGE_KEYS for c in consts
+            ):
+                what = next(c for c in consts if c in _CHANGE_KEYS)
+        if what is not None:
+            found.append((node.lineno, fn, what))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return found
+
+
+def test_change_feed_is_classified_only_in_acid_log():
+    """What a commit changed is one function, ``acid_log.change_files``:
+    the batch change feed (``AcidTable.table_changes``) and the
+    ``acid_cdf`` stream never test an entry's ``cdc``/``dv``/``remove``
+    actions or its operation name themselves, and no module outside
+    ``acid_log`` reads a commit's ``cdc`` list except as file
+    references — the vacuum sweep (sidecars a retained commit still
+    names) and DELETE's cleanup of a sidecar it staged but did not
+    commit. A third change classification cannot appear unseen."""
+    probe = (
+        "def table_changes(e):\n"
+        "    if e.get('dv') or 'remove' in e:\n"
+        "        return e['cdc']\n"
+        "    return e['operation'] == 'overwrite'\n"
+    )
+    assert [w for _, _, w in _change_decisions(probe, "probe")] == [
+        "dv", "remove", "cdc", "overwrite",
+    ]
+    cdc_file_refs = {("sources/acid.py", "vacuum"), ("sources/acid.py", "delete")}
+    found = []
+    for root, _, names in os.walk(PKG):
+        for name in names:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+            if not name.endswith(".py") or rel == "sources/acid_log.py":
+                continue
+            with open(path) as f:
+                decisions = _change_decisions(f.read(), path)
+            for line, fn, what in decisions:
+                classifier = rel == "sources/acid_cdf.py" or (
+                    rel == "sources/acid.py" and fn == "table_changes"
+                )
+                stray_cdc = what == "cdc" and (rel, fn) not in cdc_file_refs
+                if classifier or stray_cdc:
+                    found.append(f"{rel}:{line} {fn} reads {what!r}")
+    assert found == [], f"change classification outside acid_log: {found}"

@@ -454,6 +454,38 @@ def test_acid_format_nan_column_keeps_its_rows(spark, tmp_path):
     assert [r["k"] for r in got] == [2]
 
 
+def test_acid_format_writer_keeps_nested_stats_beside_a_nan_column(tmp_path):
+    """Only the NaN column loses its footer statistics: the leaves of a
+    nested column in the same file keep theirs (``write_statistics``
+    names parquet leaf paths, not top-level columns)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from als_hadoop_spark.sources import acid_log
+
+    tbl = pa.table(
+        {
+            "k": pa.array([1, 2], pa.int64()),
+            "x": pa.array([1.0, float("nan")]),
+            "emb": pa.array([[0.5, 1.5], [2.5]], pa.list_(pa.float32())),
+            "s": pa.array([{"a": 1}, {"a": 4}], pa.struct([("a", pa.int64())])),
+        }
+    )
+    p = str(tmp_path / "f.parquet")
+    stats = acid_log.write_data_file(tbl, p)
+    assert stats == {"k": [1, 2]}
+    rg = pq.read_metadata(p).row_group(0)
+    has = {
+        rg.column(i).path_in_schema: bool(
+            rg.column(i).statistics and rg.column(i).statistics.has_min_max
+        )
+        for i in range(rg.num_columns)
+    }
+    assert has == {
+        "k": True, "x": False, "emb.list.element": True, "s.a": True,
+    }
+
+
 def test_acid_format_reads_past_a_nan_bound(spark, tmp_path):
     """Spark's parquet writer logs NaN as a float column's max; a NaN
     bound compares False against everything in Python, and the format

@@ -932,8 +932,8 @@ def test_maintain_rollup_interleaved_maintainer_never_double_folds(
     """Double-driver TOCTOU (post-r7 advice): a competing maintainer
     committing BETWEEN this step's pinned read and its overwrite must
     make this step yield with 0 — the change batch folds exactly once.
-    The race is injected deterministically inside incremental_refresh,
-    i.e. after last_txn/snapshot were read and before the overwrite."""
+    The race is injected deterministically inside fold_changes, i.e.
+    after last_txn/snapshot were read and before the overwrite."""
     from als_hadoop_spark.sources.acid import AcidTable
     from als_hadoop_spark.streaming.cdf_source import maintain_rollup
 
@@ -960,7 +960,7 @@ def test_maintain_rollup_interleaved_maintainer_never_double_folds(
         .coalesce(1)
     )
 
-    orig = AcidTable.incremental_refresh
+    orig = AcidTable.fold_changes
     state = {"injected": False}
 
     def interleaving(self, rollup, *a, **kw):
@@ -970,7 +970,7 @@ def test_maintain_rollup_interleaved_maintainer_never_double_folds(
             assert maintain_rollup(**args_b) == 1
         return orig(self, rollup, *a, **kw)
 
-    monkeypatch.setattr(AcidTable, "incremental_refresh", interleaving)
+    monkeypatch.setattr(AcidTable, "fold_changes", interleaving)
     assert maintain_rollup(**args_a) == 0  # A detects the conflict, yields
 
     got = {
@@ -978,7 +978,7 @@ def test_maintain_rollup_interleaved_maintainer_never_double_folds(
         for r in AcidTable(spark, roll_path).snapshot().collect()
     }
     assert got == {"g1": (17, 2), "g2": (5, 1)}  # folded ONCE
-    monkeypatch.setattr(AcidTable, "incremental_refresh", orig)
+    monkeypatch.setattr(AcidTable, "fold_changes", orig)
     assert maintain_rollup(**args_a) == 0  # caught up
 
 
@@ -999,15 +999,20 @@ def _upsert_k(matched, changes):
     return matched.join(changes.select("k"), "k", "anti").unionByName(changes)
 
 
-def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path):
-    """The r8 streaming CDF source (VERDICT r7 #1): reading the table
-    through ``spark.readStream.format("acid_cdf")`` with AvailableNow
-    must produce EXACTLY the rows of the batch ``table_changes(0)`` —
-    across append, CDC-sidecar MERGE (update pre/post images),
-    CDC-sidecar DELETE, and a second append."""
+@pytest.mark.parametrize("dv", [False, True], ids=["cow", "dv"])
+def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path, dv):
+    """The streaming CDF source: reading the table through
+    ``spark.readStream.format("acid_cdf")`` with AvailableNow must
+    produce EXACTLY the rows of the batch ``table_changes(0)`` — across
+    append, CDC-sidecar MERGE (update pre/post images), CDC-sidecar
+    DELETE, CDC-sidecar UPDATE, and a second append; with deletion
+    vectors on, the MERGE, DELETE and UPDATE mask rows instead of
+    rewriting files and commit no ``remove`` action."""
     from als_hadoop_spark.sources import register_acid_cdf
 
     src = _mini_acid(spark, str(tmp_path / "src"))
+    if dv:
+        src.set_property("deletionVectors", "true")
     src.merge(
         spark.createDataFrame(
             [(2, "g1", 50), (4, "g3", 7)], "k LONG, grp STRING, x LONG"
@@ -1015,6 +1020,7 @@ def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path):
         key="k", apply_fn=_upsert_k, cdf=True,
     )
     src.delete(F.col("k") == 1, cdf=True)
+    src.update({"x": "x + 1"}, "k = 3", cdf=True)
     src.append(
         spark.createDataFrame([(5, "g2", 20)], "k LONG, grp STRING, x LONG")
         .coalesce(1)
@@ -1027,9 +1033,10 @@ def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path):
         spark.readStream.format("acid_cdf").option("path", src.path).load()
     )
     assert stream.isStreaming
+    name = f"t_acid_cdf_{'dv' if dv else 'cow'}"
     q = (
         stream.writeStream.format("memory")
-        .queryName("t_acid_cdf")
+        .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -1039,8 +1046,8 @@ def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path):
         assert q.awaitTermination(180)
     finally:
         q.stop()
-    got = sorted(map(tuple, spark.table("t_acid_cdf").select(*cols).collect()))
-    assert got == want and len(got) == 8
+    got = sorted(map(tuple, spark.table(name).select(*cols).collect()))
+    assert got == want and len(got) == 10
 
 
 def test_acid_cdf_resumes_from_spark_checkpoint(spark, tmp_path):
@@ -1108,6 +1115,112 @@ def test_acid_cdf_merge_without_sidecar_fails_planning(spark, tmp_path):
     with pytest.raises(Exception, match="cdf=True"):
         q.awaitTermination(180)
     q.stop()
+
+
+def test_acid_cdf_refuses_commits_without_sidecar_at_planning(
+    spark, tmp_path
+):
+    """A MERGE, DELETE or UPDATE committed without ``cdf=True`` has a
+    cross-file change set, copy-on-write and deletion-vector alike, so
+    planning its version must raise and name the fix — never plan an
+    empty or insert-only batch. Driven at the reader level, the
+    surface Structured Streaming calls."""
+    from als_hadoop_spark.sources.acid_cdf import build_acid_cdf_source
+
+    t = _mini_acid(spark, str(tmp_path / "src"))  # v0
+    upsert = spark.createDataFrame(
+        [(2, "g1", 50), (4, "g3", 7)], "k LONG, grp STRING, x LONG"
+    ).coalesce(1)
+    t.merge(upsert, key="k", apply_fn=_upsert_k)  # v1: copy-on-write
+    t.set_property("deletionVectors", "true")  # v2: metadata only
+    t.merge(upsert, key="k", apply_fn=_upsert_k)  # v3: DV MERGE
+    t.delete(F.col("k") == 1)  # v4: DV DELETE
+    t.update({"x": "x + 1"}, "k = 3")  # v5: DV UPDATE
+    log = t.history()
+    assert "remove" in log[1]
+    assert all("dv" in e and "remove" not in e for e in log[3:])
+    reader = build_acid_cdf_source()(options={"path": t.path}).streamReader(
+        spark.createDataFrame([], "k long, grp string, x long, "
+                              "_change_type string, _commit_version long").schema
+    )
+    assert len(reader.partitions({"version": -1}, {"version": 0})) == 1
+    assert [p.path for p in reader.partitions({"version": 1}, {"version": 2})] == [None]
+    for v in (1, 3, 4, 5):
+        with pytest.raises(ValueError, match="cdf=True"):
+            reader.partitions({"version": v - 1}, {"version": v})
+
+
+def test_maintainers_agree_on_a_deletion_vector_source(
+    spark, tmp_path, monkeypatch
+):
+    """Both maintainers share one fold step: over a deletion-vector
+    source (append, DV MERGE with cdf=True, DV DELETE with cdf=True of
+    a whole group), ``maintain_rollup`` run step by step and
+    ``stream_maintain_rollup`` each reach the recompute's rollup —
+    SUM, COUNT, MAX and AVG, the deleted group gone. A batch step after
+    the bootstrap plans ``table_changes`` exactly once."""
+    from als_hadoop_spark.sources.acid import AcidTable
+    from als_hadoop_spark.streaming.cdf_source import (
+        maintain_rollup,
+        stream_maintain_rollup,
+    )
+
+    src = _mini_acid(spark, str(tmp_path / "src"))
+    src.set_property("deletionVectors", "true")
+    spec = dict(
+        spark=spark, source_path=src.path, keys=["grp"], sums={"sx": "x"},
+        count_col="n", minmax={"mx": ("x", "max")}, avgs={"ax": "x"},
+    )
+    batch = dict(spec, rollup_path=str(tmp_path / "roll_b"),
+                 checkpoint_dir=str(tmp_path / "ck_b"))
+    stream = dict(spec, rollup_path=str(tmp_path / "roll_s"),
+                  checkpoint_dir=str(tmp_path / "ck_s"))
+
+    def recompute():
+        return {
+            r["grp"]: (r["sx"], r["n"], r["mx"], r["ax"])
+            for r in src.snapshot()
+            .groupBy("grp")
+            .agg(F.sum("x").alias("sx"), F.count("*").alias("n"),
+                 F.max("x").alias("mx"), F.avg("x").alias("ax"))
+            .collect()
+        }
+
+    def rollup(args):
+        return {
+            r["grp"]: (r["sx"], r["n"], r["mx"], r["ax"])
+            for r in AcidTable(spark, args["rollup_path"]).snapshot().collect()
+        }
+
+    assert maintain_rollup(**batch) == 2  # bootstrap through v1
+    planned = []
+    orig = AcidTable.table_changes
+
+    def spy(self, *a, **kw):
+        planned.append(a)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(AcidTable, "table_changes", spy)
+    src.merge(
+        spark.createDataFrame(
+            [(2, "g1", 50), (4, "g3", 7)], "k LONG, grp STRING, x LONG"
+        ).coalesce(1),
+        key="k", apply_fn=_upsert_k, cdf=True,
+    )
+    assert maintain_rollup(**batch) == 1
+    assert planned == [(2, 2)]
+    assert rollup(batch) == recompute()
+    src.delete(F.col("grp") == "g1", cdf=True)
+    assert maintain_rollup(**batch) == 1
+    assert planned == [(2, 2), (3, 3)]
+    monkeypatch.setattr(AcidTable, "table_changes", orig)
+    want = recompute()
+    assert "g1" not in want and set(want) == {"g2", "g3"}
+    assert rollup(batch) == want
+
+    q = stream_maintain_rollup(**stream)
+    assert q.awaitTermination(180)
+    assert rollup(stream) == want
 
 
 def test_stream_maintain_rollup_lifecycle(spark, tmp_path):
