@@ -22,7 +22,11 @@ cluster sizing follows $SPARK_GRAFT_CPUS / spark-submit conf.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
+
+#: the checkout holding this package, where ``__spark_entry__.py`` lives
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -48,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "list":
         # no Spark session needed to enumerate the registry
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, _CHECKOUT)
         import __spark_entry__ as entry_mod
 
         oracles = entry_mod.oracle_sql()
@@ -72,7 +76,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"{rmse}")
         print(f"# global-mean baseline rmse: {mean_rmse}", file=sys.stderr)
     elif args.cmd == "query":
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, _CHECKOUT)
         import __spark_entry__ as entry_mod
 
         qs = entry_mod.queries()

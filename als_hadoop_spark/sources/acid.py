@@ -102,6 +102,7 @@ import os
 import time
 import uuid
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -214,6 +215,15 @@ def _range_conjuncts(col: str, lo, hi) -> list[tuple]:
     if lo is not None and lo == hi:
         return [(col, "=", lo)]
     return [(col, op, v) for op, v in ((">=", lo), ("<=", hi)) if v is not None]
+
+
+def _in_thread(spark: SparkSession, fn):
+    """``fn`` wrapped for a pool thread so the Spark jobs it starts
+    carry the calling thread's job group, description and tags, which
+    pyspark pins to the thread that set them."""
+    wrap = inheritable_thread_target(spark)
+    # without pinned threads pyspark hands the session back unwrapped
+    return fn if wrap is spark else wrap(fn)
 
 
 def _union_by_name(frames) -> DataFrame:
@@ -473,11 +483,7 @@ class AcidTable:
         pred = " AND ".join(f"({e})" for e in cons.values())
         bad = staged.filter(f"NOT ({pred})").count()
         if bad:
-            for a in adds:
-                try:
-                    os.remove(os.path.join(self.path, a["path"]))
-                except OSError:
-                    pass
+            self._discard([a["path"] for a in adds])
             raise ConstraintViolation(
                 f"{bad} row(s) violate CHECK constraints {sorted(cons)}; "
                 "commit aborted"
@@ -559,14 +565,16 @@ class AcidTable:
             return self.spark.read.schema(sch).parquet(*paths)
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
-    def _stage_cdc(self, df: DataFrame, entry: dict) -> None:
+    def _stage_cdc(self, df: DataFrame, entry: dict) -> list[str]:
         """Stage ``df`` as the commit's CDC sidecar and record its
         paths (plus the staged schema, so ``table_changes`` readers
-        skip schema inference) on ``entry``."""
+        skip schema inference) on ``entry``. Returns the paths."""
         adds = self._stage_files(df, subdir=_CDC_DIR)
-        entry["cdc"] = [a["path"] for a in adds]
+        paths = [a["path"] for a in adds]
+        entry["cdc"] = paths
         if adds and adds[0].get("schema"):
             entry["cdc_schema"] = adds[0]["schema"]
+        return paths
 
     def _partition_layout(self, state: dict) -> tuple[str, ...] | None:
         """The table's ``partitionBy`` column tuple, derived from the
@@ -658,7 +666,9 @@ class AcidTable:
             with ThreadPoolExecutor(
                 max_workers=min(8, len(combos))
             ) as pool:
-                for staged in pool.map(stage_one, combos):
+                for staged in pool.map(
+                    _in_thread(self.spark, stage_one), combos
+                ):
                     adds.extend(staged)
             return adds
         finally:
@@ -829,12 +839,10 @@ class AcidTable:
         ``__acid_base``/``__acid_pos`` helper columns (rows to mask).
         Returns ``(sidecar rel paths, {data file rel path: n masked})``
         — empty when no row matched (the caller then commits no DV).
-        The per-file counts come from the caller's PERSISTED matched
-        frame (every DV writer persists it), not a read-back of the
-        just-staged sidecar — the sidecar write materializes the
-        persist, so the count is a tiny cached-data aggregate instead
-        of a parquet listing + schema + scan round trip (r12, guide
-        §5: two driver jobs off every DV commit)."""
+        ``positions`` is the matched frame :meth:`_write_rows` persists,
+        so the per-file counts are a tiny cached-data aggregate after
+        the sidecar write materialized the persist, not a read-back of
+        the just-staged sidecar."""
         pos = positions.select(
             F.col("__acid_base").alias("file"),
             F.col("__acid_pos").cast("bigint").alias("pos"),
@@ -857,14 +865,158 @@ class AcidTable:
             .collect()
         }
         if not counts:  # zero masked rows: drop the empty sidecar
-            for s in sidecars:
-                try:
-                    os.remove(os.path.join(self.path, s))
-                except OSError:
-                    pass
+            self._discard(sidecars)
             return [], {}
         base_to_rel = {os.path.basename(f): f for f in state["live"]}
         return sidecars, {base_to_rel[b]: n for b, n in counts.items()}
+
+    def _discard(self, paths, dirs=()) -> None:
+        """Remove staged files no commit references (their names are
+        uuid-based, so nothing else can own them), then each of
+        ``dirs`` that is left empty."""
+        for p in paths:
+            try:
+                os.remove(os.path.join(self.path, p))
+            except OSError:
+                pass
+        for d in dirs:
+            try:
+                os.rmdir(os.path.join(self.path, d))
+            except OSError:  # not empty: other writers' files live there
+                pass
+
+    def _write_rows(
+        self,
+        state: dict,
+        base: int,
+        operation: str,
+        mode: str,
+        matched: DataFrame | None,
+        replace,
+        change_rows=None,
+        txn: dict | None = None,
+        empty=None,
+    ) -> int:
+        """The one write step of MERGE, DELETE and UPDATE in both modes:
+        stage, mask, validate, log the changes and commit ``base + 1``.
+
+        ``matched`` is the statement's matched rows with the
+        ``__acid_base``/``__acid_pos`` helper columns (None: no file can
+        hold a match). The statement's callbacks see ``rows``: in
+        ``"cow"`` mode every row of the files holding a match, which
+        the commit removes; in ``"dv"`` mode the matched rows, which a
+        deletion-vector sidecar masks.
+
+        - ``replace(rows)`` is what the commit adds as data files — in
+          cow mode the whole rewrite of those files; ``replace=None``
+          adds none (a DV DELETE);
+        - ``change_rows(rows, adds)`` is the CDC rows given the staged
+          add-actions, or None when ``cdf`` is off;
+        - ``empty()`` is the ``rows`` a MERGE sees when nothing matched.
+          Without it (DELETE, UPDATE) a statement that matched nothing
+          commits nothing, stages nothing that survives, and returns
+          ``base``.
+
+        In dv mode ``matched`` is persisted once for the whole step, and
+        the sidecar is staged on a two-thread pool beside the data
+        write — or beside the CDC write when nothing else is written —
+        so the second job fills the first one's task tail. The staged
+        data files are CHECKed (a DELETE adds no row, so it is not),
+        the CDC rows staged, ``txn`` stamped, and the entry published,
+        or :class:`CommitConflict` raised. When any step raises, or the
+        statement matched nothing, every file the step staged is
+        removed, and so are the staging and sidecar dirs it created."""
+        entry: dict = {"operation": operation}
+        staged: list[str] = []
+        fresh = [
+            d for d in (_STAGE_DIR, _DV_DIR, _CDC_DIR)
+            if not os.path.isdir(os.path.join(self.path, d))
+        ]
+        masking = mode == "dv" and matched is not None
+        if masking:
+            matched = matched.persist()
+        keep = False
+        try:
+            touched = (
+                self._files_of(state, matched)
+                if mode == "cow" and matched is not None
+                else []
+            )
+            if masking:
+                rows = matched.drop("__acid_base", "__acid_pos")
+            elif touched:
+                rows = self._assemble(state, files=touched)
+            elif empty is not None:
+                rows = empty()
+            else:
+                return base
+            written = replace(rows) if replace is not None else None
+
+            def log_changes(adds: list[dict]) -> None:
+                staged.extend(self._stage_cdc(change_rows(rows, adds), entry))
+
+            def stage_output() -> list[dict]:
+                if written is None:
+                    # nothing staged to diff against: the change rows
+                    # come from `rows` alone and overlap the mask
+                    if change_rows is not None:
+                        log_changes([])
+                    return []
+                adds = self._stage_files_layout_aware(
+                    written,
+                    self._partition_layout(state),
+                    self._bloom_layout(state),
+                )
+                staged.extend(a["path"] for a in adds)
+                return adds
+
+            def mask() -> tuple[list[str], dict]:
+                sidecars, files = self._stage_dv(state, matched)
+                staged.extend(sidecars)
+                return sidecars, files
+
+            if masking:
+                from concurrent.futures import ThreadPoolExecutor
+
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    f_mask = pool.submit(_in_thread(self.spark, mask))
+                    f_out = pool.submit(_in_thread(self.spark, stage_output))
+                # both branches finished: whatever either staged is in
+                # `staged` before a failed one re-raises here
+                sidecars, dv_files = f_mask.result()
+                adds = f_out.result()
+            else:
+                sidecars, dv_files, adds = [], {}, stage_output()
+            if not (touched or dv_files or empty is not None):
+                return base  # a DELETE or UPDATE that matched nothing
+            if operation != "delete":
+                self._validate(adds)
+            if written is not None:
+                entry["add"] = adds
+            if mode == "cow":
+                entry["remove"] = touched
+            if dv_files:
+                entry["dv"] = {"sidecars": sidecars, "files": dv_files}
+            if (
+                change_rows is not None
+                and written is not None
+                and (adds or touched or dv_files)
+            ):
+                log_changes(adds)
+            if txn is not None:
+                entry["txn"] = txn
+            # from here a raise may come after a durable publish, when
+            # the staged files are the commit's: keep them
+            keep = True
+            if self._try_commit(base + 1, entry):
+                return base + 1
+            keep = False
+            raise CommitConflict(f"table changed during {operation}")
+        finally:
+            if not keep:
+                self._discard(staged, fresh)
+            if masking:
+                matched.unpersist()
 
     def merge(
         self,
@@ -875,60 +1027,58 @@ class AcidTable:
         cdf: bool = False,
         mode: str = "auto",
     ) -> int:
-        """Copy-on-write MERGE: rewrite ONLY the data files containing
-        keys present in ``changes``; carry every other file over by
-        reference. ``apply_fn(matched_rows, changes) -> DataFrame``
-        computes the merged replacement for the touched rows (the
-        caller owns the WHEN MATCHED/NOT MATCHED semantics — e.g. the
-        q_merge_upsert fold); rows of untouched files never move.
+        """MERGE ``changes`` into the table on ``key``. The matched rows
+        are those of the candidate files whose ``key`` is in
+        ``changes``; ``apply_fn(rows, changes) -> DataFrame`` computes
+        what replaces them (the caller owns the WHEN MATCHED/NOT MATCHED
+        semantics — e.g. the q_merge_upsert fold). Rows of untouched
+        files never move.
 
-        Touched-file discovery is two-stage: (1) the commit log prunes
-        candidate files (``acid_log.prune_files``) — by ``key IN
-        (...)`` when the change set has at most 64 distinct non-NULL
-        keys on a table with blooms (partition values, [min, max] and
-        blooms all apply), else by the change keys' [min, max] (one
-        tiny agg) — so files that cannot hold a change key are never
-        opened; (2) only the candidates are scanned and semi-joined
-        against the distinct change keys (no forced broadcast — AQE
-        picks the join strategy from the actual change size, so a
-        backfill-sized change set doesn't OOM a broadcast). A
-        selective MERGE on a range-clustered or bloom'd table
+        Candidate discovery: the commit log prunes the live files
+        (``acid_log.prune_files``) — by ``key IN (...)`` when the change
+        set has at most 64 distinct non-NULL keys on a table with blooms
+        (partition values, [min, max] and blooms all apply), else by the
+        change keys' [min, max] (one tiny agg) — so files that cannot
+        hold a change key are never opened. Only the candidates are
+        scanned and semi-joined against the distinct change keys (no
+        forced broadcast: AQE picks the join from the actual change
+        size). A selective MERGE on a range-clustered or bloom'd table
         therefore reads O(matching files), not O(table).
+
+        ``mode``: ``"cow"`` (copy-on-write) removes the files holding a
+        matched row and adds ``apply_fn``'s output, so ``apply_fn`` sees
+        EVERY row of those files and must carry the unmatched ones.
+        ``"dv"`` (merge-on-read) masks the matched rows with a
+        deletion-vector sidecar — no data file is rewritten — and
+        ``apply_fn`` sees only the matched rows; an apply_fn that
+        carries unmatched rows (the canonical full-outer upsert does,
+        via its op-IS-NULL arm) produces no duplicates, since that arm
+        is simply empty. ``"auto"`` (default) follows the table property
+        ``deletionVectors`` (:meth:`set_property`). When nothing
+        matches, ``apply_fn`` sees an empty table-shaped frame (the
+        changes' shape on an empty table) and its output, the inserts,
+        still commits.
 
         ``cdf=True`` additionally stages a CDC sidecar under
         ``_acid_cdc/`` with the precise row-level change set (update
-        pre/post pairing on ``key``) for ``table_changes`` readers —
-        opt-in, like Delta's ``enableChangeDataFeed`` (the sidecar
-        costs one exceptAll diff over the touched rows plus a small
-        parquet write per merge). Without it, ``table_changes`` still
-        derives insert/delete rows from the commit's add/remove files,
-        losing only the update pairing.
-
-        ``mode``: ``"cow"`` is the copy-on-write described above;
-        ``"dv"`` is MERGE-ON-READ — the key-matched rows of candidate
-        files are masked by a deletion-vector sidecar (no data file
-        rewritten) and only ``apply_fn``'s output lands as new files.
-        In dv mode ``apply_fn`` receives the MATCHED rows (key ∈
-        change keys), not every row of the touched files — unmatched
-        rows stay in place by NOT being masked, so an apply_fn that
-        carries them (the canonical full-outer upsert does, via its
-        op-IS-NULL arm) produces no duplicates: the carried arm is
-        simply empty. ``"auto"`` (default) follows the table property
-        ``deletionVectors`` (:meth:`set_property`).
+        pre/post pairing on ``key``, one multiset diff over the touched
+        rows) for ``table_changes`` readers — opt-in, like Delta's
+        ``enableChangeDataFeed``. Without it, ``table_changes`` derives
+        the change rows from the commit's files, losing only the update
+        pairing. ``txn`` stamps the commit like :meth:`append`'s.
 
         Snapshot-isolated: raises CommitConflict if the table head
-        moved between the snapshot read and the commit.
+        moved between the snapshot read and the commit; a failed MERGE
+        leaves no staged file behind.
 
         ``changes`` is not persisted: each consumer's fused plan over a
         small change batch is cheaper than a cache write and read."""
         base = self.latest_version()
         state = self._state(base)
         mode = self._resolve_mode(mode, state)
-        live = sorted(state["live"])
-        touched: list[str] = []
-        candidates: list[str] = []
         keys = changes.select(key).distinct()
-        if live:
+        matched = None
+        if state["live"]:
             ks: list = []
             has_blooms = any(a.get("bloom") for a in state["live"].values())
             if has_blooms:
@@ -967,146 +1117,47 @@ class AcidTable:
                 ).first()
                 conjuncts = _range_conjuncts(key, bounds["lo"], bounds["hi"])
             candidates = acid_log.prune_files(state, conjuncts)
-            if candidates and mode == "cow":
-                # file discovery rides the __acid_base helper column
-                # (NOT input_file_name(), which rejects the multi-
-                # source plan a DV anti-join makes of the read)
-                cand = self._assemble(
-                    state, files=candidates, with_pos=True
-                )
-                touched = self._files_of(
-                    state,
-                    cand.join(keys, key, "semi"),
-                )
-        if mode == "dv":
-            return self._merge_dv(
-                state, base, changes, keys, apply_fn, candidates, txn,
-                cdf,
-            )
-        if touched:
-            touched_rows = self._assemble(state, files=touched)
-        elif live:
-            touched_rows = self.spark.createDataFrame(
-                [], self._assemble(state).schema
-            )
-        else:  # empty table: apply_fn sees an empty change-shaped frame
-            touched_rows = self.spark.createDataFrame([], changes.schema)
-        merged = apply_fn(touched_rows, changes)
-        # preserve a partitionBy layout: replacement files go back into
-        # their col=value/ dirs with partition metadata, like OPTIMIZE —
-        # otherwise every copy-on-write MERGE erodes planning-time
-        # partition elimination toward zero under a CDC workload
-        adds = self._stage_files_layout_aware(
-            merged, self._partition_layout(state), self._bloom_layout(state)
-        )
-        self._validate(adds)
-        entry = {"operation": "merge", "add": adds, "remove": touched}
-        if cdf and adds:
-            # diff the STAGED files (already on disk — no recompute of
-            # the merge plan) against the rows of the replaced files
-            after = self._read_staged(adds)
-            cdc = self._cdc_diff(touched_rows, after, key)
-            self._stage_cdc(cdc, entry)
-        if txn is not None:
-            entry["txn"] = txn
-        if not self._try_commit(base + 1, entry):
-            raise CommitConflict("table changed during merge")
-        return base + 1
-
-    def _merge_dv(
-        self,
-        state: dict,
-        base: int,
-        changes: DataFrame,
-        keys: DataFrame,
-        apply_fn,
-        candidates: list[str],
-        txn: dict | None,
-        cdf: bool,
-    ) -> int:
-        """MERGE-ON-READ arm of :meth:`merge`: mask the key-matched
-        rows of candidate files with a position sidecar, write only
-        ``apply_fn``'s output as new files. A k-row change set commits
-        KBs of sidecar + k rows of new data — ZERO existing data files
-        rewritten (pytest-pinned); the read-side cost is the one
-        DV anti-join in ``_assemble``; OPTIMIZE materializes.
-        ``keys`` is merge()'s single-column distinct-key frame (its
-        one column IS the merge key), built once in merge() and shared
-        with the cow path; it is recomputed lazily per consumer, like
-        the unpersisted change batch (merge())."""
-        key = keys.columns[0]
-        sidecars: list[str] = []
-        dv_files: dict = {}
-        matched = None
-        try:
             if candidates:
-                cand = self._assemble(
+                # the __acid_base helper column names each row's file
+                # (input_file_name() rejects the multi-source plan a
+                # DV anti-join makes of the read)
+                matched = self._assemble(
                     state, files=candidates, with_pos=True
-                )
-                matched = cand.join(keys, key, "semi").persist()
-                matched_rows = matched.drop("__acid_base", "__acid_pos")
-            elif state["live"]:
-                matched_rows = self.spark.createDataFrame(
-                    [], self._assemble(state).schema
-                )
-            else:
-                matched_rows = self.spark.createDataFrame([], changes.schema)
-            merged = apply_fn(matched_rows, changes)
-            if matched is not None:
-                # the DV sidecar write and the replacement-file write
-                # are independent Spark jobs (both sides of the same
-                # persisted `matched`): submit them from two driver
-                # threads so the second job back-fills the first one's
-                # task tail instead of waiting it out (guide §2.6, the
-                # pattern _stage_files_layout_aware already uses).
-                from concurrent.futures import ThreadPoolExecutor
+                ).join(keys, key, "semi")
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_dv = pool.submit(self._stage_dv, state, matched)
-                    f_adds = pool.submit(
-                        self._stage_files_layout_aware,
-                        merged,
-                        self._partition_layout(state),
-                        self._bloom_layout(state),
-                    )
-                    sidecars, dv_files = f_dv.result()
-                    adds = f_adds.result()
-            else:
-                adds = self._stage_files_layout_aware(
-                    merged,
-                    self._partition_layout(state),
-                    self._bloom_layout(state),
-                )
-            self._validate(adds)
-            entry: dict = {"operation": "merge", "add": adds}
-            if dv_files:
-                entry["dv"] = {"sidecars": sidecars, "files": dv_files}
-            if cdf and (adds or dv_files):
-                after = (
-                    self._read_staged(adds) if adds
-                    else matched_rows.limit(0)
-                )
-                cdc = self._cdc_diff(matched_rows, after, key)
-                self._stage_cdc(cdc, entry)
-            if txn is not None:
-                entry["txn"] = txn
-            if not self._try_commit(base + 1, entry):
-                raise CommitConflict("table changed during merge")
-            return base + 1
-        finally:
-            if matched is not None:
-                matched.unpersist()
+        def change_rows(rows, adds):
+            # diff the STAGED files (already on disk: no recompute of
+            # the merge plan) against the rows they replace
+            after = self._read_staged(adds) if adds else rows.limit(0)
+            return self._cdc_diff(rows, after, key)
+
+        return self._write_rows(
+            state,
+            base,
+            "merge",
+            mode,
+            matched,
+            lambda rows: apply_fn(rows, changes),
+            change_rows if cdf else None,
+            txn,
+            empty=lambda: self.spark.createDataFrame(
+                [],
+                (self._assemble(state) if state["live"] else changes).schema,
+            ),
+        )
 
     def delete(self, predicate, cdf: bool = False, mode: str = "auto") -> int:
-        """Copy-on-write DELETE: rewrite only files holding matching
-        rows (footer-stats row-group pruning applies to the find).
-        ``predicate`` is a Column or a SQL string. ``cdf=True`` stages
-        the deleted rows as a ``_change_type='delete'`` CDC sidecar for
+        """DELETE the rows where ``predicate`` (a Column or a SQL
+        string) is TRUE; rows where it is NULL are kept, the SQL
+        semantics. ``mode="cow"`` rewrites only the files holding
+        matching rows (footer-stats row-group pruning applies to the
+        find); ``"dv"`` masks the matching rows with a deletion-vector
+        sidecar and rewrites nothing (merge-on-read); ``"auto"`` follows
+        the ``deletionVectors`` table property. ``cdf=True`` stages the
+        deleted rows as a ``_change_type='delete'`` CDC sidecar for
         ``table_changes`` (without it the same rows are derived from
-        the removed files at read time). ``mode="dv"`` masks the
-        matching rows with a deletion-vector sidecar instead of
-        rewriting their files (merge-on-read); ``"auto"`` follows the
-        ``deletionVectors`` table property."""
+        the commit's files at read time). A DELETE that matches nothing
+        commits nothing and returns the current version."""
         if isinstance(predicate, str):
             predicate = F.expr(predicate)
         base = self.latest_version()
@@ -1114,72 +1165,24 @@ class AcidTable:
         if not state["live"]:
             return base
         mode = self._resolve_mode(mode, state)
-        if mode == "dv":
-            matched = (
-                self._assemble(state, with_pos=True)
-                .filter(predicate)
-                .persist()
+        # NOT(pred) is NULL where pred is, and filter drops those rows:
+        # the cow rewrite keeps them explicitly
+        kept = ~F.coalesce(predicate, F.lit(False))
+        return self._write_rows(
+            state,
+            base,
+            "delete",
+            mode,
+            self._assemble(state, with_pos=True).filter(predicate),
+            (lambda rows: rows.filter(kept)) if mode == "cow" else None,
+            (
+                lambda rows, adds: rows.filter(predicate).withColumn(
+                    "_change_type", F.lit("delete")
+                )
             )
-            try:
-                entry: dict = {"operation": "delete"}
-                if cdf:
-                    # sidecar and CDC stage reads are independent jobs
-                    # over the same persisted `matched` — overlap them
-                    # (guide §2.6), same pattern as _merge_dv
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    gone = matched.drop(
-                        "__acid_base", "__acid_pos"
-                    ).withColumn("_change_type", F.lit("delete"))
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        f_dv = pool.submit(self._stage_dv, state, matched)
-                        f_cdc = pool.submit(self._stage_cdc, gone, entry)
-                        sidecars, dv_files = f_dv.result()
-                        f_cdc.result()
-                else:
-                    sidecars, dv_files = self._stage_dv(state, matched)
-                if not dv_files:
-                    # nothing matched: no commit — drop the (empty)
-                    # CDC staging the overlapped path may have written
-                    for p in entry.get("cdc", ()):
-                        try:
-                            os.remove(os.path.join(self.path, p))
-                        except OSError:
-                            pass
-                    return base
-                entry["dv"] = {"sidecars": sidecars, "files": dv_files}
-                if not self._try_commit(base + 1, entry):
-                    raise CommitConflict("table changed during delete")
-                return base + 1
-            finally:
-                matched.unpersist()
-        snap = self._assemble(state, with_pos=True)
-        touched = self._files_of(state, snap.filter(predicate))
-        if not touched:
-            return base
-        # NOT(pred) is NULL for NULL-evaluating rows and filter drops
-        # them — rows the predicate never MATCHED would silently vanish
-        # from the rewrite. SQL DELETE semantics: remove only rows where
-        # the predicate is TRUE; NULL-evaluating rows are kept.
-        kept = self._assemble(state, files=touched).filter(
-            ~F.coalesce(predicate, F.lit(False))
+            if cdf
+            else None,
         )
-        # layout-preserving rewrite, same rationale as merge: surviving
-        # rows of a partitioned file land back in their col=value/ dir
-        adds = self._stage_files_layout_aware(
-            kept, self._partition_layout(state), self._bloom_layout(state)
-        )
-        entry = {"operation": "delete", "add": adds, "remove": touched}
-        if cdf:
-            gone = (
-                self._assemble(state, files=touched)
-                .filter(predicate)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            self._stage_cdc(gone, entry)
-        if not self._try_commit(base + 1, entry):
-            raise CommitConflict("table changed during delete")
-        return base + 1
 
     def update(
         self,
@@ -1189,18 +1192,20 @@ class AcidTable:
         mode: str = "auto",
     ) -> int:
         """UPDATE ... SET: rewrite the rows matching ``predicate``
-        with ``assignments`` ({column: Column-or-SQL-expr}) applied.
-        All assignment expressions evaluate against the ORIGINAL row
-        (one projection — ``SET a=b, b=a`` swaps, the SQL semantics);
-        rows where the predicate is NULL are kept unchanged, matching
-        DELETE's NULL handling. ``mode="cow"`` rewrites only the files
-        holding matching rows; ``"dv"`` masks the matched rows with a
-        deletion-vector sidecar and appends their updated images (a
-        k-row update commits KBs of sidecar + k rows — zero data files
-        rewritten); ``"auto"`` follows the ``deletionVectors`` table
-        property. ``cdf=True`` stages precise update_preimage/
-        update_postimage CDC rows; without it ``table_changes`` derives
-        the change set as delete+insert pairs."""
+        with ``assignments`` ({column: Column-or-SQL-expr}) applied,
+        each cast to its column's type. All assignment expressions
+        evaluate against the ORIGINAL row (one projection — ``SET a=b,
+        b=a`` swaps, the SQL semantics); rows where the predicate is
+        NULL are kept unchanged, matching DELETE's NULL handling.
+        ``mode="cow"`` rewrites only the files holding matching rows;
+        ``"dv"`` masks the matched rows with a deletion-vector sidecar
+        and adds their updated images (a k-row update commits KBs of
+        sidecar + k rows — zero data files rewritten); ``"auto"``
+        follows the ``deletionVectors`` table property. ``cdf=True``
+        stages precise update_preimage/update_postimage CDC rows;
+        without it ``table_changes`` derives the change set as
+        delete+insert pairs. An UPDATE that matches nothing commits
+        nothing and returns the current version."""
         if not assignments:
             raise ValueError("update: no assignments")
         exprs = {
@@ -1219,9 +1224,9 @@ class AcidTable:
         if not state["live"]:
             return base
         mode = self._resolve_mode(mode, state)
-        # ONE assembled read serves schema inference, dv matching, and
-        # cow discovery — assembling twice would repeat the mergeSchema
-        # footer pass over every live file (r11 review)
+        # ONE assembled read serves schema inference and the match —
+        # assembling twice would repeat the mergeSchema footer pass
+        # over every live file
         snap = self._assemble(state, with_pos=True)
         snap_schema = {
             f.name: f.dataType
@@ -1235,81 +1240,28 @@ class AcidTable:
         # literal like 0.0 parses as DECIMAL(1,1) and would otherwise
         # silently retype a DOUBLE column in the rewritten files
         exprs = {c: e.cast(snap_schema[c]) for c, e in exprs.items()}
-        if mode == "dv":
-            matched = snap.filter(hit).persist()
-            try:
-                # sidecar mask and updated-image writes are independent
-                # jobs over the persisted `matched` — overlap them
-                # (guide §2.6, same pattern as _merge_dv). An empty
-                # match stages an empty add set (zero rows → zero or
-                # empty part files), which the no-commit path discards.
-                from concurrent.futures import ThreadPoolExecutor
 
-                before = matched.drop("__acid_base", "__acid_pos")
-                after = before.withColumns(exprs)
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_dv = pool.submit(self._stage_dv, state, matched)
-                    f_adds = pool.submit(
-                        self._stage_files_layout_aware,
-                        after,
-                        self._partition_layout(state),
-                        self._bloom_layout(state),
-                    )
-                    sidecars, dv_files = f_dv.result()
-                    adds = f_adds.result()
-                if not dv_files:
-                    # nothing matched: no commit — discard staged adds
-                    for a in adds:
-                        try:
-                            os.remove(os.path.join(self.path, a["path"]))
-                        except OSError:
-                            pass
-                    return base
-                self._validate(adds)
-                entry: dict = {
-                    "operation": "update",
-                    "add": adds,
-                    "dv": {"sidecars": sidecars, "files": dv_files},
-                }
-                if cdf:
-                    cdc = before.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ).unionByName(
-                        after.withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                    self._stage_cdc(cdc, entry)
-                if not self._try_commit(base + 1, entry):
-                    raise CommitConflict("table changed during update")
-                return base + 1
-            finally:
-                matched.unpersist()
-        touched = self._files_of(state, snap.filter(hit))
-        if not touched:
-            return base
-        rows = self._assemble(state, files=touched)
-        rewritten = rows.withColumns(
-            {c: F.when(hit, e).otherwise(F.col(c)) for c, e in exprs.items()}
-        )
-        adds = self._stage_files_layout_aware(
-            rewritten, self._partition_layout(state), self._bloom_layout(state)
-        )
-        self._validate(adds)
-        entry = {"operation": "update", "add": adds, "remove": touched}
-        if cdf:
+        def change_rows(rows, adds):
             before = rows.filter(hit)
-            cdc = before.withColumn(
+            return before.withColumn(
                 "_change_type", F.lit("update_preimage")
             ).unionByName(
                 before.withColumns(exprs).withColumn(
                     "_change_type", F.lit("update_postimage")
                 )
             )
-            self._stage_cdc(cdc, entry)
-        if not self._try_commit(base + 1, entry):
-            raise CommitConflict("table changed during update")
-        return base + 1
+
+        return self._write_rows(
+            state,
+            base,
+            "update",
+            mode,
+            snap.filter(hit),
+            lambda rows: rows.withColumns(
+                {c: F.when(hit, e).otherwise(F.col(c)) for c, e in exprs.items()}
+            ),
+            change_rows if cdf else None,
+        )
 
     def optimize(
         self,
@@ -1335,115 +1287,86 @@ class AcidTable:
         a 100 TB table's maintenance reads proportional to the query,
         not the table (file-skip counts measured in tests/test_acid.py).
 
-        On a PARTITIONED table (the format's partitionBy layout, r9)
-        compaction is per partition: each partition's files rewrite
+        Compaction is per partition: on a PARTITIONED table (the
+        format's partitionBy layout) each partition's files rewrite
         into ≤ ``max(1, target_files // n_partitions)`` files back in
         their own ``col=value/`` dir with the partition metadata
         preserved — partition elimination survives the service, and
         ``cluster_by``/``zorder_by`` order rows WITHIN each partition
-        (the Delta OPTIMIZE ... WHERE/ZORDER composition)."""
+        (the Delta OPTIMIZE ... WHERE/ZORDER composition). Files
+        without partition metadata form one group, so an unpartitioned
+        table rewrites into ``target_files`` files."""
+        if target_files < 1:
+            raise ValueError(
+                f"optimize: target_files must be >= 1; got {target_files}"
+            )
         base = self.latest_version()
         state = self._state(base)
-        live = sorted(state["live"])
         relayout = cluster_by is not None or zorder_by is not None
         # empty table: nothing to compact OR re-cluster — no-op either
         # way (the relayout flag must not reach _assemble's no-files
         # ValueError)
-        if not live:
+        if not state["live"]:
             return base
-        # PARTITION-AWARE compaction (r9): files carrying partition
-        # metadata (the format's partitionBy layout) compact WITHIN
-        # their partition — rewritten files land back in the same
-        # ``col=value/`` dir with the metadata preserved, so partition
-        # elimination survives OPTIMIZE (a whole-table rewrite would
-        # silently demote the layout to stats-only pruning). Files
-        # without metadata form one residual group (mixed tables).
         groups: dict[tuple | None, list[str]] = {}
-        for f in live:
+        for f in sorted(state["live"]):
             partd = state["live"][f].get("partition")
             key = tuple(sorted(partd.items())) if partd else None
             groups.setdefault(key, []).append(f)
-        if set(groups) != {None}:
-            per_part = max(1, target_files // len(groups))
-            adds: list[dict] = []
-            removes: list[str] = []
-            for key, fs in sorted(
-                # type-safe order: NULL partition values (and mixed
-                # value types across writes) must not crash the sort —
-                # compare (col, is_null, str(value)) tuples
-                groups.items(),
-                key=lambda kv: tuple(
-                    (c, v is None, str(v)) for c, v in (kv[0] or ())
-                ),
-            ):
-                if (
-                    len(fs) <= per_part
-                    and not relayout
-                    and not any(state["live"][f].get("dv") for f in fs)
-                ):
-                    # already compact AND nothing masked: leave the
-                    # files alone. A partition carrying deletion
-                    # vectors always rewrites — OPTIMIZE is the DV
-                    # materialization point (the rewrite reads through
-                    # the DV-aware _assemble, so masked rows vanish
-                    # physically and the new files carry no refs).
-                    continue
-                df = self._assemble(state, files=fs)
-                if zorder_by is not None:
-                    from .tables import zorder_layout
-
-                    df = zorder_layout(df, zorder_by[0], zorder_by[1], per_part)
-                elif cluster_by is not None:
-                    df = df.repartitionByRange(
-                        per_part, cluster_by
-                    ).sortWithinPartitions(cluster_by)
-                else:
-                    df = df.coalesce(per_part)
-                subdir = (
-                    "/".join(acid_log.part_segment(c, v) for c, v in key)
-                    if key is not None
-                    else None
-                )
-                staged = self._stage_files(
-                    df, subdir, harvest_stats=True,
-                    bloom_cols=self._bloom_layout(state),
-                )
-                if key is not None:
-                    for a in staged:
-                        a["partition"] = dict(key)
-                adds.extend(staged)
-                removes.extend(fs)
-            if not removes:
-                return base  # every partition already compact
-            if not self._try_commit(
-                base + 1,
-                {"operation": "optimize", "add": adds, "remove": removes},
-            ):
-                raise CommitConflict("table changed during optimize")
-            return base + 1
-        if (
-            len(live) <= target_files
-            and not relayout
-            and not any(state["live"][f].get("dv") for f in live)
+        per_part = max(1, target_files // len(groups))
+        adds: list[dict] = []
+        removes: list[str] = []
+        for key, fs in sorted(
+            # type-safe order: NULL partition values (and mixed value
+            # types across writes) must not crash the sort — compare
+            # (col, is_null, str(value)) tuples
+            groups.items(),
+            key=lambda kv: tuple(
+                (c, v is None, str(v)) for c, v in (kv[0] or ())
+            ),
         ):
-            # compact and unmasked — but a table carrying deletion
-            # vectors always rewrites: OPTIMIZE is the materialization
-            # point (masked rows vanish physically, refs drop)
-            return base
-        df = self._assemble(state)
-        if zorder_by is not None:
-            from .tables import zorder_layout
+            if (
+                len(fs) <= per_part
+                and not relayout
+                and not any(state["live"][f].get("dv") for f in fs)
+            ):
+                # already compact AND nothing masked: leave the files
+                # alone. A group carrying deletion vectors always
+                # rewrites — OPTIMIZE is the DV materialization point
+                # (the rewrite reads through the DV-aware _assemble, so
+                # masked rows vanish physically and the new files carry
+                # no refs).
+                continue
+            df = self._assemble(state, files=fs)
+            if zorder_by is not None:
+                from .tables import zorder_layout
 
-            df = zorder_layout(df, zorder_by[0], zorder_by[1], target_files)
-        elif cluster_by is not None:
-            df = df.repartitionByRange(target_files, cluster_by).sortWithinPartitions(
-                cluster_by
+                df = zorder_layout(df, zorder_by[0], zorder_by[1], per_part)
+            elif cluster_by is not None:
+                df = df.repartitionByRange(
+                    per_part, cluster_by
+                ).sortWithinPartitions(cluster_by)
+            else:
+                df = df.coalesce(per_part)
+            subdir = (
+                "/".join(acid_log.part_segment(c, v) for c, v in key)
+                if key is not None
+                else None
             )
-        else:
-            df = df.coalesce(target_files)
-        adds = self._stage_files(df, bloom_cols=self._bloom_layout(state))
+            staged = self._stage_files(
+                df, subdir, harvest_stats=True,
+                bloom_cols=self._bloom_layout(state),
+            )
+            if key is not None:
+                for a in staged:
+                    a["partition"] = dict(key)
+            adds.extend(staged)
+            removes.extend(fs)
+        if not removes:
+            return base  # every group already compact
         if not self._try_commit(
-            base + 1, {"operation": "optimize", "add": adds, "remove": live}
+            base + 1,
+            {"operation": "optimize", "add": adds, "remove": removes},
         ):
             raise CommitConflict("table changed during optimize")
         return base + 1

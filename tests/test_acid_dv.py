@@ -17,9 +17,20 @@ from pyspark.sql import functions as F
 
 from als_hadoop_spark.sources.acid import (
     AcidTable,
+    CommitConflict,
     ConstraintViolation,
     _DV_DIR,
 )
+
+#: Spark jobs of one statement on ``_dv_table``'s 100-row, 2-file table
+#: (local[4], 8 shuffle partitions), counted through a job group around
+#: the call — the staging pools pass the group on to their jobs
+ROW_LEVEL_JOBS = {
+    "dv_merge": 13,
+    "dv_delete_cdf": 6,
+    "dv_update": 6,
+    "cow_merge": 10,
+}
 
 
 def _df(spark, rows):
@@ -35,6 +46,38 @@ def _upsert(touched, chg):
     return touched.join(c, "k", "full_outer").select(
         "k", F.coalesce("_nv", "v").alias("v")
     )
+
+
+def _unreferenced(t) -> list[str]:
+    """Files of the table outside ``_acid_log/`` and ``_acid_stage/``
+    that no commit names, plus ``"missing:"`` entries for names the log
+    references that are gone — empty when the files on disk are
+    exactly the log's."""
+    refs = set()
+    for e in t.history():
+        refs.update(a["path"] for a in e.get("add", []))
+        refs.update(e.get("cdc", []))
+        refs.update(e.get("dv", {}).get("sidecars", []))
+    on_disk = set()
+    for root, dirs, names in os.walk(t.path):
+        rel_root = os.path.relpath(root, t.path)
+        if rel_root.split(os.sep)[0] in ("_acid_log", "_acid_stage"):
+            continue
+        on_disk.update(
+            os.path.normpath(os.path.join(rel_root, n)) for n in names
+        )
+    missing = sorted(f"missing:{p}" for p in refs - on_disk)
+    return sorted(on_disk - refs) + missing
+
+
+def _tree(path) -> list[str]:
+    """Every file and directory under ``path``."""
+    out = []
+    for root, dirs, names in os.walk(path):
+        out += [
+            os.path.relpath(os.path.join(root, n), path) for n in dirs + names
+        ]
+    return sorted(out)
 
 
 def _dv_table(spark, path, n=100, files=2):
@@ -248,9 +291,97 @@ def test_dv_adds_validate_constraints(spark, tmp_path):
     t.set_constraint("v_nonempty", "length(v) > 0")
     with pytest.raises(ConstraintViolation, match="v_nonempty"):
         t.merge(_df(spark, [(1, "")]), "k", _upsert)
+    # the refused statement's staged data files and sidecar are gone
+    assert _unreferenced(t) == []
     with pytest.raises(ConstraintViolation, match="v_nonempty"):
         t.update({"v": F.lit("")}, "k = 2")
+    assert _unreferenced(t) == []
     assert _rows(t.snapshot()) == [(i, f"v{i}") for i in range(4)]
+
+
+def test_failed_and_empty_statements_leave_no_files(
+    spark, tmp_path, monkeypatch
+):
+    """A statement that loses its commit, or whose staging pool branch
+    raises, removes every file it staged: data files, the DV sidecar
+    and the CDC sidecar. A DV DELETE or UPDATE that matches no row
+    commits nothing and leaves the table's directory tree exactly as
+    it found it — no empty sidecar, change file or new directory."""
+    for mode in ("dv", "cow"):
+        t = _dv_table(spark, tmp_path / f"lost_{mode}", n=20)
+        monkeypatch.setattr(t, "_try_commit", lambda v, e: False)
+        with pytest.raises(CommitConflict, match="merge"):
+            t.merge(
+                _df(spark, [(5, "X"), (999, "new")]), "k", _upsert,
+                cdf=True, mode=mode,
+            )
+        assert _unreferenced(t) == [], mode
+    for failing in ("_stage_dv", "_stage_files_layout_aware"):
+        t = _dv_table(spark, tmp_path / f"branch{failing}", n=20)
+
+        def boom(*args, **kwargs):
+            raise RuntimeError("staging failed")
+
+        monkeypatch.setattr(t, failing, boom)
+        with pytest.raises(RuntimeError, match="staging failed"):
+            t.update({"v": F.lit("u")}, "k < 5", cdf=True)
+        assert _unreferenced(t) == [], failing
+        assert t.latest_version() == 1
+    from als_hadoop_spark.sources.acid_format import register_acid_format
+
+    register_acid_format(spark)
+    path = str(tmp_path / "t")
+    (
+        spark.createDataFrame(
+            [(i, i % 3, f"v{i}") for i in range(12)], "k LONG, p LONG, v STRING"
+        )
+        .write.format("acid")
+        .option("path", path)
+        .option("partitionBy", "p")
+        .mode("append")
+        .save()
+    )
+    t = AcidTable(spark, path)
+    v = t.set_property("deletionVectors", "true")
+    before = _tree(path)
+    assert t.delete("k > 100", cdf=True) == v
+    assert _tree(path) == before
+    assert t.update({"v": F.lit("u")}, "k > 100", cdf=True) == v
+    assert _tree(path) == before
+    assert t.latest_version() == v
+
+
+def test_row_level_statement_job_counts(spark, tmp_path):
+    """Each statement's Spark job count, pinned — and every job of the
+    statement lands in the caller's job group, the ones its staging
+    pools start included."""
+    sc = spark.sparkContext
+
+    def jobs(name, statement):
+        sc.setJobGroup(f"row_level_{name}", name)
+        try:
+            statement()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(f"row_level_{name}"))
+
+    chg = _df(spark, [(5, "X"), (999, "new")])
+    dv_m = _dv_table(spark, tmp_path / "dv_merge")
+    dv_d = _dv_table(spark, tmp_path / "dv_delete")
+    dv_u = _dv_table(spark, tmp_path / "dv_update")
+    cow_m = AcidTable(spark, str(tmp_path / "cow_merge"))
+    cow_m.append(_df(spark, [(i, f"v{i}") for i in range(100)]).coalesce(2))
+    got = {
+        "dv_merge": jobs("dv_merge", lambda: dv_m.merge(chg, "k", _upsert)),
+        "dv_delete_cdf": jobs(
+            "dv_delete_cdf", lambda: dv_d.delete("k % 10 = 3", cdf=True)
+        ),
+        "dv_update": jobs(
+            "dv_update", lambda: dv_u.update({"v": F.lit("u")}, "k < 5")
+        ),
+        "cow_merge": jobs("cow_merge", lambda: cow_m.merge(chg, "k", _upsert)),
+    }
+    assert got == ROW_LEVEL_JOBS
 
 
 def test_mode_resolution_and_explicit_override(spark, tmp_path):

@@ -13,9 +13,15 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(
+    0,
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"
+    ),
+)
 
 from check_oracle import arrow_type_class, dtype_problems, spark_type_class  # noqa: E402
 

@@ -161,8 +161,7 @@ def test_change_feed_is_classified_only_in_acid_log():
     actions or its operation name themselves, and no module outside
     ``acid_log`` reads a commit's ``cdc`` list except as file
     references — the vacuum sweep (sidecars a retained commit still
-    names) and DELETE's cleanup of a sidecar it staged but did not
-    commit. A third change classification cannot appear unseen."""
+    names). A third change classification cannot appear unseen."""
     probe = (
         "def table_changes(e):\n"
         "    if e.get('dv') or 'remove' in e:\n"
@@ -172,7 +171,7 @@ def test_change_feed_is_classified_only_in_acid_log():
     assert [w for _, _, w in _change_decisions(probe, "probe")] == [
         "dv", "remove", "cdc", "overwrite",
     ]
-    cdc_file_refs = {("sources/acid.py", "vacuum"), ("sources/acid.py", "delete")}
+    cdc_file_refs = {("sources/acid.py", "vacuum")}
     found = []
     for root, _, names in os.walk(PKG):
         for name in names:
@@ -190,3 +189,91 @@ def test_change_feed_is_classified_only_in_acid_log():
                 if classifier or stray_cdc:
                     found.append(f"{rel}:{line} {fn} reads {what!r}")
     assert found == [], f"change classification outside acid_log: {found}"
+
+
+#: the one write step of MERGE, DELETE and UPDATE in ``sources/acid.py``
+_ROW_STEP = "_write_rows"
+
+
+def _calls_by_method(source: str, path: str) -> dict[str, list[str]]:
+    """``{method: [called name, ...]}`` for every function defined in a
+    class body of ``source``; a call inside a nested function counts
+    for the method that encloses it. Module-level functions are keyed
+    ``<module>``."""
+    calls: dict[str, list[str]] = {}
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(node, ast.ClassDef) and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                calls.setdefault(child.name, [])
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                fn = child.func
+                name = getattr(fn, "attr", None) or getattr(fn, "id", None)
+                if name:
+                    calls.setdefault(owner, []).append(name)
+            visit(child, owner)
+
+    visit(ast.parse(source, path), "<module>")
+    return calls
+
+
+def test_row_level_writes_commit_in_one_step():
+    """MERGE, DELETE and UPDATE, in copy-on-write and deletion-vector
+    mode, stage, mask, validate, log their changes and commit through
+    ``AcidTable._write_rows`` alone: only it stages a DV or CDC sidecar
+    or runs the mask-beside-write pool, and the statements never commit
+    themselves — so failure cleanup and the persisted-frame rule live
+    in one place."""
+    probe = (
+        "class T:\n"
+        "    def merge(self):\n"
+        "        def inner():\n"
+        "            self._stage_dv(1)\n"
+        "        return self._try_commit(1, {})\n"
+    )
+    assert _calls_by_method(probe, "probe")["merge"] == [
+        "_stage_dv", "_try_commit"
+    ]
+    path = os.path.join(PKG, "sources", "acid.py")
+    with open(path) as f:
+        source = f.read()
+    calls = _calls_by_method(source, path)
+    assert _ROW_STEP in calls and "_merge_dv" not in calls
+    found = [
+        f"{method} calls {name}"
+        for method, names in calls.items()
+        for name in names
+        if (name in ("_stage_dv", "_stage_cdc") and method != _ROW_STEP)
+        or (
+            name == "ThreadPoolExecutor"
+            and method not in (_ROW_STEP, "_stage_files_layout_aware")
+        )
+        or (name == "_try_commit" and method in ("merge", "delete", "update"))
+    ]
+    assert found == [], f"row-level write steps outside {_ROW_STEP}: {found}"
+
+
+def test_no_file_pins_the_checkout_path():
+    """Scripts and tests find the checkout from their own ``__file__``,
+    so a second checkout (a parent copy for an A/B run, a CI workspace)
+    imports and tests its own package. ``perfbench/`` is exempt."""
+    checkout = os.path.dirname(PKG)
+    pinned = os.path.join(os.sep, "root", "repo")
+    found = []
+    for root, dirs, names in os.walk(checkout):
+        dirs[:] = [
+            d for d in dirs
+            if not d.startswith(".")
+            and os.path.join(root, d) != os.path.join(checkout, "perfbench")
+        ]
+        for name in names:
+            path = os.path.join(root, name)
+            if name.endswith(".py"):
+                with open(path) as f:
+                    if pinned in f.read():
+                        found.append(os.path.relpath(path, checkout))
+    assert found == [], f"files naming a fixed checkout path: {found}"

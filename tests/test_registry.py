@@ -5,6 +5,8 @@ module silently shadows another's query name."""
 
 from __future__ import annotations
 
+import os
+
 import __spark_entry__ as entry_mod
 from als_hadoop_spark import operators, streaming
 
@@ -82,6 +84,9 @@ def test_all_queries_are_binary_callables():
 def test_every_query_is_documented_in_survey():
     """SURVEY.md §2 is the judge's coverage checklist — every
     registered query name must appear there (table row or prose)."""
-    text = open("/root/repo/SURVEY.md").read()
+    # __spark_entry__.py sits at the checkout root, beside SURVEY.md
+    survey = os.path.join(os.path.dirname(entry_mod.__file__), "SURVEY.md")
+    with open(survey) as f:
+        text = f.read()
     missing = [q for q in entry_mod.queries() if q not in text]
     assert not missing, missing
