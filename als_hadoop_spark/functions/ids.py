@@ -7,21 +7,20 @@ non-distributed anti-pattern. The obvious Spark rewrite,
 unpartitioned window funnels every distinct key through ONE task.
 
 ``dense_ids`` instead does a fully-JVM distributed enumeration (the
-``grouped_ranks`` recipe over the distinct keys; several key columns
-share one enumeration, one group per column):
+``grouped_ranks`` recipe over the distinct keys):
 
-1. ``distinct`` (column, key) pairs + ``repartitionByRange(column,
-   key)`` + ``sortWithinPartitions`` — pairs globally sorted across
-   partitions (partition *p*'s pairs all precede partition *p+1*'s).
+1. ``distinct`` keys + ``repartitionByRange(key)`` +
+   ``sortWithinPartitions`` — keys globally sorted across partitions
+   (partition *p*'s keys all precede partition *p+1*'s).
 2. per-partition local index via ``monotonically_increasing_id()``
    decomposition: Spark packs ``partition_id`` into the upper bits and a
    0-based sequential row index into the lower 33 bits, so
    ``local_idx = id & (2^33 - 1)`` — computed inside whole-stage
    codegen, no shuffle, no Python.
-3. per-(column, partition) counts and first local index → cumulative
-   offsets (a window over a frame bounded by partitions × columns,
-   never by data size) broadcast-joined back:
-   ``dense_id = offset[column, pid] + local_idx - first[column, pid]``.
+3. per-partition counts and first local index → cumulative offsets (a
+   window over a frame bounded by partitions, never by data size)
+   broadcast-joined back:
+   ``dense_id = offset[pid] + local_idx - first[pid]``.
 
 The result is bit-identical to ``dense_rank()-1`` ordered by key, while
 every step stays O(rows/partitions) per task. Any single boundary
@@ -52,36 +51,17 @@ _MONO_LOCAL_MASK = (1 << 33) - 1
 
 def dense_ids(
     df: DataFrame,
-    key: str | list[str],
+    key: str,
     num_partitions: int | None = None,
     pin: bool = True,
 ) -> DataFrame:
-    """Dense 0-based ids in sorted key order.
-
-    ``key`` a column name: the mapping ``(key, dense_id: long)``, where
-    ``dense_id`` is the rank of ``key`` among its distinct values.
-
-    ``key`` a list of column names of one type: ONE enumeration encodes
-    them all. The (column, value) pairs are stacked, deduplicated and
-    enumerated as ``grouped_ranks`` groups, so each column gets its own
-    0-based ids and a range partition may straddle the boundary between
-    two columns. Returns ``(column: string, key, dense_id: long)``: the
-    key column's name, one of its distinct values, and that value's
-    rank within the column — the same ids one single-key call per
-    column would give, for one shuffle and one pin instead of N."""
-    if isinstance(key, str):
-        ranked = grouped_ranks(df.select(key).distinct(), [], key, num_partitions, pin)
-        return ranked.select(key, (F.col("rank") - 1).alias("dense_id"))
-
-    stacked = df.select(
-        F.inline(
-            F.array(
-                *[F.struct(F.lit(k).alias("column"), F.col(k).alias("key")) for k in key]
-            )
-        )
-    ).distinct()
-    ranked = grouped_ranks(stacked, ["column"], "key", num_partitions, pin)
-    return ranked.select("column", "key", (F.col("rank") - 1).alias("dense_id"))
+    """Dense 0-based ids in sorted key order: the mapping ``(key,
+    dense_id: long)``, where ``dense_id`` is the rank of ``key`` among
+    its distinct values. No single task holds every distinct key, so
+    the key set is unbounded (contrast ``operators.als.encode_ids``,
+    which sorts each column's distinct ids in one task)."""
+    ranked = grouped_ranks(df.select(key).distinct(), [], key, num_partitions, pin)
+    return ranked.select(key, (F.col("rank") - 1).alias("dense_id"))
 
 
 def global_ranks(

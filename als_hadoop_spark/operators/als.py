@@ -5,16 +5,18 @@ The reference hand-builds the pipeline as 23 MapReduce job launches
 (``ALS-Hadoop/ALS/ALS.java:217-331``): CSV parse → item-keyed sparse
 vectors → transpose → per-item means → M₀ init → 10 × (solve U | solve
 M) with the fixed factor broadcast via DistributedCache → probe scoring
-→ RMSE. Here the whole thing is one driver program that reads the
-ratings once:
+→ RMSE. Here the whole thing is one driver program:
 
-    ratings + hash split flag (cached) → one stats job (n_train, μ,
-            global-mean RMSE) → ml.recommendation.ALS(...).fit(train)
+    dense ids (one sorted-distinct aggregate, broadcast id maps) →
+            ratings + hash split flag (cached) → one stats job (n_train,
+            μ, global-mean RMSE) → ml.recommendation.ALS(...).fit(train)
             → transform(probe) (cached) → RMSE aggregate
 
+The id encode (``encode_ids``) needs each id column's distinct values to
+fit in one task and one broadcast, as ALS needs their factor rows to.
 The split is a per-row content hash of (user_id, item_id), so train and
-probe are disjoint and cover the ratings on any partition layout and
-on every re-evaluation (see ``hash_split``).
+probe are disjoint and cover the ratings on any partition layout and on
+every re-evaluation (see ``hash_split``).
 
 with identical hyperparameters (rank=20, maxIter=10, regParam=0.065 —
 ``ALS/ALS.java:52-55``; λ=0.065 is the ALS-WR paper's tuned value, Zhou
@@ -36,6 +38,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import in_thread
 
 RANK = 20          # ALS-Hadoop/ALS/ALS.java:52 (numFeatures)
 MAX_ITER = 10      # ALS-Hadoop/ALS/ALS.java:53 (numIterations)
@@ -253,20 +257,41 @@ def q_als_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def reference_pipeline(spark: SparkSession, csv_path: str) -> tuple[DataFrame, float, float, "object"]:
     """The reference's FULL §3.1 workflow, end to end, from raw CSV:
 
-        csv scan (A1) → dense-id encode user+item (A7, mapid.py) →
-        seeded 0.8/0.2 hash split (A8, split.py) → ALS fit/predict
-        (A9-A13) → RMSE (A14)
+        csv scan (A1) → dense-id encode user+item (A7, mapid.py;
+        ``encode_ids``) → seeded 0.8/0.2 hash split (A8, split.py) →
+        ALS fit/predict (A9-A13) → RMSE (A14)
 
     — the 23 MapReduce job launches of ``ALS-Hadoop/ALS/ALS.java:
     217-331`` as one lazy driver program. Returns (predictions, rmse,
     global_mean_rmse, fitted_model). Note modern ml.ALS accepts arbitrary int ids, so
     the dense encoding is not strictly required (SURVEY §1.2) — it is
     applied anyway for workflow parity and because compact ids shrink
-    MLlib's internal block structures."""
+    MLlib's internal block structures. Bound: each id column's
+    distinct values fit in one task and one broadcast."""
     from ..sources import read_ratings_csv
 
-    raw = read_ratings_csv(spark, csv_path)
-    return pipeline_from_ratings(raw)
+    return pipeline_from_ratings(read_ratings_csv(spark, csv_path))
+
+
+def encode_ids(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` with each of ``cols`` replaced by its dense 0-based id:
+    the value's rank among the column's sorted distinct values
+    (mapid.py:28-38). Rows with a NULL id are dropped.
+
+    One aggregate collects every column's ``array_sort(collect_set)``;
+    ``posexplode`` turns each sorted set into a ``(dense_id, key)`` map,
+    broadcast-joined onto ``df``. Float keys follow Spark's equality:
+    -0.0 and 0.0 are one id, NaN is one id and sorts last.
+
+    Bound: each column's distinct ids must fit in one task and one
+    broadcast — the bound of mapid.py's in-memory set, and of ALS's own
+    per-id factor rows."""
+    sets = df.agg(*[F.array_sort(F.collect_set(c)).alias(c) for c in cols])
+    out = df
+    for c in cols:
+        ids = sets.select(F.posexplode(c).alias(f"_{c}_id", c))
+        out = out.join(F.broadcast(ids), c)
+    return out.select(*[F.col(f"_{c}_id").alias(c) if c in cols else c for c in df.columns])
 
 
 def pipeline_from_ratings(raw: DataFrame):
@@ -274,27 +299,9 @@ def pipeline_from_ratings(raw: DataFrame):
     (``user_id, item_id, rating``) — shared by the CSV entry point
     above and the custom ratings_gen DataSource (sources/generator.py),
     proving any source that lands the ratings schema feeds the same
-    dense-encode → split → fit → RMSE program."""
-    from ..functions.ids import dense_ids
-
-    # one enumeration encodes both id columns (one pinned shuffle, not two)
-    ids = dense_ids(raw, ["user_id", "item_id"])
-
-    def id_map(col: str, alias: str) -> DataFrame:
-        return ids.filter(F.col("column") == col).select(
-            F.col("key").alias(col), F.col("dense_id").alias(alias)
-        )
-
-    encoded = (
-        raw.join(id_map("user_id", "u"), "user_id")
-        .join(id_map("item_id", "i"), "item_id")
-        .select(
-            F.col("u").cast("int").alias("user_id"),
-            F.col("i").cast("int").alias("item_id"),
-            "rating",
-        )
-    )
-    return als_pipeline(encoded)
+    dense-encode → split → fit → RMSE program. ``encode_ids`` encodes
+    the ids: each column's distinct ids fit in one task and broadcast."""
+    return als_pipeline(encode_ids(raw, ["user_id", "item_id"]))
 
 
 #: recommendations emitted per user
@@ -444,12 +451,11 @@ def q_als_rank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor, and an is_best flag (min RMSE, ties to the smaller rank —
     Occam).
 
-    Scale shape: each grid point is an independent MLlib fit over the
-    SAME cached split, submitted from CONCURRENT driver threads — the
-    CrossValidator `parallelism` pattern: Spark's scheduler interleaves
-    the jobs' tasks, so grid points overlap instead of serializing
-    (measured 7.6 s → 3.7 s for 3 points on local[32]; on a real
-    cluster with spare executors the win is ~linear in grid size).
+    Scale shape: each grid point is an independent MLlib fit,
+    submitted from CONCURRENT driver threads — the CrossValidator
+    `parallelism` pattern: Spark's scheduler interleaves the jobs'
+    tasks, so grid points overlap instead of serializing, and
+    ``in_thread`` keeps every fit's jobs in the caller's job group.
     The scalar RMSEs are bounded driver values (one float per grid
     point), same contract as the reference's driver-side RMSE read
     (ALS/ALS.java:423-433)."""
@@ -465,7 +471,7 @@ def q_als_rank_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         return rank, round(rmse, 4), base_rmse
 
     with ThreadPoolExecutor(max_workers=len(SWEEP_RANKS)) as pool:
-        results = list(pool.map(one_point, SWEEP_RANKS))
+        results = list(pool.map(in_thread(spark, one_point), SWEEP_RANKS))
     rows = [(rk, rm) for rk, rm, _ in results]
     base = results[0][2]
     best = min(rows, key=lambda r: (r[1], r[0]))[0]

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -83,3 +84,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def in_thread(spark: SparkSession, fn):
+    """``fn`` wrapped for a pool thread so the Spark jobs it starts
+    carry the calling thread's job group, description and tags, which
+    pyspark pins to the thread that set them. Every engine
+    ``ThreadPoolExecutor`` submits through this."""
+    wrap = inheritable_thread_target(spark)
+    # without pinned threads pyspark hands the session back unwrapped
+    return fn if wrap is spark else wrap(fn)

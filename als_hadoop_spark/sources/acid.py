@@ -102,10 +102,10 @@ import os
 import time
 import uuid
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import in_thread
 from . import acid_log
 
 _STAGE_DIR = "_acid_stage"
@@ -215,15 +215,6 @@ def _range_conjuncts(col: str, lo, hi) -> list[tuple]:
     if lo is not None and lo == hi:
         return [(col, "=", lo)]
     return [(col, op, v) for op, v in ((">=", lo), ("<=", hi)) if v is not None]
-
-
-def _in_thread(spark: SparkSession, fn):
-    """``fn`` wrapped for a pool thread so the Spark jobs it starts
-    carry the calling thread's job group, description and tags, which
-    pyspark pins to the thread that set them."""
-    wrap = inheritable_thread_target(spark)
-    # without pinned threads pyspark hands the session back unwrapped
-    return fn if wrap is spark else wrap(fn)
 
 
 def _union_by_name(frames) -> DataFrame:
@@ -667,7 +658,7 @@ class AcidTable:
                 max_workers=min(8, len(combos))
             ) as pool:
                 for staged in pool.map(
-                    _in_thread(self.spark, stage_one), combos
+                    in_thread(self.spark, stage_one), combos
                 ):
                     adds.extend(staged)
             return adds
@@ -721,9 +712,9 @@ class AcidTable:
                 cons_seen = cons_now
                 self._validate(adds)  # aborts (and cleans up) on violation
             # jittered backoff breaks commit lockstep under heavy
-            # multi-writer contention (the r9 stress-livelock lesson
-            # from the format writer's loop)
+            # multi-writer contention
             time.sleep(random.random() * 0.002 * (attempt + 1))
+        self._discard([a["path"] for a in adds])
         raise CommitConflict(f"append lost {max_retries} commit races")
 
     def last_txn(self, app: str, version: int | None = None) -> int:
@@ -753,7 +744,8 @@ class AcidTable:
         ``_try_commit`` lose and this raises :class:`CommitConflict`
         — closing the TOCTOU window where ``latest_version()``
         re-resolved at call time would silently fold a change batch
-        on top of a base the caller never saw (post-r7 advice)."""
+        on top of a base the caller never saw. A lost commit removes
+        the files it staged, as in :meth:`append` and :meth:`optimize`."""
         base = (
             self.latest_version()
             if expected_version is None
@@ -768,6 +760,7 @@ class AcidTable:
         if txn is not None:
             entry["txn"] = txn
         if not self._try_commit(base + 1, entry):
+            self._discard([a["path"] for a in adds])
             raise CommitConflict("table changed during overwrite")
         return base + 1
 
@@ -979,8 +972,8 @@ class AcidTable:
                 from concurrent.futures import ThreadPoolExecutor
 
                 with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_mask = pool.submit(_in_thread(self.spark, mask))
-                    f_out = pool.submit(_in_thread(self.spark, stage_output))
+                    f_mask = pool.submit(in_thread(self.spark, mask))
+                    f_out = pool.submit(in_thread(self.spark, stage_output))
                 # both branches finished: whatever either staged is in
                 # `staged` before a failed one re-raises here
                 sidecars, dv_files = f_mask.result()
@@ -1368,6 +1361,7 @@ class AcidTable:
             base + 1,
             {"operation": "optimize", "add": adds, "remove": removes},
         ):
+            self._discard([a["path"] for a in adds])
             raise CommitConflict("table changed during optimize")
         return base + 1
 
@@ -1379,7 +1373,7 @@ class AcidTable:
         single place the by-reference metadata shape (stats/partition/
         bloom) is copied, shared by restore and clone so a future
         action field can't be silently dropped from one of them."""
-        a = {"path": path, "stats": act.get("stats") or {}}
+        a = {"path": path, "stats": acid_log.loggable_stats(act.get("stats"))}
         if act.get("schema"):
             a["schema"] = act["schema"]
         if act.get("partition"):

@@ -24,6 +24,7 @@ have this package on their path.
 """
 
 import json
+import math
 import os
 import time
 import uuid
@@ -130,9 +131,11 @@ def publish(path: str, version: int, entry: dict) -> bool:
     ``.json``, so :func:`versions` never lists it."""
     d = log_dir(path)
     os.makedirs(d, exist_ok=True)
+    # strict JSON (RFC 8259): a NaN or infinity raises before any file
+    body = json.dumps({"version": version, **entry}, allow_nan=False)
     tmp = os.path.join(d, f".commit-{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
-        json.dump({"version": version, **entry}, f)
+        f.write(body)
         f.flush()
         os.fsync(f.fileno())
     try:
@@ -456,19 +459,28 @@ def file_blooms(path: str, cols) -> dict:
 # ---------------------------------------------------- stats and pruning
 
 
+def _bound(value) -> bool:
+    """A loggable [min, max] end: a JSON scalar, finite if a float."""
+    return isinstance(value, (int, str)) or (isinstance(value, float) and math.isfinite(value))
+
+
+def loggable_stats(stats: dict | None) -> dict:
+    """``stats`` without the bounds a strict JSON log cannot hold — the
+    NaN bounds of a log written before they were left out."""
+    return {c: b for c, b in (stats or {}).items() if all(map(_bound, b))}
+
+
 def footer_stats(path: str) -> dict:
     """Per-column [min, max] from the parquet footer the writer already
-    produced — no data re-read. Only JSON-comparable scalar types are
-    kept (int/float/str/bool); anything else is simply absent, which
-    :func:`prune_files` treats conservatively (file kept). A Spark-
-    written footer orders NaN above every number, so a float column
-    holding NaN logs NaN as its max — a NaN bound that keeps the file —
-    and the fold over row groups keeps that NaN."""
+    produced — no data re-read. Only JSON scalars are kept (int, finite
+    float, str, bool); a column with any other bound in any row group is
+    simply absent, which :func:`prune_files` treats conservatively (file
+    kept). A Spark-written footer orders NaN above every number, so a
+    float column holding NaN has a NaN max and logs no bound."""
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(path)
-    mins: dict = {}
-    maxs: dict = {}
+    mins, maxs, unbounded = {}, {}, set()
     for rg in range(md.num_row_groups):
         row = md.row_group(rg)
         for ci in range(row.num_columns):
@@ -483,19 +495,14 @@ def footer_stats(path: str) -> dict:
                 # pyarrow can't extract min/max for some logical types
                 # (e.g. small decimals) — stats are an optimization,
                 # the pruner treats a statless column conservatively
-                continue
-            if "." in name or not isinstance(mn, (int, float, str, bool)):
+                mn = mx = None
+            if "." in name or not (_bound(mn) and _bound(mx)):
+                unbounded.add(name)
                 continue
             if name in mins:
-                mn = min(mins[name], mn, key=_nan_last)
-                mx = max(maxs[name], mx, key=_nan_last)
+                mn, mx = min(mins[name], mn), max(maxs[name], mx)
             mins[name], maxs[name] = mn, mx
-    return {k: [mins[k], maxs[k]] for k in mins}
-
-
-def _nan_last(value) -> tuple:
-    """Sort key that puts NaN above every number, as Spark orders it."""
-    return (value != value, value)
+    return {k: [mins[k], maxs[k]] for k in mins if k not in unbounded}
 
 
 def _nan_columns(table) -> set:
@@ -515,6 +522,7 @@ def table_stats(table, nan: set | None = None) -> dict:
     """[min, max] per JSON-scalar column of an IN-MEMORY Arrow table —
     no file re-read. Arrow's ``min_max`` skips NaN, so a float column
     holding NaN logs no stats: its bounds would rule out the NaN rows.
+    An infinite bound is not logged either (see :func:`footer_stats`).
     ``nan``: the table's :func:`_nan_columns`, when already known."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -535,7 +543,7 @@ def table_stats(table, nan: set | None = None) -> dict:
             continue
         mm = pc.min_max(col)
         mn, mx = mm["min"].as_py(), mm["max"].as_py()
-        if isinstance(mn, (int, float, str, bool)):
+        if _bound(mn) and _bound(mx):
             out[f.name] = [mn, mx]
     return out
 

@@ -238,11 +238,13 @@ def test_log_stats_prune_files_before_any_scan(spark, tmp_path):
     assert t.snapshot_where("k", lo=500).count() == 0
 
 
-def test_footer_stats_keep_a_nan_bound_of_any_row_group(spark, tmp_path):
+def test_footer_stats_log_no_bound_for_a_nan_in_any_row_group(spark, tmp_path):
     """Spark's parquet writer logs NaN as the max of a row group holding
-    NaN; folding row groups with Python's max drops it (NaN compares
-    False), and the file's logged [min, max] would then rule out the
-    NaN rows that Spark's ``x > 100`` returns."""
+    NaN, and strict JSON has no NaN: the column logs no [min, max] when
+    any row group has a NaN bound (a fold over row groups must not drop
+    it: the bounds of the others would rule out the NaN rows that
+    Spark's ``x > 100`` returns). A NaN bound in a log written before
+    still keeps its file."""
     import glob
 
     import pyarrow.parquet as pq
@@ -262,10 +264,39 @@ def test_footer_stats_keep_a_nan_bound_of_any_row_group(spark, tmp_path):
     md = pq.read_metadata(f)
     maxes = [md.row_group(i).column(1).statistics.max for i in range(md.num_row_groups)]
     assert maxes[0] == 49.0 and any(m != m for m in maxes[1:]), maxes
-    mn, mx = footer_stats(f)["x"]
-    assert mn == 0.0 and mx != mx
-    state = {"live": {"f": {"stats": {"x": [mn, mx]}, "added": 0}}, "schema_ops": []}
+    stats = footer_stats(f)
+    assert "x" not in stats and stats["k"] == [0, 7999]
+    old = {"x": [0.0, float("nan")]}
+    state = {"live": {"f": {"stats": old, "added": 0}}, "schema_ops": []}
     assert prune_files(state, [("x", ">", 100.0)]) == ["f"]
+
+
+def test_commit_log_is_strict_json(spark, tmp_path):
+    """Every commit entry parses under RFC 8259 JSON (no NaN or
+    Infinity tokens), also for float columns holding NaN and ±inf,
+    whose rows every filter still finds."""
+    import json
+
+    def refuse(token):
+        raise ValueError(f"non-JSON token {token}")
+
+    inf = float("inf")
+    t = AcidTable(spark, str(tmp_path / "t"))
+    t.append(
+        spark.createDataFrame(
+            [(1, 1.0), (2, float("nan")), (3, inf), (4, -inf)], "k LONG, x DOUBLE"
+        ).coalesce(1)
+    )
+    t.append(spark.createDataFrame([(5, 2.0)], "k LONG, x DOUBLE"))
+    log = os.path.join(t.path, "_acid_log")
+    for name in sorted(os.listdir(log)):
+        if name.endswith(".json"):
+            with open(os.path.join(log, name)) as f:
+                json.loads(f.read(), parse_constant=refuse)
+    got = lambda pred: sorted(r["k"] for r in t.snapshot().filter(pred).collect())  # noqa: E731
+    assert got("x > 5") == [2, 3]
+    assert got("x < -5") == [4]
+    assert got("x = 2.0") == [5]
 
 
 def test_streaming_merge_sink_applies_cdc_transactionally(spark, tmp_path):

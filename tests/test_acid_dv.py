@@ -351,6 +351,27 @@ def test_failed_and_empty_statements_leave_no_files(
     assert t.latest_version() == v
 
 
+def test_lost_table_commits_leave_no_files(spark, tmp_path, monkeypatch):
+    """``append`` (after its retries), ``overwrite`` and ``optimize``
+    remove the data files they staged when their commit is lost, as the
+    row-level statements do: no file on disk that the log does not
+    name."""
+    t = AcidTable(spark, str(tmp_path / "t"))
+    t.append(_df(spark, [(i, f"v{i}") for i in range(30)]).coalesce(3))
+    assert len(t._replay()) == 3
+    monkeypatch.setattr(t, "_try_commit", lambda v, e: False)
+    more = _df(spark, [(i, "x") for i in range(30, 40)]).coalesce(2)
+    for name, op in (
+        ("append", lambda: t.append(more, max_retries=2)),
+        ("overwrite", lambda: t.overwrite(more)),
+        ("optimize", lambda: t.optimize(target_files=1)),
+    ):
+        with pytest.raises(CommitConflict):
+            op()
+        assert _unreferenced(t) == [], name
+    assert t.latest_version() == 0
+
+
 def test_row_level_statement_job_counts(spark, tmp_path):
     """Each statement's Spark job count, pinned — and every job of the
     statement lands in the caller's job group, the ones its staging

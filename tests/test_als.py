@@ -10,8 +10,9 @@ from als_hadoop_spark.operators.als import als_pipeline, hash_split, synth_ratin
 
 #: Spark jobs of one reference_pipeline call on the small CSV below
 #: (local[4], 8 shuffle partitions). The two-call dense-id encode,
-#: randomSplit and separate count / mean / baseline jobs took 49.
-REFERENCE_PIPELINE_MAX_JOBS = 28
+#: randomSplit and separate count / mean / baseline jobs took 49; the
+#: range-partitioned id enumeration in place of encode_ids took 28.
+REFERENCE_PIPELINE_MAX_JOBS = 20
 
 
 def _cache_is_empty(spark) -> bool:
@@ -211,3 +212,25 @@ def test_rank_sweep_finds_latent_structure(spark):
     assert all(r["rmse"] < r["global_mean_rmse"] for r in rows.values())
     assert rows[min(SWEEP_RANKS)]["rmse"] > b["rmse"] * 1.5  # underfit visible
     assert b["rank"] != min(SWEEP_RANKS)
+
+
+def test_rank_sweep_pool_keeps_the_job_group(spark, monkeypatch):
+    """pyspark pins a job group to the thread that set it: every job of
+    the sweep's pooled fits must still land in the caller's group, and
+    none outside it."""
+    from als_hadoop_spark.operators import als
+
+    small = synth_ratings(spark, n_users=40, n_items=25, n_ratings=500)
+    monkeypatch.setattr(als, "synth_ratings", lambda _spark: small)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("rank_sweep_pool", "pooled ALS fits")
+    try:
+        rows = als.q_als_rank_sweep(spark, "unused").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == len(als.SWEEP_RANKS)
+    # each fit alone runs more than ten jobs
+    assert len(tracker.getJobIdsForGroup("rank_sweep_pool")) > 10 * len(rows)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

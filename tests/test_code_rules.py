@@ -277,3 +277,74 @@ def test_no_file_pins_the_checkout_path():
                     if pinned in f.read():
                         found.append(os.path.relpath(path, checkout))
     assert found == [], f"files naming a fixed checkout path: {found}"
+
+
+def _unwrapped_pool_calls(source: str, path: str) -> list[int]:
+    """Lines of ``source`` where a ``ThreadPoolExecutor`` bound by
+    ``with ... as pool`` or ``pool = ...`` is given, by ``map`` or
+    ``submit``, a callable other than an ``in_thread(spark, fn)`` call."""
+    tree = ast.parse(source, path)
+
+    def is_pool(node) -> bool:
+        fn = getattr(node, "func", None)
+        return (getattr(fn, "attr", None) or getattr(fn, "id", None)) == (
+            "ThreadPoolExecutor"
+        )
+
+    pools = {
+        item.optional_vars.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.With)
+        for item in node.items
+        if is_pool(item.context_expr) and isinstance(item.optional_vars, ast.Name)
+    } | {
+        t.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign) and is_pool(node.value)
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+    found = []
+    for node in ast.walk(tree):
+        fn = node.func if isinstance(node, ast.Call) else None
+        if not (
+            isinstance(fn, ast.Attribute)
+            and fn.attr in ("map", "submit")
+            and isinstance(fn.value, ast.Name)
+            and fn.value.id in pools
+        ):
+            continue
+        arg = node.args[0] if node.args else None
+        wrapped = isinstance(arg, ast.Call) and (
+            getattr(arg.func, "attr", None) or getattr(arg.func, "id", None)
+        ) == "in_thread"
+        if not wrapped:
+            found.append(node.lineno)
+    return sorted(found)
+
+
+def test_pool_threads_inherit_the_job_group():
+    """pyspark pins a job group to the thread that set it, so a job a
+    pool thread starts belongs to no group unless the callable was
+    wrapped by ``session.in_thread``: every ``ThreadPoolExecutor``
+    ``map``/``submit`` in the package passes one."""
+    probe = (
+        "def f(spark, g):\n"
+        "    with ThreadPoolExecutor(2) as pool:\n"
+        "        pool.map(g, [1])\n"
+        "        pool.submit(in_thread(spark, g))\n"
+        "    other = ThreadPoolExecutor(2)\n"
+        "    other.submit(g)\n"
+    )
+    assert _unwrapped_pool_calls(probe, "probe") == [3, 6]
+    found = []
+    for root, _, names in os.walk(PKG):
+        for name in names:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    found += [
+                        f"{os.path.relpath(path, PKG)}:{n}"
+                        for n in _unwrapped_pool_calls(f.read(), path)
+                    ]
+    assert found == [], f"pool calls losing the job group: {found}"

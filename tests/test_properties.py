@@ -15,36 +15,61 @@ SETTINGS = dict(
 )
 
 
+def _encoded(df, cols):
+    """``{row: (id of each of cols)}`` from ``encode_ids`` over a frame
+    whose first column is a unique ``row``."""
+    from als_hadoop_spark.operators.als import encode_ids
+
+    return {r[0]: tuple(r[1:]) for r in encode_ids(df, cols).select("row", *cols).collect()}
+
+
+def _ranks(values) -> dict:
+    return {v: i for i, v in enumerate(sorted({v for v in values if v is not None}))}
+
+
 @settings(**SETTINGS)
 @given(
     keys=st.lists(st.integers(-(10**6), 10**6), min_size=1, max_size=40),
-    others=st.lists(st.integers(-(10**6), 10**6), min_size=0, max_size=20),
+    others=st.lists(
+        st.one_of(st.none(), st.integers(-(10**6), 10**6)), min_size=0, max_size=20
+    ),
 )
 def test_dense_ids_is_sorted_bijection(spark, keys, others):
     """dense_ids == rank in sorted distinct order, for ANY key multiset
-    (duplicates collapse, negatives sort before positives) — and with
-    several key columns, each column's ids are its own sorted-distinct
-    ranks. The second column shares half of the first's values, and
-    1 or 3 partitions make a partition straddle the column boundary."""
+    (duplicates collapse, negatives sort before positives) — and the
+    ALS pipeline's ``encode_ids`` gives each column (LONG and STRING
+    here) its own sorted-distinct ranks. The STRING column shares half
+    of the first's values as text and carries NULLs: a row with a NULL
+    id is dropped and the other ids stay 0..n-1. 1 or 3 input
+    partitions split the sets across tasks."""
     from als_hadoop_spark.functions.ids import dense_ids
 
     df = spark.createDataFrame([(k,) for k in keys], "k LONG")
     got = {r["k"]: r["dense_id"] for r in dense_ids(df, "k", num_partitions=3).collect()}
-    want = {k: i for i, k in enumerate(sorted(set(keys)))}
-    assert got == want
+    assert got == _ranks(keys)
 
-    col_b = others + keys[: (len(keys) + 1) // 2]
+    col_b = [None if v is None else str(v) for v in others + keys[: (len(keys) + 1) // 2]]
     n = max(len(keys), len(col_b))
-    rows = [(keys[i % len(keys)], col_b[i % len(col_b)]) for i in range(n)]
-    two = spark.createDataFrame(rows, "a LONG, b LONG")
+    rows = [(i, keys[i % len(keys)], col_b[i % len(col_b)]) for i in range(n)]
+    two = spark.createDataFrame(rows, "row INT, a LONG, b STRING")
+    a_ids, b_ids = _ranks(r[1] for r in rows), _ranks(r[2] for r in rows)
+    want = {i: (a_ids[a], b_ids[b]) for i, a, b in rows if b is not None}
     for parts in (1, 3):
-        got = {}
-        for r in dense_ids(two, ["a", "b"], num_partitions=parts).collect():
-            got.setdefault(r["column"], {})[r["key"]] = r["dense_id"]
-        assert got == {
-            c: {k: i for i, k in enumerate(sorted({row[j] for row in rows}))}
-            for j, c in enumerate(("a", "b"))
-        }, parts
+        assert _encoded(two.repartition(parts), ["a", "b"]) == want, parts
+
+
+def test_encode_ids_float_keys_follow_spark_equality(spark):
+    """DOUBLE ids: -0.0 and 0.0 are one id, every NaN is one id sorting
+    after +inf (as ``distinct`` and ``ORDER BY`` treat them), and a
+    NULL id drops its row."""
+    nan, inf = float("nan"), float("inf")
+    values = [0.0, -0.0, nan, inf, -inf, 1.5, nan, None, -2.0, 0.0]
+    df = spark.createDataFrame(list(enumerate(values)), "row INT, x DOUBLE")
+    # sorted distinct: -inf, -2.0, 0.0 (= -0.0), 1.5, inf, NaN
+    assert _encoded(df, ["x"]) == {
+        0: (2,), 1: (2,), 2: (5,), 3: (4,), 4: (0,), 5: (3,), 6: (5,),
+        8: (1,), 9: (2,),
+    }
 
 
 @settings(**SETTINGS)

@@ -487,10 +487,13 @@ def test_acid_format_writer_keeps_nested_stats_beside_a_nan_column(tmp_path):
 
 
 def test_acid_format_reads_past_a_nan_bound(spark, tmp_path):
-    """Spark's parquet writer logs NaN as a float column's max; a NaN
-    bound compares False against everything in Python, and the format
-    reader must keep the file rather than prune it."""
-    from als_hadoop_spark.sources import register_acid_format
+    """A log written before NaN bounds were left out carries a Spark-
+    written [1.0, NaN] bound; a NaN bound compares False against
+    everything in Python, and the format reader must keep the file
+    rather than prune it. A clone re-commits the file without it."""
+    import json
+
+    from als_hadoop_spark.sources import acid_log, register_acid_format
     from als_hadoop_spark.sources.acid import AcidTable
 
     register_acid_format(spark)
@@ -501,12 +504,19 @@ def test_acid_format_reads_past_a_nan_bound(spark, tmp_path):
             [(1, 1.0), (2, float("nan")), (3, 5.0)], "k LONG, x DOUBLE"
         ).coalesce(1)
     )
+    entry = acid_log.read_entry(p, 0)
+    assert "x" not in entry["add"][0]["stats"]
+    entry["add"][0]["stats"]["x"] = [1.0, float("nan")]
+    with open(acid_log.entry_path(p, 0), "w") as f:
+        json.dump(entry, f)
     (stats,) = [a["stats"]["x"] for a in t._state()["live"].values()]
     assert stats[0] == 1.0 and stats[1] != stats[1]  # [1.0, NaN]
     fmt = spark.read.format("acid").load(p)
     assert [r["k"] for r in fmt.filter("x IN (5.0, 7.0)").collect()] == [3]
     snap = t.snapshot().filter("x IN (5.0, 7.0)")
     assert [r["k"] for r in snap.collect()] == [3]
+    clone = t.clone(str(tmp_path / "c"))
+    assert [a["stats"] for a in clone._state()["live"].values()] == [{"k": [1, 3]}]
 
 
 def test_acid_format_reads_schema_evolved_table(spark, tmp_path):
