@@ -1859,18 +1859,25 @@ class AcidTable:
         for df in parts[1:]:
             out = out.unionByName(df, allowMissingColumns=True)
         if dv_refs:
-            dv = self.spark.read.schema(_DV_SIDECAR_SCHEMA).parquet(
-                *[os.path.join(self.path, s) for s in dv_refs]
-            ).select(
-                F.col("file").alias("__acid_base"),
-                F.col("pos").alias("__acid_pos"),
-            )
             # AQE broadcasts the (small) sidecar side on its own; keys
             # are never NULL, so the anti-join is exact
-            out = out.join(dv, ["__acid_base", "__acid_pos"], "left_anti")
+            out = out.join(
+                self._dv_positions(dv_refs), ["__acid_base", "__acid_pos"], "left_anti"
+            )
         if need_meta and not with_pos:
             out = out.drop("__acid_base", "__acid_pos")
         return out
+
+    def _dv_positions(self, sidecars: list[str]) -> DataFrame:
+        """The masked ``(__acid_base, __acid_pos)`` rows that the
+        deletion-vector ``sidecars`` (table-relative) name — the key
+        ``_assemble(..., with_pos=True)`` carries."""
+        return self.spark.read.schema(_DV_SIDECAR_SCHEMA).parquet(
+            *[os.path.join(self.path, s) for s in sidecars]
+        ).select(
+            F.col("file").alias("__acid_base"),
+            F.col("pos").alias("__acid_pos"),
+        )
 
     # --------------------------------------------------------- reads
 
@@ -1960,12 +1967,7 @@ class AcidTable:
         rows = self._assemble(
             self._state(v - 1), files=sorted(dv["files"]), with_pos=True
         )
-        side = self.spark.read.schema(_DV_SIDECAR_SCHEMA).parquet(
-            *[os.path.join(self.path, s) for s in dv["sidecars"]]
-        ).select(
-            F.col("file").alias("__acid_base"),
-            F.col("pos").alias("__acid_pos"),
-        )
+        side = self._dv_positions(dv["sidecars"])
         return rows.join(side, ["__acid_base", "__acid_pos"], "semi").drop(
             "__acid_base", "__acid_pos"
         )

@@ -21,10 +21,13 @@ Scale design:
   JSONs in ``(start, end]`` — KBs per version, never data — and emits
   one ``InputPartition`` PER CHANGE FILE, so a commit that touched 400
   files fans out as 400 executor tasks like any parquet scan.
-- READ (executor): each partition reads its one parquet file with
-  pyarrow, stamps ``_change_type`` / ``_commit_version``, and aligns to
-  the stream schema (missing columns → NULL, additive widening → cast)
-  — Arrow batches end-to-end, no Python rows.
+- READ (executor): each partition reads its one parquet file through
+  the shared ``acid_log.read_live_file`` (as ``format("acid")`` does:
+  deletion-vector positions masked, INT96 typed TIMESTAMP, missing
+  columns NULL, additive widening cast) and stamps ``_change_type`` /
+  ``_commit_version`` — Arrow batches end-to-end, no Python rows. A
+  removed file is read as it stood at the version before: masked by
+  the deletion vectors it carried there.
 - REPLAY: commit JSONs and staged data files are immutable, so
   ``partitions(start, end)`` is deterministic — a failed or restarted
   micro-batch re-reads exactly its bytes (the exactly-once source
@@ -51,24 +54,19 @@ By-value rule: the classes run in Python workers that may not have
 this package on their path, so they are built inside
 :func:`build_acid_cdf_source` (cloudpickle ships local classes by
 value) and reach shared code ONLY through
-:mod:`~als_hadoop_spark.sources.acid_log` — which imports only the
-standard library and pyarrow and is registered for pickling by value.
+:mod:`~als_hadoop_spark.sources.acid_log` — which imports nothing
+from this package and is registered for pickling by value.
 """
 
 from __future__ import annotations
 
 from . import acid_log
 
-#: extra columns every change row carries (Delta CDF naming)
-CDF_COLS = (("_change_type", "string"), ("_commit_version", "bigint"))
-
-
 def build_acid_cdf_source():
     """Return the AcidCdfSource class (module docstring: by-value
     rule)."""
     from dataclasses import dataclass, field
 
-    import pyarrow as pa
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -81,6 +79,7 @@ def build_acid_cdf_source():
         tag: str | None  # insert/delete, or None (file carries the tag)
         version: int
         schema: object = field(default=None)  # pa.Schema of the stream
+        dv: tuple = ()  # absolute deletion-vector sidecar paths
 
     class AcidCdfStreamReader(DataSourceStreamReader):
         def __init__(self, options, schema):
@@ -207,6 +206,10 @@ def build_acid_cdf_source():
                 )
             self._clean_upto = max(self._clean_upto or -1, hi)
             parts: list[ChangeFile] = []
+            # the table at version `at`: replayed for the first commit
+            # that removes files, then folded forward — one replay per
+            # batch, for the masks removed files carried at v-1
+            state = at = None
             for v in range(lo + 1, hi + 1):
                 e = self._entry_cached(v)
                 kind, files, _ = acid_log.change_files(e)
@@ -218,6 +221,12 @@ def build_acid_cdf_source():
                         "file read cannot express. Write MERGE/DELETE/"
                         "UPDATE with cdf=True to stream this table."
                     )
+                if any(tag == "delete" for _, tag in files):
+                    if state is None:
+                        at = v - 1
+                        state = acid_log.replay(self.path, at, self._entry_cached)
+                    for at in range(at + 1, v):  # leaves at == v - 1
+                        acid_log.apply_entry(state, at, self._entry_cached(at))
                 for rel, tag in files:
                     ap = os.path.join(self.path, rel)
                     if not os.path.exists(ap):
@@ -226,40 +235,30 @@ def build_acid_cdf_source():
                             f"{v} was vacuumed away — restart above "
                             "the vacuum horizon"
                         )
-                    parts.append(ChangeFile(ap, tag, v, self._schema))
+                    dv = (
+                        acid_log.live_file(self.path, state, rel)[2]
+                        if tag == "delete"
+                        else ()
+                    )
+                    parts.append(ChangeFile(ap, tag, v, self._schema, dv))
             return parts or [ChangeFile(None, None, -1, self._schema)]
 
         def read(self, partition):
             import pyarrow as pa
-            import pyarrow.parquet as pq
+            import pyarrow.compute as pc
 
-            target: pa.Schema = partition.schema
-            if partition.path is None:  # planned-empty range
-                yield pa.RecordBatch.from_arrays(
-                    [pa.nulls(0, f.type) for f in target],
-                    schema=target,
-                )
-                return
-            tbl = pq.read_table(partition.path)
-            n = tbl.num_rows
+            tbl = acid_log.read_live_file(
+                partition.path, partition.schema, dv=partition.dv
+            )
             cols = []
-            for f in target:
+            for f, col in zip(tbl.schema, tbl.columns):
                 if f.name == "_commit_version":
-                    cols.append(
-                        pa.array([partition.version] * n, pa.int64())
-                    )
-                elif f.name == "_change_type" and (
-                    f.name not in tbl.column_names
-                ):
-                    cols.append(pa.array([partition.tag] * n, pa.string()))
-                elif f.name in tbl.column_names:
-                    # additive widening: cast the file's physical type
-                    # to the stream's (int→bigint, float→double)
-                    cols.append(tbl.column(f.name).cast(f.type))
-                else:
-                    # column added to the table after this file: NULL
-                    cols.append(pa.nulls(n, f.type))
-            yield from pa.Table.from_arrays(cols, schema=target).to_batches()
+                    col = pa.repeat(pa.scalar(partition.version, f.type), len(col))
+                elif f.name == "_change_type":
+                    # a file's own change type (a CDC sidecar's) wins
+                    col = pc.fill_null(col, pa.scalar(partition.tag, f.type))
+                cols.append(col)
+            yield from pa.Table.from_arrays(cols, schema=tbl.schema).to_batches()
 
         def commit(self, end: dict) -> None:
             # log JSONs/data files are immutable; nothing to free —
@@ -276,13 +275,15 @@ def build_acid_cdf_source():
             return "acid_cdf"
 
         def schema(self):
-            # table columns (unified across live files' footers — the
-            # additive-widening read) + the two CDF columns; driver-side
-            # metadata reads only
-            import os
-
-            import pyarrow.parquet as pq
-            from pyspark.sql.pandas.types import from_arrow_schema
+            # the table columns (acid_log.live_schema, as format("acid")
+            # types them) + the two CDF columns; driver-side metadata
+            # reads only
+            from pyspark.sql.types import (
+                LongType,
+                StringType,
+                StructField,
+                StructType,
+            )
 
             path = self.options.get("path")
             if not path:
@@ -295,28 +296,14 @@ def build_acid_cdf_source():
                     ".schema(...) matching snapshot() at the latest "
                     "version"
                 )
-            if not st["live"]:
-                raise ValueError(
-                    "acid_cdf: table has no live data to derive a "
-                    "schema from — start the stream after the first "
-                    "commit or pass .schema(...) explicitly"
-                )
-            footers = [
-                pq.read_schema(os.path.join(path, f))
-                for f in sorted(st["live"])
-            ]
-            unified = pa.unify_schemas(footers, promote_options="permissive")
-            fields = [f for f in unified if f.name != "_change_type"]
-            # prefer_timestamp_ntz: same NTZ round-trip contract as the
-            # acid format reader (naive footer time ≠ UTC instant)
-            struct = from_arrow_schema(
-                pa.schema(fields), prefer_timestamp_ntz=True
+            table = acid_log.live_schema(path, st)
+            return StructType(
+                [f for f in table.fields if f.name != "_change_type"]
+                + [
+                    StructField("_change_type", StringType()),
+                    StructField("_commit_version", LongType()),
+                ]
             )
-            ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in struct.fields
-            )
-            cdf = ", ".join(f"{name} {typ}" for name, typ in CDF_COLS)
-            return f"{ddl}, {cdf}"
 
         def streamReader(self, schema) -> DataSourceStreamReader:
             return AcidCdfStreamReader(self.options, schema)

@@ -42,11 +42,11 @@ Scale design:
   the pushed =, IN, <, <=, >, >= filters — the same decision
   ``AcidTable.snapshot_where`` and MERGE make, triggered by an
   ordinary ``.filter()`` on the DataFrame (partial pushdown: Spark
-  re-checks rows). Schema evolution (rename/drop/widen) applies per
-  file epoch, matching ``AcidTable._assemble``. Column types come from
-  the Spark schema of Spark-written files (INT96 is TIMESTAMP, not a
-  naive timestamp) and from the footer of Arrow-written ones, so
-  columns, order, types and rows match ``AcidTable.snapshot``.
+  re-checks rows). The schema and each file's read are the shared
+  ``acid_log.live_schema`` / ``acid_log.read_live_file`` (deletion
+  vectors masked, per-file-epoch rename/drop/widen, INT96 typed
+  TIMESTAMP), so columns, order, types and rows match
+  ``AcidTable.snapshot``.
 - IDEMPOTENT WRITES: ``.option("txnAppId", a).option("txnVersion", n)``
   stamps the commit (the Delta recipe); a replayed micro-batch whose
   (app, version) is already in the log SKIPS the commit and removes
@@ -62,8 +62,8 @@ By-value rule: the classes run in Python workers that may not have
 this package on their path, so they are built inside
 :func:`build_acid_format_source` (cloudpickle ships local classes by
 value) and reach shared code ONLY through
-:mod:`~als_hadoop_spark.sources.acid_log` — which imports only the
-standard library and pyarrow and is registered for pickling by value.
+:mod:`~als_hadoop_spark.sources.acid_log` — which imports nothing
+from this package and is registered for pickling by value.
 """
 
 from __future__ import annotations
@@ -79,7 +79,6 @@ def build_acid_format_source(with_pushdown: bool = True):
     while the flag is off — the sources/generator.py:47 precedent)."""
     from dataclasses import dataclass, field
 
-    import pyarrow as pa
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceArrowWriter,
@@ -103,36 +102,12 @@ def build_acid_format_source(with_pushdown: bool = True):
         GreaterThanOrEqual: ">=",
     }
 
-    def _file_schema(path: str, action: dict) -> "pa.Schema":
-        """Arrow schema of one live file in the types its writer meant.
-        Spark writes TIMESTAMP as INT96, which the footer reports as a
-        NAIVE ``timestamp[ns]``; a Spark-written file's own Spark schema
-        — logged on its add-action, else kept in the footer's
-        ``org.apache.spark.sql.parquet.row.metadata`` — types it
-        TIMESTAMP. Arrow-written files (this module's writer) carry no
-        Spark schema and their footer types are exact."""
-        import json
-
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        spark_json = action.get("schema")
-        if spark_json is None:
-            footer = pq.read_schema(path)
-            spark_json = (footer.metadata or {}).get(
-                b"org.apache.spark.sql.parquet.row.metadata"
-            )
-            if spark_json is None:
-                return footer
-        return to_arrow_schema(StructType.fromJson(json.loads(spark_json)))
-
     # ------------------------------------------------------- reader
 
     @dataclass
     class LiveFile(InputPartition):
-        path: str  # absolute parquet path
-        ops: tuple  # schema ops applicable to this file, oldest first
+        path: str | None  # absolute parquet path; None = planned-empty
+        ops: tuple  # schema ops newer than this file, oldest first
         schema: object = field(default=None)  # target pa.Schema
         dv: tuple = ()  # absolute deletion-vector sidecar paths
 
@@ -164,94 +139,24 @@ def build_acid_format_source(with_pushdown: bool = True):
             import os
 
             st = acid_log.replay(self.path, self.version)
-            ops = st["schema_ops"]
             parts = []
             for fname in acid_log.prune_files(st, self._conjuncts):
-                action = st["live"][fname]
-                ap = os.path.join(self.path, fname)
+                ap, ops, dv = acid_log.live_file(self.path, st, fname)
                 if not os.path.exists(ap):
                     raise ValueError(
                         f"acid format: live file {fname} was vacuumed "
                         "away — the table is damaged below the vacuum "
                         "horizon"
                     )
-                applicable = tuple(
-                    {k: op[k] for k in op if k != "v"}
-                    for op in ops
-                    if op["v"] > action["added"]
-                )
-                dv_abs = tuple(
-                    os.path.join(self.path, s)  # abs refs pass through
-                    for s in action.get("dv", ())
-                )
-                parts.append(
-                    LiveFile(ap, applicable, self._arrow_schema, dv_abs)
-                )
+                parts.append(LiveFile(ap, ops, self._arrow_schema, dv))
             # Spark requires >= 1 partition; an empty table (or a fully
             # pruned scan) yields a zero-row partition
-            return parts or [LiveFile("", (), self._arrow_schema)]
+            return parts or [LiveFile(None, (), self._arrow_schema)]
 
         def read(self, partition):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            target: pa.Schema = partition.schema
-            if not partition.path:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.nulls(0, f.type) for f in target], schema=target
-                )
-                return
-            # INT96 (Spark's TIMESTAMP) reads as naive micros — the
-            # nanosecond default overflows outside 1677–2262 — and the
-            # cast to the target type below makes it UTC-adjusted
-            tbl = pq.read_table(
-                partition.path, coerce_int96_timestamp_unit="us"
-            )
-            if partition.dv:
-                # merge-on-read: drop the positions this file's
-                # deletion-vector sidecars name. Positions are row
-                # indices in FILE order — exactly pyarrow's read order
-                # — so a boolean mask applies them without any join.
-                # Masking happens BEFORE schema ops: positions are a
-                # physical-file property.
-                import os as _os
-
-                import numpy as np
-                import pyarrow.compute as pc
-
-                base = _os.path.basename(partition.path)
-                gone: list[int] = []
-                for s in partition.dv:
-                    side = pq.read_table(s, columns=["file", "pos"])
-                    sel = pc.equal(side.column("file"), base)
-                    gone.extend(
-                        side.filter(sel).column("pos").to_pylist()
-                    )
-                if gone:
-                    mask = np.ones(tbl.num_rows, dtype=bool)
-                    mask[np.asarray(gone, dtype=np.int64)] = False
-                    tbl = tbl.filter(pa.array(mask))
-            # apply this file's schema-op epoch (rename/drop/widen),
-            # matching AcidTable._assemble semantics
-            for op in partition.ops:
-                if op.get("op") == "rename" and op["old"] in tbl.column_names:
-                    tbl = tbl.rename_columns(
-                        [
-                            op["new"] if c == op["old"] else c
-                            for c in tbl.column_names
-                        ]
-                    )
-                elif op.get("op") == "drop" and op["col"] in tbl.column_names:
-                    tbl = tbl.drop_columns([op["col"]])
-                # widen: the cast-to-target below covers it
-            n = tbl.num_rows
-            cols = []
-            for f in target:
-                if f.name in tbl.column_names:
-                    cols.append(tbl.column(f.name).cast(f.type))
-                else:
-                    cols.append(pa.nulls(n, f.type))
-            yield from pa.Table.from_arrays(cols, schema=target).to_batches()
+            yield from acid_log.read_live_file(
+                partition.path, partition.schema, partition.ops, partition.dv
+            ).to_batches()
 
     if with_pushdown:
         AcidReader.pushFilters = AcidReader._push_filters
@@ -531,68 +436,12 @@ def build_acid_format_source(with_pushdown: bool = True):
             return "acid"
 
         def schema(self):
-            import os
-
-            from pyspark.sql.pandas.types import from_arrow_schema
-
             path = self.options.get("path")
             if not path:
                 raise ValueError("acid format: option 'path' is required")
             v = self.options.get("version")
             st = acid_log.replay(path, int(v) if v is not None else None)
-            if not st["live"]:
-                raise ValueError(
-                    "acid format: table has no live data to derive a "
-                    "schema from — pass .schema(...) explicitly"
-                )
-            ops = st["schema_ops"]
-            footers = []
-            for fname in sorted(st["live"]):
-                action = st["live"][fname]
-                sch = _file_schema(os.path.join(path, fname), action)
-                added = action["added"]
-                fields = []
-                widen_types = {
-                    "int": pa.int32(),
-                    "bigint": pa.int64(),
-                    "float": pa.float32(),
-                    "double": pa.float64(),
-                }
-                for f in sch:
-                    name = f.name
-                    typ = f.type
-                    if pa.types.is_timestamp(typ) and typ.tz is not None:
-                        # an instant: the writer's session zone ("UTC",
-                        # "Etc/UTC", ...) is display only, and unify
-                        # refuses to merge two zone names
-                        typ = pa.timestamp(typ.unit, "UTC")
-                    dropped = False
-                    for op in ops:
-                        if op["v"] <= added:
-                            continue
-                        if op.get("op") == "rename" and op["old"] == name:
-                            name = op["new"]
-                        elif op.get("op") == "drop" and op["col"] == name:
-                            dropped = True
-                            break
-                        elif (
-                            op.get("op") == "widen"
-                            and op["col"] == name
-                            and op.get("type") in widen_types
-                        ):
-                            typ = widen_types[op["type"]]
-                    if not dropped:
-                        fields.append(pa.field(name, typ))
-                footers.append(pa.schema(fields))
-            unified = pa.unify_schemas(footers, promote_options="permissive")
-            # prefer_timestamp_ntz: a NAIVE timestamp must round-trip as
-            # TIMESTAMP_NTZ — the default maps it to tz-aware
-            # TimestampType, which silently retypes an NTZ table on
-            # read AND poisons later copy-on-write rewrites with mixed
-            # isAdjustedToUTC flags (mergeSchema then refuses the
-            # table). Spark's INT96 TIMESTAMPs are not naive here:
-            # _file_schema types them from the Spark schema.
-            return from_arrow_schema(unified, prefer_timestamp_ntz=True)
+            return acid_log.live_schema(path, st)
 
         def reader(self, schema) -> DataSourceReader:
             return AcidReader(self.options, schema)

@@ -17,10 +17,17 @@ add-action's ``stats`` (:func:`footer_stats`, :func:`table_stats`) and
 blooms, and :func:`prune_files`, the only code that relies on what
 they promise.
 
-This module imports only the standard library and pyarrow, and the
+And the one Arrow read of a live file that ``format("acid")`` and the
+``acid_cdf`` stream share: :func:`live_schema` (the Spark schema of a
+state's live files) and :func:`read_live_file` (one file, its
+deletion-vector positions masked, aligned to that schema).
+
+This module imports only the standard library at module level and
+pyarrow inside its functions; :func:`live_schema` also imports
+pyspark's type converters, and :func:`read_live_file` numpy. The
 source factories register it for cloudpickle's pickling BY VALUE: the
 Python DataSource classes reach it from Python workers that do not
-have this package on their path.
+have this package on their path (they do have pyspark).
 """
 
 import json
@@ -316,6 +323,143 @@ def part_segment(col: str, value) -> str:
         else quote(str(value), safe="")
     )
     return f"{col}={enc}"
+
+
+# ---------------------------------------------------- live-file read
+
+#: Arrow types of the ``widen`` schema op's targets
+_WIDEN_TYPES = {"int": "int32", "bigint": "int64", "float": "float32", "double": "float64"}
+
+
+def _epoch_fields(schema, ops) -> list:
+    """``(stored name, field)`` for each column of a file's Arrow
+    ``schema`` that the schema ops newer than the file (``ops``, oldest
+    first) do not drop, the field under its renamed name and widened
+    type."""
+    import pyarrow as pa
+
+    out = []
+    for f in schema:
+        name, typ = f.name, f.type
+        for op in ops:
+            kind = op.get("op")
+            if kind == "rename" and op["old"] == name:
+                name = op["new"]
+            elif kind == "drop" and op["col"] == name:
+                break
+            elif kind == "widen" and op["col"] == name and op.get("type") in _WIDEN_TYPES:
+                typ = getattr(pa, _WIDEN_TYPES[op["type"]])()
+        else:
+            out.append((f.name, pa.field(name, typ)))
+    return out
+
+
+def _file_schema(path: str, action: dict):
+    """Arrow schema of one live file in the types its writer meant.
+    Spark writes TIMESTAMP as INT96, which the footer reports as a
+    NAIVE ``timestamp[ns]``; a Spark-written file's own Spark schema —
+    logged on its add-action, else kept in the footer's
+    ``org.apache.spark.sql.parquet.row.metadata`` — types it TIMESTAMP.
+    Arrow-written files (the ``format("acid")`` writer) carry no Spark
+    schema and their footer types are exact."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    spark_json = action.get("schema")
+    if spark_json is None:
+        footer = pq.read_schema(path)
+        spark_json = (footer.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        if spark_json is None:
+            return footer
+    return to_arrow_schema(StructType.fromJson(json.loads(spark_json)))
+
+
+def live_file(path: str, state: dict, name: str) -> tuple[str, tuple, tuple]:
+    """``(absolute path, schema ops newer than the file, absolute
+    deletion-vector sidecar paths)`` of the live file ``name`` of a
+    replayed ``state`` of the table at ``path``: what
+    :func:`read_live_file` needs to read it as it stands in ``state``."""
+    action = state["live"][name]
+    ops = tuple(op for op in state["schema_ops"] if op["v"] > action["added"])
+    dv = tuple(os.path.join(path, s) for s in action.get("dv", ()))
+    return os.path.join(path, name), ops, dv
+
+
+def live_schema(path: str, state: dict):
+    """Spark ``StructType`` of the live files of a replayed ``state`` of
+    the table at ``path``, from footers only: each file typed as its
+    writer meant (:func:`_file_schema`) and carried through the schema
+    ops newer than it, the files unified permissively (additive
+    columns, widened types) — columns, order and types as
+    ``AcidTable.snapshot`` has them. A tz-aware timestamp is an instant
+    whose zone name is display only (and unify refuses two names), so
+    it reads as UTC; a NAIVE one stays TIMESTAMP_NTZ, or an NTZ table
+    would be retyped on read and its later copy-on-write rewrites mix
+    isAdjustedToUTC flags, which mergeSchema refuses."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if not state["live"]:
+        raise ValueError(
+            f"{path}: table has no live data to derive a schema from — "
+            "pass .schema(...) explicitly"
+        )
+    schemas = []
+    for name, action in sorted(state["live"].items()):
+        ap, ops, _ = live_file(path, state, name)
+        fields = []
+        for _, f in _epoch_fields(_file_schema(ap, action), ops):
+            if pa.types.is_timestamp(f.type) and f.type.tz is not None:
+                f = pa.field(f.name, pa.timestamp(f.type.unit, "UTC"))
+            fields.append(f)
+        schemas.append(pa.schema(fields))
+    unified = pa.unify_schemas(schemas, promote_options="permissive")
+    return from_arrow_schema(unified, prefer_timestamp_ntz=True)
+
+
+def read_live_file(path: str | None, target, ops=(), dv=()):
+    """One data file as an Arrow table of schema ``target`` (empty when
+    ``path`` is None). In order:
+
+    1. the deletion-vector positions of the sidecars ``dv`` for this
+       file (by basename; uuid names never collide) are dropped —
+       positions are row indices in FILE order, pyarrow's read order,
+       so a numpy mask applies them before any column changes;
+    2. ``ops``, the schema ops newer than the file, rename and drop its
+       columns;
+    3. each ``target`` column is cast from the file's (additive
+       widening), or NULL when the file predates it.
+
+    INT96 (Spark's TIMESTAMP) reads as naive micros — the nanosecond
+    default overflows outside 1677–2262 — and the cast to the target's
+    UTC timestamp keeps its instant."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if path is None:
+        return target.empty_table()
+    tbl = pq.read_table(path, coerce_int96_timestamp_unit="us")
+    if dv:
+        base = os.path.basename(path)
+        keep = np.ones(tbl.num_rows, dtype=bool)
+        for s in dv:
+            side = pq.read_table(s, columns=["file", "pos"])
+            keep[side.filter(pc.equal(side["file"], base))["pos"].to_numpy()] = False
+        tbl = tbl.filter(keep)
+    stored = {f.name: old for old, f in _epoch_fields(tbl.schema, ops)}
+    n = tbl.num_rows
+    return pa.Table.from_arrays(
+        [
+            tbl[stored[f.name]].cast(f.type) if f.name in stored else pa.nulls(n, f.type)
+            for f in target
+        ],
+        schema=target,
+    )
 
 
 # ------------------------------------------------------------- blooms

@@ -195,11 +195,26 @@ def test_change_feed_is_classified_only_in_acid_log():
 _ROW_STEP = "_write_rows"
 
 
-def _calls_by_method(source: str, path: str) -> dict[str, list[str]]:
-    """``{method: [called name, ...]}`` for every function defined in a
-    class body of ``source``; a call inside a nested function counts
-    for the method that encloses it. Module-level functions are keyed
-    ``<module>``."""
+def _call_name(node) -> str | None:
+    """The called name of an ``ast.Call`` (``f()``, ``x.f()``), else None."""
+    if isinstance(node, ast.Call):
+        return getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+    return None
+
+
+def _loaded_name(node) -> str | None:
+    """The name an ``ast.Name`` node reads, else None."""
+    if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+        return node.id
+    return None
+
+
+def _by_method(source: str, path: str, pick=_call_name) -> dict[str, list[str]]:
+    """``{method: [picked name, ...]}`` for every function defined in a
+    class body of ``source``, ``pick(node)`` naming what a node counts
+    as (default: the called name); a node inside a nested function
+    counts for the method that encloses it. Module-level functions are
+    keyed ``<module>``."""
     calls: dict[str, list[str]] = {}
 
     def visit(node, owner):
@@ -210,11 +225,9 @@ def _calls_by_method(source: str, path: str) -> dict[str, list[str]]:
                 calls.setdefault(child.name, [])
                 visit(child, child.name)
                 continue
-            if isinstance(child, ast.Call):
-                fn = child.func
-                name = getattr(fn, "attr", None) or getattr(fn, "id", None)
-                if name:
-                    calls.setdefault(owner, []).append(name)
+            name = pick(child)
+            if name:
+                calls.setdefault(owner, []).append(name)
             visit(child, owner)
 
     visit(ast.parse(source, path), "<module>")
@@ -235,13 +248,13 @@ def test_row_level_writes_commit_in_one_step():
         "            self._stage_dv(1)\n"
         "        return self._try_commit(1, {})\n"
     )
-    assert _calls_by_method(probe, "probe")["merge"] == [
+    assert _by_method(probe, "probe")["merge"] == [
         "_stage_dv", "_try_commit"
     ]
     path = os.path.join(PKG, "sources", "acid.py")
     with open(path) as f:
         source = f.read()
-    calls = _calls_by_method(source, path)
+    calls = _by_method(source, path)
     assert _ROW_STEP in calls and "_merge_dv" not in calls
     found = [
         f"{method} calls {name}"
@@ -348,3 +361,49 @@ def test_pool_threads_inherit_the_job_group():
                         for n in _unwrapped_pool_calls(f.read(), path)
                     ]
     assert found == [], f"pool calls losing the job group: {found}"
+
+
+#: the sources whose live-file reads go through ``acid_log``
+_ARROW_READERS = ("acid_format.py", "acid_cdf.py")
+
+
+def test_live_files_are_read_only_in_acid_log():
+    """``format("acid")`` and the ``acid_cdf`` stream read a live file
+    and derive its schema through ``acid_log.read_live_file`` /
+    ``acid_log.live_schema`` alone: neither calls pyarrow's
+    ``read_table`` or ``read_schema`` itself, so deletion-vector
+    masking, INT96 typing and schema-op epochs cannot drift between
+    them. On the Spark side, one ``AcidTable`` method reads the
+    deletion-vector sidecars (``_DV_SIDECAR_SCHEMA``)."""
+    probe = (
+        "import pyarrow.parquet as pq\n"
+        "class T:\n"
+        "    def a(self):\n"
+        "        return pq.read_table(_DV_SIDECAR_SCHEMA)\n"
+        "    def b(self):\n"
+        "        return read_schema(_DV_SIDECAR_SCHEMA)\n"
+    )
+    assert _by_method(probe, "probe")["a"] == ["read_table"]
+    readers = _by_method(probe, "probe", _loaded_name)
+    assert [m for m, ns in readers.items() if "_DV_SIDECAR_SCHEMA" in ns] == [
+        "a", "b"
+    ]
+    found = []
+    for name in _ARROW_READERS:
+        path = os.path.join(PKG, "sources", name)
+        with open(path) as f:
+            calls = _by_method(f.read(), path)
+        found += [
+            f"{name}: {owner} calls {c}"
+            for owner, names in calls.items()
+            for c in names
+            if c in ("read_table", "read_schema")
+        ]
+    assert found == [], f"Arrow file reads outside acid_log: {found}"
+    path = os.path.join(PKG, "sources", "acid.py")
+    with open(path) as f:
+        readers = _by_method(f.read(), path, _loaded_name)
+    sidecar = [m for m, ns in readers.items() if "_DV_SIDECAR_SCHEMA" in ns]
+    assert len(sidecar) == 1 and sidecar != ["<module>"], (
+        f"deletion-vector sidecars read by {sidecar}"
+    )

@@ -1005,9 +1005,10 @@ def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path, dv):
     ``spark.readStream.format("acid_cdf")`` with AvailableNow must
     produce EXACTLY the rows of the batch ``table_changes(0)`` — across
     append, CDC-sidecar MERGE (update pre/post images), CDC-sidecar
-    DELETE, CDC-sidecar UPDATE, and a second append; with deletion
-    vectors on, the MERGE, DELETE and UPDATE mask rows instead of
-    rewriting files and commit no ``remove`` action."""
+    DELETE, CDC-sidecar UPDATE, a second append and an overwrite; with
+    deletion vectors on, the MERGE, DELETE and UPDATE mask rows instead
+    of rewriting files and commit no ``remove`` action, so the overwrite
+    removes masked files and must emit only their unmasked rows."""
     from als_hadoop_spark.sources import register_acid_cdf
 
     src = _mini_acid(spark, str(tmp_path / "src"))
@@ -1023,6 +1024,10 @@ def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path, dv):
     src.update({"x": "x + 1"}, "k = 3", cdf=True)
     src.append(
         spark.createDataFrame([(5, "g2", 20)], "k LONG, grp STRING, x LONG")
+        .coalesce(1)
+    )
+    src.overwrite(
+        spark.createDataFrame([(6, "g4", 1)], "k LONG, grp STRING, x LONG")
         .coalesce(1)
     )
     cols = ["k", "grp", "x", "_change_type", "_commit_version"]
@@ -1047,7 +1052,9 @@ def test_acid_cdf_stream_equals_batch_table_changes(spark, tmp_path, dv):
     finally:
         q.stop()
     got = sorted(map(tuple, spark.table(name).select(*cols).collect()))
-    assert got == want and len(got) == 10
+    # 10 changes before the overwrite; it deletes the 4 live rows and
+    # inserts 1
+    assert got == want and len(got) == 15
 
 
 def test_acid_cdf_resumes_from_spark_checkpoint(spark, tmp_path):
@@ -1148,6 +1155,47 @@ def test_acid_cdf_refuses_commits_without_sidecar_at_planning(
     for v in (1, 3, 4, 5):
         with pytest.raises(ValueError, match="cdf=True"):
             reader.partitions({"version": v - 1}, {"version": v})
+
+
+def test_acid_cdf_reads_spark_timestamps_as_table_changes(spark, tmp_path):
+    """A Spark-written TIMESTAMP column (INT96 in the file) streams as
+    ``table_changes`` reads it: typed ``timestamp``, not
+    ``timestamp_ntz``, and a year-2500 value (past the nanosecond range)
+    read exactly. Driven at the reader level, the surface Structured
+    Streaming calls."""
+    import pyarrow as pa
+
+    from als_hadoop_spark.sources import register_acid_cdf
+    from als_hadoop_spark.sources.acid import AcidTable
+    from als_hadoop_spark.sources.acid_cdf import build_acid_cdf_source
+
+    t = AcidTable(spark, str(tmp_path / "src"))
+    t.append(
+        spark.sql(
+            "SELECT * FROM VALUES (1L, TIMESTAMP'2020-01-01 00:00:00'), "
+            "(2L, TIMESTAMP'2500-01-01 00:00:00') AS v(k, ts)"
+        ).coalesce(1)
+    )
+    batch = t.table_changes(0)
+    register_acid_cdf(spark)
+    schema = spark.readStream.format("acid_cdf").option("path", t.path).load().schema
+    assert schema["ts"].dataType == batch.schema["ts"].dataType
+    reader = build_acid_cdf_source()(options={"path": t.path}).streamReader(schema)
+    got = pa.concat_tables(
+        pa.Table.from_batches(list(reader.read(p)), schema=p.schema)
+        for p in reader.partitions({"version": -1}, {"version": 0})
+    )
+    micros = got["ts"].cast(pa.int64()).to_pylist()
+    rows = sorted(
+        zip(got["k"].to_pylist(), micros, got["_change_type"].to_pylist(),
+            got["_commit_version"].to_pylist())
+    )
+    want = sorted(
+        map(tuple, batch.selectExpr(
+            "k", "unix_micros(ts)", "_change_type", "_commit_version"
+        ).collect())
+    )
+    assert rows == want and len(rows) == 2
 
 
 def test_maintainers_agree_on_a_deletion_vector_source(
